@@ -22,6 +22,7 @@ import time
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from forgettable_spark import operators as ops
 from forgettable_spark.functions.decay import GOFORGET_DEFAULT_RATE
@@ -49,7 +50,11 @@ class ForgetTable:
     ``events`` is any DataFrame with the ``forget_events`` shape
     (distribution, bin, n, ts) — a parquet read, a Delta table, or the
     output of a previous :meth:`compact`. The instance is cheap: it holds
-    plans, not data.
+    plans, not data — except a table returned by :meth:`materialize`,
+    which holds a persisted snapshot and whose ``events`` is a projection
+    of it. That projection is snapshot-equivalent, not the raw log:
+    every read, :meth:`incr` and :meth:`compact` answer as over the raw
+    log, but an as-of or replay read over it does not.
     """
 
     def __init__(
@@ -71,6 +76,7 @@ class ForgetTable:
         self.law = law
         self.decay_mode = decay_mode
         self.seed = seed
+        self._snap: DataFrame | None = None
 
     # -- write path (W1) ---------------------------------------------------
 
@@ -210,10 +216,35 @@ class ForgetTable:
         )
         return self._with_events(base)
 
+    def materialize(self) -> "ForgetTable":
+        """Compute the snapshot once, persist it, and return a table that
+        reads from it.
+
+        The persisted snapshot keeps its ``t`` window's hash partitioning
+        by distribution, so a point read over it needs no exchange and no
+        aggregate. ``persist`` keeps lineage: blocks lost from storage are
+        recomputed from the log. The caller owns the storage and frees it
+        with ``unpersist()`` on the returned table's snapshot.
+
+        The returned table's ``events`` is ``(distribution, bin, n :=
+        count, ts := t)``. The snapshot sums ``n`` and takes the max of
+        ``ts`` per distribution, so it maps this projection, alone or with
+        later appends, to the same rows as the raw log.
+        """
+        snap = self._snapshot().persist()
+        snap.count()
+        table = self._with_events(
+            snap.select("distribution", "bin", F.col("count").alias("n"), F.col("t").alias("ts"))
+        )
+        table._snap = snap
+        return table
+
     # -- internals ----------------------------------------------------------
 
     def _snapshot(self) -> DataFrame:
-        return ops.snapshot(self.events)
+        if self._snap is None:
+            self._snap = ops.snapshot(self.events)
+        return self._snap
 
     def _with_events(self, events: DataFrame) -> "ForgetTable":
         return ForgetTable(

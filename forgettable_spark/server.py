@@ -40,20 +40,24 @@ Documented differences (engine semantics, not route semantics):
   negative ZINCRBY unchecked.
 
 Scale posture: this edge serves *point* reads — every route touches one
-distribution, so the underlying plans are partition-pruned scans
-collecting a handful of rows. The server is a parity/demo surface;
-high-QPS serving would front a compacted, bucketed snapshot with the
-same operators.
+distribution. The server computes the table's snapshot once at start
+(:meth:`ForgetTable.materialize`) and persists it hash-partitioned by
+distribution, so a read is a filtered scan of that in-memory snapshot
+plus the per-distribution window, with no exchange and no aggregate —
+the same read operators as the batch path. Appends union onto the
+persisted snapshot; every ``checkpoint_every`` appends the snapshot is
+recomputed and the one it replaces is freed.
 """
 
 from __future__ import annotations
 
 import json
 import threading
+from contextlib import contextmanager
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
-from forgettable_spark.api import ForgetTable
+from forgettable_spark.api import ForgetTable, _to_us
 
 _ORDERED_ROUTES = ("/incr", "/dist", "/get", "/nmostprobable", "/dbsize", "/ping", "/exit")
 
@@ -61,9 +65,13 @@ _ORDERED_ROUTES = ("/incr", "/dist", "/get", "/nmostprobable", "/dbsize", "/ping
 class ForgetHTTPServer:
     """Serve a :class:`ForgetTable` over the reference's HTTP routes.
 
-    ``incr`` swaps the underlying (immutable) table under a lock; every
-    64 appends the event plan is localCheckpoint-ed so a long-lived
-    server does not accrete an unbounded union lineage.
+    The table is materialized at construction. ``incr`` swaps the
+    underlying (immutable) table under a lock; every ``checkpoint_every``
+    appends it is materialized again and the state it replaces is
+    unpersisted once no read holds it (:meth:`reading`), so a long-lived
+    server neither accretes an unbounded union lineage nor keeps more
+    than one persisted state. :meth:`stop` and ``/exit`` free the served
+    state.
 
     ``stop_spark_on_exit=True`` makes ``/exit`` also stop the
     SparkSession (the reference's ``/exit`` ends the whole process —
@@ -78,7 +86,10 @@ class ForgetHTTPServer:
         stop_spark_on_exit: bool = False,
         checkpoint_every: int = 64,
     ):
-        self._table = table
+        self._table = table.materialize()
+        self._state = self._table._snapshot()
+        self._retired: list = []
+        self._readers = 0
         self._lock = threading.Lock()
         self._appends = 0
         self._checkpoint_every = checkpoint_every
@@ -104,13 +115,21 @@ class ForgetHTTPServer:
         if self._thread is not None:
             self._thread.join(timeout=10)
             self._thread = None
+        with self._lock:
+            if self._state is not None:
+                self._retired.append(self._state)
+                self._state = None
+            self._release_retired()
 
     def _exit(self) -> None:
-        if self._stop_spark_on_exit:
-            self._table.shutdown()
+        def stop_all() -> None:
+            self.stop()
+            if self._stop_spark_on_exit:
+                self._table.shutdown()
+
         # shutdown() blocks until serve_forever returns; detach so the
         # /exit handler can finish its response first.
-        threading.Thread(target=self.stop, daemon=True).start()
+        threading.Thread(target=stop_all, daemon=True).start()
 
     # -- table access ------------------------------------------------------
 
@@ -118,13 +137,39 @@ class ForgetHTTPServer:
         with self._lock:
             return self._table
 
+    @contextmanager
+    def reading(self):
+        """The served table; the persisted state it reads stays persisted
+        until the block exits. Unpersisting it under a running read would
+        make Spark rebuild the cache buffers outside the cache manager,
+        where nothing frees them."""
+        with self._lock:
+            self._readers += 1
+            table = self._table
+        try:
+            yield table
+        finally:
+            with self._lock:
+                self._readers -= 1
+                self._release_retired()
+
     def apply_incr(self, distribution: str, fields: list[str], n: int) -> None:
         with self._lock:
             new = self._table.incr(distribution, fields, n=n)
             self._appends += 1
             if self._checkpoint_every and self._appends % self._checkpoint_every == 0:
-                new = new._with_events(new.events.localCheckpoint(eager=False))
+                new = new.materialize()
+                self._retired.append(self._state)
+                self._state = new._snapshot()
+                self._release_retired()
             self._table = new
+
+    def _release_retired(self) -> None:
+        """Unpersist replaced states once no read holds them (lock held)."""
+        if not self._readers:
+            for state in self._retired:
+                state.unpersist()
+            self._retired.clear()
 
 
 def _payload(rows, distribution: str, rate: float, prune: bool, now_sec: int) -> dict:
@@ -202,12 +247,19 @@ def _make_handler(server: ForgetHTTPServer):
                 self._error("CANNOT_PARSE_RATE")
                 return None
 
-        def _now(self, q) -> int | None:
-            """Engine extension: explicit evaluation instant (unix sec)."""
+        def _now_us(self, q) -> int:
+            """Engine extension: explicit evaluation instant (unix sec);
+            omitted -> wall clock."""
             raw = q.get("now", [""])[0]
-            if raw == "":
-                return None  # wall clock (api._to_us(None))
-            return int(float(raw) * 1_000_000)
+            return _to_us(None if raw == "" else int(float(raw) * 1_000_000))
+
+        def _reply_read(self, q, d: str, rate: float, read) -> None:
+            """Run ``read(table, now_us)`` on the served table and reply
+            with the distribution envelope, ``T`` at the same instant."""
+            now_us = self._now_us(q)
+            with server.reading() as table:
+                rows = read(table, now_us).collect()
+            self._envelope(200, _payload(rows, d, rate, table.prune, now_us // 1_000_000))
 
         # -- routes --------------------------------------------------------
 
@@ -264,13 +316,7 @@ def _make_handler(server: ForgetHTTPServer):
             rate = self._rate(q)
             if rate is None:
                 return
-            now_us = self._now(q)
-            table = server.table()
-            rows = table.dist(d, rate=rate, now=now_us).collect()
-            from forgettable_spark.api import _to_us
-
-            now_sec = _to_us(now_us) // 1_000_000
-            self._envelope(200, _payload(rows, d, rate, table.prune, now_sec))
+            self._reply_read(q, d, rate, lambda t, now: t.dist(d, rate=rate, now=now))
 
         def _route_get(self, q) -> None:
             d = self._distribution(q)
@@ -282,13 +328,7 @@ def _make_handler(server: ForgetHTTPServer):
             rate = self._rate(q)
             if rate is None:
                 return
-            now_us = self._now(q)
-            table = server.table()
-            rows = table.get(d, fields, rate=rate, now=now_us).collect()
-            from forgettable_spark.api import _to_us
-
-            now_sec = _to_us(now_us) // 1_000_000
-            self._envelope(200, _payload(rows, d, rate, table.prune, now_sec))
+            self._reply_read(q, d, rate, lambda t, now: t.get(d, fields, rate=rate, now=now))
 
         def _route_nmostprobable(self, q) -> None:
             d = self._distribution(q)
@@ -306,16 +346,14 @@ def _make_handler(server: ForgetHTTPServer):
                 except ValueError:
                     self._error("INVALID_ARG_N")
                     return
-            now_us = self._now(q)
-            table = server.table()
-            rows = table.n_most_probable(d, n=n, rate=rate, now=now_us).collect()
-            from forgettable_spark.api import _to_us
-
-            now_sec = _to_us(now_us) // 1_000_000
-            self._envelope(200, _payload(rows, d, rate, table.prune, now_sec))
+            self._reply_read(
+                q, d, rate, lambda t, now: t.n_most_probable(d, n=n, rate=rate, now=now)
+            )
 
         def _route_dbsize(self, q) -> None:
-            self._envelope(200, server.table().db_size())
+            with server.reading() as table:
+                size = table.db_size()
+            self._envelope(200, size)
 
         def _route_ping(self, q) -> None:
             self._text(200, "OK")

@@ -315,3 +315,50 @@ def test_two_level_audit_sees_both_plan_halves(spark):
     assert not s["local"], "audit still sees a post-checkpoint local plan"
     assert "Scan parquet" in plan
     assert plan.count("aggregate(") > 0
+
+
+def _nodes_outside_cache(plan) -> list[str]:
+    """Class names of an executed plan's operators, not descending into a
+    cached relation (its own build plan is not part of the read)."""
+    names, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        name = node.getClass().getSimpleName()
+        names.append(name)
+        if name in ("InMemoryTableScanExec", "TableCacheQueryStageExec"):
+            continue
+        if name == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+            continue
+        if name.endswith("QueryStageExec"):
+            stack.append(node.plan())
+            continue
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return names
+
+
+def test_materialized_point_read_is_one_job_without_exchange(spark):
+    """A served point read scans the persisted snapshot, which is already
+    hash-partitioned by distribution: one job, and no exchange or
+    aggregate outside the cached relation."""
+    from forgettable_spark.api import ForgetTable
+    from forgettable_spark.sources import load_forget_events
+
+    table = ForgetTable(spark, load_forget_events(spark, SF_SMOKE), rate=0.0).materialize()
+    try:
+        d = table.events.first()["distribution"]
+        df = table.dist(d)
+        sc = spark.sparkContext
+        group = "materialized-point-read"
+        sc.setJobGroup(group, group)
+        try:
+            assert df.collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+        names = _nodes_outside_cache(df._jdf.queryExecution().executedPlan())
+        assert "InMemoryTableScanExec" in names or "TableCacheQueryStageExec" in names
+        assert not [n for n in names if "Exchange" in n or "Aggregate" in n], names
+    finally:
+        table._snapshot().unpersist()

@@ -544,9 +544,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """The driver registry — curated to exactly 50 entries. The driver's
     correctness harness checks at most 50 queries per round (observed in
     r2: the 51st+ registration silently got no correctness row), so every
-    entry here earns a per-round green row. Redundant variants live in
-    :func:`secondary_queries` instead and keep full coverage in the local
-    test gate."""
+    entry here earns a per-round green row. Rotation history lives in
+    ``ROTATIONS.json`` and ``QUERIES.md``."""
     q = {
         "n_most_probable": q_n_most_probable,
         "get_dist_all": q_get_dist_all,
@@ -558,29 +557,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "sessionize": q_sessionize,
         "get_dist_poisson": q_get_dist_poisson,
         "asof_attribution": q_asof_attribution,
-        # r10 rotation (VERDICT r9 #1): decay_proportional (green r1-r9,
-        # the proportional law stays exercised by get_dist_poisson's
-        # expected mode and the decay property tests), incr_snapshot
-        # (green r1-r9, the W1 write path stays locked by snapshot_state
-        # + the api/golden tests), db_size_users and get_dist_wipe_regime
-        # (green r8-r9, parameter twists of the registered db_size /
-        # get_dist_all) moved to the secondary registry, freeing rows for
-        # the four never-driver-seen late-r9 operators promoted in
-        # entrypoints_ext (semantic_admit, mixture_apply,
-        # semantic_dedup_two_level, hash_split).
-        # r9 rotation (VERDICT r8 #2): the r7 promotions
-        # get_field_compat_partial_z and get_dist_noprune — driver-green
-        # r7-r8, each a parameter twist of a still-registered core query
-        # (get_field / get_dist_all) — moved to the secondary registry,
-        # freeing rows for never-driver-seen ANN/sampling promotions in
-        # entrypoints_ext.
-        # r8 rotation (VERDICT r7 #1): first driver rows for the three
-        # stalest never-driver-seen secondaries in this module — the
-        # strategy-equivalence check that the skew-safe join normalize
-        # equals the window plan (get_dist_join_norm), the R4 operator on
-        # the user-keyed projection (db_size_users), and the e^-λ<1e-8
-        # wipe regime of the default rate (get_dist_wipe_regime,
-        # goforget/decay.go:17-19) which had never had a driver row.
         "get_dist_join_norm": q_get_dist_join_norm,
     }
     from forgettable_spark import entrypoints_ext, entrypoints_rel
@@ -592,300 +568,62 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 def secondary_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Oracle-checked queries NOT registered with the driver (its
-    correctness harness caps at 50 rows). Each duplicates coverage a
-    primary query already provides, as a parameter twist or strategy
-    variant.
+    correctness harness caps at 50 rows), run by the local test gate
+    (tests/test_oracle_parity.py) with the same rigor as the primary
+    registry:
 
-    r5 rotation (VERDICT r4 #1/#3): the late-r4 secondaries
-    ``asof_attribution``, ``ann_kmeans_topk``, ``corpus_report``,
-    ``sample_per_group_budget`` and ``dedup_lsh_recall`` were promoted to
-    the primary registry to earn driver rows; the headline
-    ``ann_multiprobe_topk`` switched its quantizer to signature cells +
-    sample-to-cap + int8 (the former secondary ``ann_signature_quantized``
-    config, whose oracle it now carries), demoting here:
-
-    - ``ann_argmax_multiprobe`` — the r1–r4 argmax-quantizer headline,
-      measured 8.2× wall for 3× rows at sf3 (cells capped at dim);
-      kept as the fixed-cell baseline;
-    - ``ann_signature_topk`` — the float-scored twin of the new headline
-      (same candidate set by construction);
-    - ``ann_recall_signature`` (NEW r6) — the headline quantizer's own
-      probes-vs-recall+cost gauge (flips 0/1/2 vs exact brute-force
-      truth), closing the coherence gap the r5 re-headline left: the
-      primary ``ann_recall`` gauges the argmax baseline;
-    - ``ann_quantized_topk`` — flat (no quantizer) int8 cosine top-k on
-      the recall query sample, redundant with the int8-scored headline;
-    - ``stratified_sample`` — per-stratum salted-hash sampling, a twist
-      of the promoted ``sample_per_group_budget`` (same hash-bucket
-      machinery) beside the still-registered ``hash_split``;
-    - ``rel_pricing_summary`` / ``rel_top_customers`` — relational
-      shapes subsumed by ``rel_cube_summary`` (same table+aggregates at
-      every CUBE level) and ``rel_shipping_priority`` /
-      ``rel_part_supplier_volume`` (broadcast join + deterministic topk).
-
-    Mid-r5 rotation (VERDICT r4 "What's missing" #1): ``pack_apply`` and
-    ``dedup_chunk_apply`` — the byte-verified materialize twins that had
-    never earned a driver row — were promoted alongside the NEW
-    ``media_near_dup`` operator, demoting here:
-
-    - ``token_counts`` — row-local token/char/byte counting, a
-      projection sibling of the still-registered ``text_stats`` (green
-      driver rows r1–r4);
-    - ``hash_split`` — salted-hash train/val/test assignment, the same
-      row-local hash-bucket machinery as the registered
-      ``sample_per_group_budget`` (green r1–r4);
-    - ``rel_part_supplier_volume`` — broadcast-join + agg shape kept
-      green by ``rel_shipping_priority`` (green r1–r4).
-
-    Earlier rotations, all still oracle-checked here every session:
-
-    - ``db_size_users`` — same R4 operator as ``db_size`` on the
-      user-keyed projection;
-    - ``get_dist_join_norm`` — strategy-equivalence check (join-based
-      normalize must equal the window-based plan of ``get_dist_all``);
-    - ``ann_cosine_topk`` — the brute-force baseline whose truth
-      computation ``ann_recall`` embeds;
-    - ``ann_bucketed_float`` / ``ann_multiprobe_float`` — the
-      sequential-fold float-scored twins of the registered int8 ANN
-      queries (same candidate set by construction);
-    - ``get_dist_wipe_regime`` — ``get_dist_all`` at the default rate,
-      exercising the e^-λ wipe regime;
-    - ``get_field_compat_partial_z`` — the reference's partial-Z /get
-      quirk, a parameter twist of ``get_field``;
-    - ``get_dist_noprune`` — the floor-at-1 pyforget law, a parameter
-      twist of ``get_dist_all`` (rotated out in late r4 to give the two
-      NEW r4 operators — ``dedup_chunk_exact``, ``ann_signature_topk``
-      — driver rows in their debut round);
-    - ``dedup_simhash_capped`` — the hot-bucket-cap twist of
-      ``dedup_simhash_pairs`` (same rotation; the cap's mirrored-QUALIFY
-      semantics stay hash-verified here every session);
-    - ``ann_bucketed_topk`` — the single-probe parameter twist of
-      ``ann_argmax_multiprobe`` (same int8 scoring, same bucket scheme;
-      rotated out late r4 so the NEW ``bm25_search`` operator earns a
-      driver row in its debut round);
-    - ``get_dist_single`` / ``n_most_probable_users`` /
-      ``dedup_simhash`` — rotated out late r4 so the three NEW
-      operators ``lm_score``, ``pack_sequences``, ``dedup_incremental``
-      earn driver rows in their debut round: the first two are a WHERE
-      twist and a projection twist of still-registered queries, and
-      ``dedup_simhash`` is the per-document sketch listing whose exact
-      aggregation ``dedup_simhash_pairs`` consumes and re-verifies;
-    - ``quality_filter`` — the rule gate the NEW ``quality_distill``
-      embeds verbatim as its labeling step (same late-r4 rotation);
-    - ``pack_apply`` — the materialize step of ``pack_sequences``
-      (same primary-layout/secondary-apply split as the chunk-dedup
-      family);
-    - ``doc_fingerprint`` — the per-document sketch listing every LSH
-      query recomputes internally (rotated out late r4 so the NEW
-      ``source_curation`` earns a debut-round driver row);
-    r6 rotation (VERDICT r5 #8): ``batch_novelty``, ``sample_per_group``
-    and ``dedup_simhash_capped`` — green locally since r4 but never
-    driver-seen — promoted to the primary registry for first driver
-    rows, demoting here:
-
-    - ``value_quantiles`` — exact per-event-type value quantiles
-      (window arithmetic; green driver rows r1–r5);
-    - ``profile_events`` — per-event-type profile rollup (green r1–r5);
-    - ``user_event_set_ops`` — INTERSECT/EXCEPT audience composition
-      (green r1–r5).
-
-    Late-r6 rotation: the NEW ``decontaminate_fuzzy`` operator (banded
-    MinHash contamination vs the broadcast eval side) debuts in the
-    primary registry, demoting here:
-
-    - ``rel_cube_summary`` — CUBE rollup over lineitem (green r1–r5);
-      its scan-agg sub-shape ``rel_pricing_summary`` was already here.
-
-    r9 rotation (VERDICT r8 #2): ``ann_quantized_topk``,
-    ``ann_bucketed_float``, ``ann_multiprobe_float`` and
-    ``stratified_sample`` — the four stalest never-driver-seen
-    secondaries — promoted for debut driver rows, demoting here:
-
-    - ``get_field_compat_partial_z`` — the partial-Z /get quirk, a
-      parameter twist of the registered ``get_field`` (green r7-r8);
-    - ``get_dist_noprune`` — the floor-at-1 pyforget law, a parameter
-      twist of the registered ``get_dist_all`` (green r7-r8);
-    - ``quality_filter`` — the rule gate the registered
-      ``quality_distill`` embeds verbatim as its labeling step (green
-      r7-r8);
-    - ``dedup_simhash_capped`` — the hot-bucket-cap twist of the
-      registered ``dedup_simhash_pairs`` (green r6-r8).
-
-    Late-r9 rotation (new-operator debuts): the three NEW operators
-    ``semantic_dedup`` (SemDeDup cluster-scoped embedding dedup over the
-    trained codebook), ``dedup_canonicalize`` (quality-argmax
-    representative per duplicate cluster) and ``mixture_plan``
-    (target-mixture domain reweighting) enter the primary registry for
-    debut driver rows, demoting here:
-
-    - ``embedding_near_dup`` — the IVF-cell near-dup strategy variant
-      (green r5-r8); the hyperplane variant stays primary and
-      ``semantic_dedup`` now carries the cell-bucketed shape;
-    - ``sample_per_group`` — count-cap twist beside the registered
-      budget + stratified samplers (green r6-r8);
-    - ``corpus_report`` — one-row observability rollup, kept green by
-      ``batch_novelty`` + ``source_curation`` (green r5-r8).
-
-    r10 rotation (VERDICT r9 #1): the four stalest never-driver-seen
-    secondaries — the late-r9 flagship operators ``semantic_admit``,
-    ``mixture_apply``, ``semantic_dedup_two_level`` plus the long-demoted
-    ``hash_split`` — promoted for debut driver rows, demoting here:
-
-    - ``decay_proportional`` — the proportional decay law (green r1-r9;
-      the law stays driver-exercised through ``get_dist_poisson``'s
-      expected mode and locked by the decay property tests);
-    - ``incr_snapshot`` — the W1 write path (green r1-r9; stays locked
-      by the registered ``snapshot_state`` plus the api/golden tests);
-    - ``db_size_users`` — R4 on the user-keyed projection, a twist of
-      the registered ``db_size`` (green r8-r9);
-    - ``get_dist_wipe_regime`` — the e^-λ<1e-8 wipe regime of the
-      registered ``get_dist_all`` (green r8-r9).
-
-    r11 rotation (VERDICT r10 #1): the four never-driver-seen r10
-    operators — ``semantic_dedup_partitioned`` (the corpus-scale
-    quantizer composition, now with corpus-aware b), ``knn_label`` +
-    ``knn_label_accuracy`` and ``prototype_prune`` — promoted for debut
-    driver rows, demoting here:
-
-    - ``ann_quantized_topk`` — flat int8 cosine top-k on the recall
-      query sample, redundant with the int8-scored headline (green
-      r9-r10);
-    - ``ann_bucketed_float`` / ``ann_multiprobe_float`` — the
-      sequential-fold float-scored twins of the registered int8 ANN
-      queries, same candidate sets by construction (green r9-r10);
-    - ``stratified_sample`` — per-stratum salted-hash fractions beside
-      the registered ``sample_per_group_budget`` + ``hash_split``
-      (green r9-r10).
-
-    tests/test_oracle_parity.py runs these with the same rigor as the
-    primary registry every session.
+    - the forget-table twists — parameter variants of registered reads
+      (``get_dist_single``, ``n_most_probable_users``,
+      ``get_field_compat_partial_z``, ``get_dist_noprune``,
+      ``decay_proportional``, ``incr_snapshot``, ``db_size_users``,
+      ``get_dist_wipe_regime``);
+    - ``dedup_simhash`` / ``dedup_simhash_capped`` — the sketch listing
+      and the hot-bucket-cap twist of the registered
+      ``dedup_simhash_pairs``;
+    - ``semantic_dedup_banded`` / ``semantic_admit_banded`` — the
+      banded-OR recovery pair, priced by the registered
+      ``semantic_probed_recall``;
+    - ``mixture_plan`` (embedded by the registered ``mixture_apply``)
+      and ``semantic_dedup`` (the flat-codebook variant);
+    - the text family — ``token_counts``, ``language_id``,
+      ``doc_fingerprint``, ``pii_scan``, ``corpus_top_ngrams``,
+      ``quality_filter``, ``corpus_report``, ``text_stats`` — row-local
+      and partial-aggregate siblings of the registered text queries;
+    - the sampling and materialize twins — ``stratified_sample``,
+      ``sample_per_group``, ``pack_apply``, ``dedup_chunk_apply``,
+      ``dedup_canonicalize`` — beside the registered samplers and the
+      layout queries they apply.
     """
-    from forgettable_spark import entrypoints_ext, entrypoints_rel
+    from forgettable_spark import entrypoints_ext
 
     return {
         "get_dist_single": q_get_dist_single,
         "n_most_probable_users": q_n_most_probable_users,
-        "dedup_simhash": entrypoints_ext.q_dedup_simhash,
-        "ann_cosine_topk": entrypoints_ext.q_ann_cosine_topk,
-        "ann_bucketed_topk": entrypoints_ext.q_ann_bucketed_topk,
-        "ann_argmax_multiprobe": entrypoints_ext.q_ann_argmax_multiprobe,
-        # r9 demotions (VERDICT r8 #2 rotation): driver-green twists of
-        # still-registered queries, displaced by the four never-driver-
-        # seen promotions (ann_quantized_topk, ann_bucketed_float,
-        # ann_multiprobe_float, stratified_sample) —
-        # get_field_compat_partial_z (partial-Z twist of get_field,
-        # green r7-r8), get_dist_noprune (floor-at-1 twist of
-        # get_dist_all, green r7-r8), quality_filter (the rule gate
-        # quality_distill embeds verbatim, green r7-r8), and
-        # dedup_simhash_capped (hot-bucket-cap twist of the registered
-        # dedup_simhash_pairs, green r6-r8).
         "get_field_compat_partial_z": q_get_field_compat_partial_z,
         "get_dist_noprune": q_get_dist_noprune,
-        "quality_filter": entrypoints_ext.q_quality_filter,
-        "dedup_simhash_capped": entrypoints_ext.q_dedup_simhash_capped,
-        "doc_fingerprint": entrypoints_ext.q_doc_fingerprint,
-        "token_counts": entrypoints_ext.q_token_counts,
-        "rel_cube_summary": entrypoints_rel.q_rel_cube_summary,
-        "rel_pricing_summary": entrypoints_rel.q_rel_pricing_summary,
-        "rel_top_customers": entrypoints_rel.q_rel_top_customers,
-        "rel_part_supplier_volume": entrypoints_rel.q_rel_part_supplier_volume,
-        "value_quantiles": entrypoints_rel.q_value_quantiles,
-        "profile_events": entrypoints_rel.q_profile_events,
-        "user_event_set_ops": entrypoints_rel.q_user_event_set_ops,
-        "text_stats": entrypoints_ext.q_text_stats,
-        "pack_apply": entrypoints_ext.q_pack_apply,
-        "dedup_chunk_apply": entrypoints_ext.q_dedup_chunk_apply,
-        "rel_shipping_priority": entrypoints_rel.q_rel_shipping_priority,
-        # r8 demotions (VERDICT r7 #1 rotation): green driver rows r1-r7,
-        # each a shape a still-registered primary keeps exercising —
-        # language_id (row-local codegen scoring, same family as the
-        # registered quality_filter / corpus_report rule gates),
-        # corpus_top_ngrams (explode+partial-agg, kept green by
-        # repetition_stats and tfidf_keywords), pii_scan (row-local regex
-        # scan, same class as quality_filter), and
-        # orders_without_lineitems (broadcast anti-join, the same shape
-        # decontaminate exercises on the documents corpus).
-        "language_id": entrypoints_ext.q_language_id,
-        "corpus_top_ngrams": entrypoints_ext.q_corpus_top_ngrams,
-        "pii_scan": entrypoints_ext.q_pii_scan,
-        "orders_without_lineitems": entrypoints_rel.q_orders_without_lineitems,
-        # Late-r9 demotions (rotation for the three NEW debut operators
-        # semantic_dedup / dedup_canonicalize / mixture_plan): each a
-        # strategy variant or twist a still-registered primary keeps
-        # exercising — embedding_near_dup (IVF-cell near-dup; the
-        # hyperplane variant stays primary and semantic_dedup carries
-        # the cell-bucketed shape, green r5-r8), sample_per_group
-        # (count-cap twist beside the registered budget + stratified
-        # samplers, green r6-r8), corpus_report (one-row observability
-        # rollup, kept green by batch_novelty + source_curation, green
-        # r5-r8).
-        "embedding_near_dup": entrypoints_ext.q_embedding_near_dup,
-        "sample_per_group": entrypoints_ext.q_sample_per_group,
-        "corpus_report": entrypoints_ext.q_corpus_report,
-        # r10 demotions (VERDICT r9 #1 rotation): four long-green
-        # primaries whose operators stay exercised by still-registered
-        # queries — decay_proportional (green r1-r9; the proportional
-        # law rides get_dist_poisson's expected mode and the decay
-        # property tests), incr_snapshot (green r1-r9; the W1 write path
-        # stays locked by snapshot_state + api/golden tests),
-        # db_size_users (green r8-r9; R4 on the user-keyed projection
-        # beside the registered db_size), get_dist_wipe_regime (green
-        # r8-r9; the e^-λ wipe regime of the registered get_dist_all).
-        # They displaced the four never-driver-seen late-r9 operators
-        # (semantic_admit, mixture_apply, semantic_dedup_two_level,
-        # hash_split — now registered in entrypoints_ext).
         "decay_proportional": q_decay_proportional,
         "incr_snapshot": q_incr_snapshot,
         "db_size_users": q_db_size_users,
         "get_dist_wipe_regime": q_get_dist_wipe_regime,
-        # r11 demotions (VERDICT r10 #1 rotation): the four r9
-        # promotions, driver-green r9-r10, each a parameter/strategy twin
-        # of a still-registered query — ann_quantized_topk (flat int8
-        # cosine top-k on the recall query sample, redundant with the
-        # int8-scored headline), ann_bucketed_float / ann_multiprobe_float
-        # (sequential-fold float-scored twins of the registered int8 ANN
-        # queries, same candidate sets by construction), and
-        # stratified_sample (per-stratum salted-hash fractions beside the
-        # registered sample_per_group_budget + hash_split). They
-        # displaced the four never-driver-seen r10 operators
-        # (semantic_dedup_partitioned, knn_label, prototype_prune,
-        # knn_label_accuracy — now registered in entrypoints_ext).
-        "ann_quantized_topk": entrypoints_ext.q_ann_quantized_topk,
-        "ann_bucketed_float": entrypoints_ext.q_ann_bucketed_float,
-        "ann_multiprobe_float": entrypoints_ext.q_ann_multiprobe_float,
-        "stratified_sample": entrypoints_ext.q_stratified_sample,
-        # r12 demotions (VERDICT r11 #1c rotation): four long-green
-        # primaries whose operators stay exercised by still-registered
-        # queries, displaced by the four never-driver-seen r11
-        # probe-family operators (semantic_dedup_probed,
-        # semantic_probed_recall, semantic_admit_probed,
-        # decontaminate_semantic — now registered in entrypoints_ext):
-        # ann_recall (green r4-r11; the argmax baseline's sweep gauge —
-        # the LIVE headline quantizer's gauge ann_recall_signature stays
-        # registered with the same sweep machinery), semantic_dedup
-        # (green late-r9-r11; the flat-codebook variant beside the
-        # registered two-level / partitioned / probed family),
-        # dedup_canonicalize (green late-r9-r11; representative
-        # selection atop the still-registered dedup_components
-        # clusters), mixture_plan (green late-r9-r11; embedded verbatim
-        # by the still-registered mixture_apply).
-        "ann_recall": entrypoints_ext.q_ann_recall,
-        "semantic_dedup": entrypoints_ext.q_semantic_dedup,
-        "dedup_canonicalize": entrypoints_ext.q_dedup_canonicalize,
-        "mixture_plan": entrypoints_ext.q_mixture_plan,
-        # NEW r12, secondary from birth (registry at cap): the BANDED-OR
-        # signature construction (VERDICT r11 #2) — r independent
-        # band_bits-wide sign-LSH signatures over disjoint hyperplane
-        # slices, candidate iff ANY band agrees; the structural answer
-        # to the ≥2-bit straddler gap that caps 1-flip probing at 0.615
-        # recall (sf1 b=6): misses decay geometrically in r. Generated
-        # literal-codebook oracle; the registered recall gauge's new
-        # 'bands' arm prices it against the probed form every round.
+        "dedup_simhash": entrypoints_ext.q_dedup_simhash,
+        "dedup_simhash_capped": entrypoints_ext.q_dedup_simhash_capped,
         "semantic_dedup_banded": entrypoints_ext.q_semantic_dedup_banded,
-        # NEW r12, secondary from birth: the banded recovery's ADMISSION
-        # arm (as semantic_admit_probed is the probed one's) — same
-        # verdict contract, per-band-bucket caps, generated oracle.
         "semantic_admit_banded": entrypoints_ext.q_semantic_admit_banded,
+        "mixture_plan": entrypoints_ext.q_mixture_plan,
+        "semantic_dedup": entrypoints_ext.q_semantic_dedup,
+        "token_counts": entrypoints_ext.q_token_counts,
+        "language_id": entrypoints_ext.q_language_id,
+        "doc_fingerprint": entrypoints_ext.q_doc_fingerprint,
+        "pii_scan": entrypoints_ext.q_pii_scan,
+        "corpus_top_ngrams": entrypoints_ext.q_corpus_top_ngrams,
+        "quality_filter": entrypoints_ext.q_quality_filter,
+        "corpus_report": entrypoints_ext.q_corpus_report,
+        "text_stats": entrypoints_ext.q_text_stats,
+        "stratified_sample": entrypoints_ext.q_stratified_sample,
+        "sample_per_group": entrypoints_ext.q_sample_per_group,
+        "pack_apply": entrypoints_ext.q_pack_apply,
+        "dedup_chunk_apply": entrypoints_ext.q_dedup_chunk_apply,
+        "dedup_canonicalize": entrypoints_ext.q_dedup_canonicalize,
     }
 
 
@@ -971,46 +709,17 @@ WHERE "count" > 0 AND distribution = \'{GET_FIELD_DIST}\'
 def secondary_oracle_sql(sf_dir: str | None = None) -> dict[str, str]:
     """Oracle twins for :func:`secondary_queries` (same contract as
     ``oracle_sql``, consumed only by the local test gate). ``sf_dir``
-    pins the corpus for GENERATED oracles (semantic_dedup_two_level's
-    literal two-level codebook), exactly as in ``oracle_sql``."""
-    from forgettable_spark import entrypoints_ext, entrypoints_rel
+    pins the corpus for GENERATED oracles (the literal-codebook ones),
+    exactly as in ``oracle_sql``; each degrades independently."""
+    from forgettable_spark import entrypoints_ext
 
     out = {
         "get_dist_single": _oracle_get_dist(
             _EV_EVENT_TYPE, RATE_SLOW, True, "linear", f"WHERE distribution = '{GET_FIELD_DIST}'"
         ),
         "n_most_probable_users": ORACLE_N_MOST_PROBABLE_USERS,
-        "dedup_simhash": entrypoints_ext.ORACLE_DEDUP_SIMHASH,
-        "ann_cosine_topk": entrypoints_ext.ORACLE_ANN_COSINE,
-        "ann_bucketed_topk": entrypoints_ext._oracle_ann_quantized_bucketed(1),
-        "ann_argmax_multiprobe": entrypoints_ext._oracle_ann_quantized_bucketed(),
-        # r9 demotions (oracles follow their queries)
         "get_field_compat_partial_z": _oracle_get_field_compat(),
         "get_dist_noprune": _oracle_get_dist(_EV_EVENT_TYPE, RATE_SLOW, False, "linear"),
-        "quality_filter": entrypoints_ext.ORACLE_QUALITY_FILTER,
-        "dedup_simhash_capped": entrypoints_ext.ORACLE_DEDUP_SIMHASH_CAPPED,
-        "doc_fingerprint": entrypoints_ext.ORACLE_DOC_FINGERPRINT,
-        "token_counts": entrypoints_ext.ORACLE_TOKEN_COUNTS,
-        "rel_cube_summary": entrypoints_rel.ORACLE_REL_CUBE,
-        "rel_pricing_summary": entrypoints_rel.ORACLE_REL_PRICING,
-        "rel_top_customers": entrypoints_rel.ORACLE_REL_TOP_CUSTOMERS,
-        "rel_part_supplier_volume": entrypoints_rel.ORACLE_REL_PART_SUPPLIER,
-        "value_quantiles": entrypoints_rel.ORACLE_VALUE_QUANTILES,
-        "profile_events": entrypoints_rel.ORACLE_PROFILE_EVENTS,
-        "user_event_set_ops": entrypoints_rel.ORACLE_SET_OPS,
-        "text_stats": entrypoints_ext.ORACLE_TEXT_STATS,
-        "pack_apply": entrypoints_ext._oracle_pack_apply(),
-        "dedup_chunk_apply": entrypoints_ext.ORACLE_DEDUP_CHUNK_APPLY,
-        "rel_shipping_priority": entrypoints_rel.ORACLE_REL_SHIPPING_PRIORITY,
-        "language_id": entrypoints_ext._oracle_language_id(),
-        "corpus_top_ngrams": entrypoints_ext.ORACLE_TOP_NGRAMS,
-        "pii_scan": entrypoints_ext.ORACLE_PII_SCAN,
-        "orders_without_lineitems": entrypoints_rel.ORACLE_ORDERS_ANTI,
-        # late-r9 demotions (oracles follow their queries)
-        "embedding_near_dup": entrypoints_ext.ORACLE_EMBEDDING_NEAR_DUP,
-        "sample_per_group": entrypoints_ext.ORACLE_SAMPLE_PER_GROUP,
-        "corpus_report": entrypoints_ext.ORACLE_CORPUS_REPORT,
-        # r10 demotions (oracles follow their queries)
         "decay_proportional": _oracle_get_dist(
             _EV_USER, RATE_PROPORTIONAL, False, "proportional"
         ),
@@ -1022,35 +731,28 @@ def secondary_oracle_sql(sf_dir: str | None = None) -> dict[str, str]:
         "get_dist_wipe_regime": _oracle_get_dist(
             _EV_EVENT_TYPE, RATE_DEFAULT, True, "linear"
         ),
-        # r11 demotions (oracles follow their queries)
-        "ann_quantized_topk": entrypoints_ext._oracle_ann_quantized(),
-        "ann_bucketed_float": entrypoints_ext.ORACLE_ANN_BUCKETED,
-        "ann_multiprobe_float": entrypoints_ext.ORACLE_ANN_MULTIPROBE,
+        "dedup_simhash": entrypoints_ext.ORACLE_DEDUP_SIMHASH,
+        "dedup_simhash_capped": entrypoints_ext.ORACLE_DEDUP_SIMHASH_CAPPED,
+        "mixture_plan": entrypoints_ext._oracle_mixture_plan(),
+        "token_counts": entrypoints_ext.ORACLE_TOKEN_COUNTS,
+        "language_id": entrypoints_ext._oracle_language_id(),
+        "doc_fingerprint": entrypoints_ext.ORACLE_DOC_FINGERPRINT,
+        "pii_scan": entrypoints_ext.ORACLE_PII_SCAN,
+        "corpus_top_ngrams": entrypoints_ext.ORACLE_TOP_NGRAMS,
+        "quality_filter": entrypoints_ext.ORACLE_QUALITY_FILTER,
+        "corpus_report": entrypoints_ext.ORACLE_CORPUS_REPORT,
+        "text_stats": entrypoints_ext.ORACLE_TEXT_STATS,
         "stratified_sample": entrypoints_ext.ORACLE_STRATIFIED_SAMPLE,
+        "sample_per_group": entrypoints_ext.ORACLE_SAMPLE_PER_GROUP,
+        "pack_apply": entrypoints_ext._oracle_pack_apply(),
+        "dedup_chunk_apply": entrypoints_ext.ORACLE_DEDUP_CHUNK_APPLY,
+        "dedup_canonicalize": entrypoints_ext._oracle_dedup_canonicalize(),
     }
-    # r12 demotions (oracles follow their queries): ann_recall /
-    # dedup_canonicalize / mixture_plan are static strings;
-    # semantic_dedup's literal-codebook oracle is GENERATED and degrades
-    # independently like the primary block (ADVICE r10).
-    out["ann_recall"] = entrypoints_ext._oracle_ann_recall()
-    out["dedup_canonicalize"] = entrypoints_ext._oracle_dedup_canonicalize()
-    out["mixture_plan"] = entrypoints_ext._oracle_mixture_plan()
     corpus = sf_dir or entrypoints_ext._KMEANS_ORACLE_DEFAULT_SF
-    entrypoints_ext._add_generated_oracle(
-        out, "semantic_dedup", entrypoints_ext._oracle_semantic_dedup, corpus
-    )
-    # NEW r12 (banded-OR, secondary from birth) — generated
-    # literal-codebook oracle, degrades independently (ADVICE r10).
-    entrypoints_ext._add_generated_oracle(
-        out,
-        "semantic_dedup_banded",
-        entrypoints_ext._oracle_semantic_dedup_banded,
-        corpus,
-    )
-    entrypoints_ext._add_generated_oracle(
-        out,
-        "semantic_admit_banded",
-        entrypoints_ext._oracle_semantic_admit_banded,
-        corpus,
-    )
+    for name, gen in (
+        ("semantic_dedup", entrypoints_ext._oracle_semantic_dedup),
+        ("semantic_dedup_banded", entrypoints_ext._oracle_semantic_dedup_banded),
+        ("semantic_admit_banded", entrypoints_ext._oracle_semantic_admit_banded),
+    ):
+        entrypoints_ext._add_generated_oracle(out, name, gen, corpus)
     return out

@@ -14,6 +14,7 @@ import os
 
 from collections.abc import Callable
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -31,11 +32,10 @@ MINHASH_K = 12
 LSH_BANDS = 4
 ANN_K = 10
 ANN_QUERY_MOD = 25  # queries = vec_id % 25 == 0
-ANN_PROBES = 2  # multi-probe IVF: search the 2 best quantizer cells
-#: ann_recall gauges the index on a FIXED-SIZE query sample (the first
-#: ANN_RECALL_N multiples of ANN_QUERY_MOD), not a fixed fraction — its
-#: brute-force truth stage stays O(ANN_RECALL_N · |corpus|) at any scale
-#: instead of growing quadratically with the corpus.
+#: ann_recall_signature gauges the index on a FIXED-SIZE query sample (the
+#: first ANN_RECALL_N multiples of ANN_QUERY_MOD), not a fixed fraction —
+#: its brute-force truth stage stays O(ANN_RECALL_N · |corpus|) at any
+#: scale instead of growing quadratically with the corpus.
 ANN_RECALL_N = 20
 NEAR_DUP_COSINE = 0.4  # demo threshold: the synthetic vectors are near-orthogonal
 SIMHASH_MAX_HAMMING = 3
@@ -455,26 +455,10 @@ def _queries_subset(df: DataFrame) -> DataFrame:
     return df.filter(F.col("vec_id") % ANN_QUERY_MOD == 0)
 
 
-def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _load_emb(spark, sf_dir)
-    return similarity.brute_force_topk(emb, _queries_subset(emb), k=ANN_K)
-
-
 _V_CTE = (
     "v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e"
     " FROM embeddings)"
 )
-
-ORACLE_ANN_COSINE = f"""WITH {_V_CTE},
-q AS (SELECT vec_id AS query_id, e AS qv FROM v WHERE vec_id % {ANN_QUERY_MOD} = 0),
-scored AS (
-  SELECT query_id, v.vec_id AS neighbor_id, {_cosine_sql('qv', 'e')} AS cosine
-  FROM q, v WHERE query_id != v.vec_id
-)
-SELECT query_id, neighbor_id, cosine, CAST(rank AS INT) AS rank FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id ASC) AS rank
-  FROM scored
-) WHERE rank <= {ANN_K}"""
 
 
 SIG_ANN_BITS = 6  # 64 cells at correctness scale (~9 vectors/cell at
@@ -547,8 +531,7 @@ def q_ann_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-proportional query set growing ×s make the bucket join do
     ×s² work — the builder's own sf3 run measured 8.2× wall for 3×
     rows (SCALING.md). The signature+sample-cap config measured 3.6×
-    on the same corpus with every query served. The argmax variant
-    stays oracle-checked as secondary ``ann_argmax_multiprobe``."""
+    on the same corpus with every query served."""
     emb = _load_emb(spark, sf_dir)
     return similarity.quantized_signature_topk(
         emb,
@@ -605,67 +588,6 @@ SELECT query_id, neighbor_id, cosine_q, CAST(rank AS INT) AS rank FROM (
   SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine_q DESC, neighbor_id ASC) AS rank
   FROM scored
 ) WHERE rank <= {ANN_K}"""
-
-
-def q_ann_bucketed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-style single-probe top-k scored on int8 codes. Promoted to
-    quantized scoring in r4 (VERDICT r3): the candidate set is identical
-    to the float path by construction (buckets are assigned from the
-    original floats), but integer dots run in whole-stage codegen and are
-    order-independent — escaping the interpreted higher-order-function
-    float folds that drifted 2× in the r3 driver bench, the same
-    mechanism that genuinely regressed dedup_simhash before its rewrite.
-    The float-scored twin stays oracle-checked as secondary
-    ``ann_bucketed_float``."""
-    emb = _load_emb(spark, sf_dir)
-    return similarity.quantized_bucketed_topk(emb, _queries_subset(emb), k=ANN_K)
-
-
-def q_ann_bucketed_float(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The float-scored single-probe bucketed ANN (sequential-fold cosine)
-    — secondary since r4; keeps the float bucket-join oracle pair alive
-    after the registered queries moved to int8 scoring."""
-    emb = _load_emb(spark, sf_dir)
-    return similarity.bucketed_ann_topk(emb, _queries_subset(emb), k=ANN_K)
-
-
-_BUCKET_SQL = "list_position(list_transform({e}, x -> abs(x)), list_max(list_transform({e}, x -> abs(x))))"
-
-ORACLE_ANN_BUCKETED = f"""WITH {_V_CTE},
-vb AS (SELECT vec_id, e, CAST({_BUCKET_SQL.format(e='e')} AS BIGINT) AS bucket FROM v),
-q AS (SELECT vec_id AS query_id, e AS qv, bucket FROM vb WHERE vec_id % {ANN_QUERY_MOD} = 0),
-scored AS (
-  SELECT query_id, vb.vec_id AS neighbor_id, {_cosine_sql('qv', 'e')} AS cosine
-  FROM q JOIN vb USING (bucket) WHERE query_id != vb.vec_id
-)
-SELECT query_id, neighbor_id, cosine, CAST(rank AS INT) AS rank FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id ASC) AS rank
-  FROM scored
-) WHERE rank <= {ANN_K}"""
-
-
-def q_ann_argmax_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-style bucketed search over the ARGMAX quantizer with
-    multi-probe (n_probes=2), int8-scored — the r1–r4 headline, demoted
-    to secondary in r5: argmax cells are structurally capped at dim, so
-    its own sf3 validation run measured 8.2× wall for 3× rows
-    (SCALING.md) — quadratic when queries scale with the corpus. Kept
-    oracle-checked as the fixed-cell baseline the signature/codebook
-    quantizers are judged against (same int8 scoring, same equi-join
-    shape, cost ``n_probes · Σ_b |Q_b|·|C_b|``)."""
-    emb = _load_emb(spark, sf_dir)
-    return similarity.quantized_bucketed_topk(
-        emb, _queries_subset(emb), k=ANN_K, n_probes=ANN_PROBES
-    )
-
-
-def q_ann_multiprobe_float(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Float-scored multi-probe bucketed ANN — secondary since r4 (see
-    :func:`q_ann_bucketed_float`)."""
-    emb = _load_emb(spark, sf_dir)
-    return similarity.bucketed_ann_topk(
-        emb, _queries_subset(emb), k=ANN_K, n_probes=ANN_PROBES
-    )
 
 
 #: The registered BM25 query set: three keyword queries over the corpus
@@ -834,7 +756,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster-scoped embedding dedup (SemDeDup, arXiv:2303.09540) over
     the trained k-means codebook: semantic duplicates share a cell, so
     pair scoring is a balanced-cell equi-join — the trained-quantizer
-    complement to the banded-LSH `embedding_near_dup*` family, and the
+    complement to the banded-LSH `embedding_near_dup_hyperplane`, and the
     third consumer of the memoized `ann_kmeans_topk` codebook. Output is
     one row per dropped doc with its minimal keep-witness."""
     from forgettable_spark.extensions import codebook as cb
@@ -951,7 +873,7 @@ def q_prototype_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine to their own trained-codebook centroid and keep the
     least-prototypical 70% per cell (easy-example pruning, the
     large-corpus regime of the paper) — the embedding-side counterpart
-    of the rule-based `quality_filter` family, over the SAME memoized
+    of the rule-based quality gate, over the SAME memoized
     k=8 codebook as the ANN/semantic queries."""
     from forgettable_spark.extensions import codebook as cb
 
@@ -1069,14 +991,14 @@ def _geo_label(vec_col):
 
 def q_knn_label_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The labeling operator's own quality gauge (the
-    `ann_recall` pattern): run `knn_label` over the labeled/unlabeled
-    split and score predictions against the held-out TRUE labels of the
-    query slice. TWO rows since r12 (VERDICT r11 #6), one per label
-    source: 'column' scores the embeddings table's `label` column
-    (near-independent of geometry, reads ≈ chance — it verifies the
-    vote/abstention machinery, the honest-regime note), 'geo' scores
-    the GEOMETRY-derived fixture (`_geo_label`) whose accuracy is
-    sensitive to the vote logic and reads ≫ chance. Columns:
+    `ann_recall_signature` pattern): run `knn_label` over the
+    labeled/unlabeled split and score predictions against the held-out
+    TRUE labels of the query slice. TWO rows since r12 (VERDICT r11
+    #6), one per label source: 'column' scores the embeddings table's
+    `label` column (near-independent of geometry, reads ≈ chance — it
+    verifies the vote/abstention machinery, the honest-regime note),
+    'geo' scores the GEOMETRY-derived fixture (`_geo_label`) whose
+    accuracy is sensitive to the vote logic and reads ≫ chance. Columns:
     (label_source, n_queries, n_predicted, n_correct, accuracy) —
     n_predicted < n_queries when a query's probed cells held no
     labeled neighbor (abstention, counted, not hidden)."""
@@ -1293,19 +1215,9 @@ def _spread_parts(
                     for root, _, files in os.walk(path)
                     for f in files
                 )
-            raw = spark.conf.get(
-                "spark.sql.files.maxPartitionBytes", "268435456"
-            ).lower().strip()
-            # Spark byte confs accept "128m" but also "128mb" and a bare
-            # "...b" suffix — cover both spellings (ADVICE r12: '128MB'
-            # previously raised an uncaught ValueError through int()).
-            if raw.endswith("b") and not raw[:-1].isdigit():
-                raw = raw[:-1]
-            units = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
-            if raw and raw[-1] in units:
-                max_pb = int(raw[:-1]) * units[raw[-1]]
-            else:
-                max_pb = int(raw)
+            # Spark's own typed read of the byte conf: every spelling it
+            # accepts ("128m", "128mb", "268435456b") parses as it does.
+            max_pb = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
             splits = max(1, -(-nbytes // max(max_pb, 1)))
             rows = table_footer_rows(sf_dir, table)
             target = min(
@@ -1314,7 +1226,7 @@ def _spread_parts(
             )
             if rows and splits < target:
                 parts = target
-        except (OSError, ValueError, ImportError, FileNotFoundError):
+        except (OSError, ValueError, ImportError, Py4JJavaError):
             # The spread is a best-effort optimization gate: an
             # unparseable conf value or absent footer must degrade to
             # "leave the scan alone", never crash a family (ADVICE r12).
@@ -1895,28 +1807,6 @@ def _oracle_semantic_admit_banded(sf_dir: str) -> str:
     )
 
 
-#: Multi-probe list: indices of the n_probes largest |components|, ties by
-#: index asc — the struct list_sort mirrors Spark's top_p_buckets exactly.
-_PROBES_SQL = (
-    "list_slice(list_transform(list_sort(list_transform(range(1, len({e}) + 1), "
-    "i -> {{neg: -abs({e}[i]), idx: CAST(i AS BIGINT)}})), s -> s.idx), 1, {p})"
-)
-
-ORACLE_ANN_MULTIPROBE = f"""WITH {_V_CTE},
-vb AS (SELECT vec_id, e, CAST({_BUCKET_SQL.format(e='e')} AS BIGINT) AS bucket FROM v),
-q AS (SELECT vec_id AS query_id, e AS qv,
-             unnest({_PROBES_SQL.format(e='e', p=ANN_PROBES)}) AS bucket
-      FROM v WHERE vec_id % {ANN_QUERY_MOD} = 0),
-scored AS (
-  SELECT query_id, vb.vec_id AS neighbor_id, {_cosine_sql('qv', 'e')} AS cosine
-  FROM q JOIN vb USING (bucket) WHERE query_id != vb.vec_id
-)
-SELECT query_id, neighbor_id, cosine, CAST(rank AS INT) AS rank FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id ASC) AS rank
-  FROM scored
-) WHERE rank <= {ANN_K}"""
-
-
 def _recall_queries(df: DataFrame) -> DataFrame:
     """Deterministic FIXED-COUNT query sample: the first ANN_RECALL_N
     multiples of ANN_QUERY_MOD. Row-local filter (no sort, no limit, no
@@ -1925,212 +1815,6 @@ def _recall_queries(df: DataFrame) -> DataFrame:
         (F.col("vec_id") % ANN_QUERY_MOD == 0)
         & (F.col("vec_id") < ANN_QUERY_MOD * ANN_RECALL_N)
     )
-
-
-#: The probes-vs-recall curve ann_recall measures: each setting widens
-#: the SAME capped equi-join (cost n_probes · Σ_b |Q_b|·|C_b|), so the
-#: curve shows what candidate budget buys what recall — the measured
-#: trade VERDICT r3 asked for on near-orthogonal synthetic vectors,
-#: where the argmax quantizer has little signal and single-probe recall
-#: is low by construction.
-ANN_RECALL_PROBES = (1, 2, 4)
-
-
-def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The recall-measurement tool: brute-force top-k on a fixed-size
-    query sample is the ground truth; one row per n_probes with hit
-    counts, recall@k, and the CANDIDATE COST that bought it (``n_scored``
-    = scored pairs — the quantity the bucket join bounds). This is the
-    intended role of the exact cross join at scale — a constant number of
-    queries keeps the truth stage O(ANN_RECALL_N · |corpus|) however big
-    the corpus grows, so the gauge never becomes the most expensive job
-    in the mix."""
-
-    def build() -> DataFrame:
-        emb = _load_emb(spark, sf_dir)
-        qset = _recall_queries(emb)
-        bf = scoped_cache(
-            similarity.brute_force_topk(emb, qset, k=ANN_K).select(
-                "query_id", "neighbor_id"
-            )
-        )
-        # Corpus side (vectors + argmax bucket + norm), shared by EVERY
-        # probe setting's top-k AND the candidate cost count — probes
-        # shape the query side only (r8; previously each setting
-        # re-bucketed and re-normed the whole corpus, and only the
-        # ids+bucket cost frame was shared).
-        v = similarity.as_double(F.col("embedding"))
-        c_side = scoped_cache(similarity.bucketed_ann_corpus_side(emb))
-        cb = c_side.select("neighbor_id", "bucket")
-        out = None
-        for p in ANN_RECALL_PROBES:
-            ap = similarity.bucketed_ann_topk(
-                emb, qset, k=ANN_K, n_probes=p, corpus_side=c_side
-            ).select("query_id", "neighbor_id")
-            hits = bf.join(ap, ["query_id", "neighbor_id"], "left_semi")
-            if p <= 1:
-                qb = qset.select(
-                    F.col("vec_id").alias("query_id"),
-                    similarity.argmax_bucket(v).alias("bucket"),
-                )
-            else:
-                qb = qset.select(
-                    F.col("vec_id").alias("query_id"),
-                    F.explode(similarity.top_p_buckets(v, p)).alias("bucket"),
-                )
-            scored = qb.join(cb, "bucket").filter(
-                F.col("query_id") != F.col("neighbor_id")
-            )
-            row = (
-                bf.agg(F.count("*").alias("n_truth"))
-                .crossJoin(hits.agg(F.count("*").alias("n_hit")))
-                .crossJoin(scored.agg(F.count("*").alias("n_scored")))
-                .select(
-                    F.lit(p).cast("int").alias("n_probes"),
-                    "n_truth",
-                    "n_hit",
-                    (
-                        F.col("n_hit").cast("double") / F.col("n_truth").cast("double")
-                    ).alias("recall"),
-                    "n_scored",
-                )
-            )
-            out = row if out is None else out.unionByName(row)
-        return out
-
-    return run_released_cpu_dense(spark, build)
-
-
-def q_ann_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Int8-quantized cosine top-k on the fixed recall query sample —
-    the reduced-precision twin of the brute-force baseline, measuring
-    what 4× less vector I/O costs in ranking quality. The integer dots
-    make scores order-independent AND bit-exact against the oracle."""
-    emb = _load_emb(spark, sf_dir)
-    return similarity.quantized_topk(emb, _recall_queries(emb), k=ANN_K)
-
-
-def _oracle_ann_quantized() -> str:
-    from forgettable_spark.extensions.similarity import QUANT_MAX
-
-    idot = "CAST(list_sum(list_transform(range(1, len(a.q) + 1), i -> a.q[i] * b.q[i])) AS DOUBLE)"
-    return f"""WITH {_V_CTE},
-sc AS (
-  SELECT vec_id, e,
-         list_max(list_transform(e, x -> abs(x))) / {QUANT_MAX}.0 AS s,
-         sqrt({_DOT.format(a='e', b='e')}) AS n
-  FROM v
-),
-qc AS (
-  SELECT vec_id, s, n,
-         CASE WHEN s = 0 THEN list_transform(e, x -> CAST(0 AS BIGINT))
-              ELSE list_transform(e, x -> CAST(round(x / s) AS BIGINT)) END AS q
-  FROM sc
-),
-scored AS (
-  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-         ((a.s * b.s) * {idot}) / (a.n * b.n) AS cosine_q
-  FROM qc a, qc b
-  WHERE a.vec_id % {ANN_QUERY_MOD} = 0 AND a.vec_id < {ANN_QUERY_MOD * ANN_RECALL_N}
-    AND a.vec_id != b.vec_id
-)
-SELECT query_id, neighbor_id, cosine_q, CAST(rank AS INT) AS rank FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine_q DESC, neighbor_id ASC) AS rank
-  FROM scored
-) WHERE rank <= {ANN_K}"""
-
-
-def _oracle_ann_quantized_bucketed(n_probes: int = ANN_PROBES) -> str:
-    """Oracle for the int8-scored IVF bucket join. ``n_probes=1`` uses
-    the query's own argmax bucket (``top_p_buckets`` with p=1 picks the
-    same first-occurrence max-|component| index as ``argmax_bucket``)."""
-    from forgettable_spark.extensions.similarity import QUANT_MAX
-
-    # NB: the scale column is named "qscale", not "s" — _PROBES_SQL's sort
-    # lambda uses `s` as its variable and DuckDB would bind the column.
-    idot = "CAST(list_sum(list_transform(range(1, len(a.q) + 1), i -> a.q[i] * vb.q[i])) AS DOUBLE)"
-    if n_probes <= 1:
-        probe_bucket = "bucket"
-    else:
-        probe_bucket = f"unnest({_PROBES_SQL.format(e='e', p=n_probes)})"
-    return f"""WITH {_V_CTE},
-qc AS (
-  SELECT vec_id, e,
-         list_max(list_transform(e, x -> abs(x))) / {QUANT_MAX}.0 AS qscale,
-         sqrt({_DOT.format(a='e', b='e')}) AS n,
-         CAST({_BUCKET_SQL.format(e='e')} AS BIGINT) AS bucket
-  FROM v
-),
-qq AS (
-  SELECT vec_id, e, qscale, n, bucket,
-         CASE WHEN qscale = 0 THEN list_transform(e, x -> CAST(0 AS BIGINT))
-              ELSE list_transform(e, x -> CAST(round(x / qscale) AS BIGINT)) END AS q
-  FROM qc
-),
-probes AS (
-  SELECT vec_id AS query_id, qscale, n, q,
-         {probe_bucket} AS bucket
-  FROM qq WHERE vec_id % {ANN_QUERY_MOD} = 0
-),
-scored AS (
-  SELECT a.query_id, vb.vec_id AS neighbor_id,
-         ((a.qscale * vb.qscale) * {idot}) / (a.n * vb.n) AS cosine_q
-  FROM probes a JOIN qq vb USING (bucket) WHERE a.query_id != vb.vec_id
-)
-SELECT query_id, neighbor_id, cosine_q, CAST(rank AS INT) AS rank FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine_q DESC, neighbor_id ASC) AS rank
-  FROM scored
-) WHERE rank <= {ANN_K}"""
-
-
-def _oracle_ann_recall() -> str:
-    topk = (
-        "SELECT query_id, neighbor_id FROM ("
-        "  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id"
-        "    ORDER BY cosine DESC, neighbor_id ASC) AS rank FROM {scored}"
-        f") WHERE rank <= {ANN_K}"
-    )
-    per_probe_ctes = []
-    per_probe_rows = []
-    for p in ANN_RECALL_PROBES:
-        if p <= 1:
-            qp = f"q{p} AS (SELECT query_id, qv, CAST({_BUCKET_SQL.format(e='qv')} AS BIGINT) AS bucket FROM q)"
-        else:
-            qp = (
-                f"q{p} AS (SELECT query_id, qv, "
-                f"unnest({_PROBES_SQL.format(e='qv', p=p)}) AS bucket FROM q)"
-            )
-        per_probe_ctes.append(
-            f"""{qp},
-ap{p}_scored AS (
-  SELECT query_id, vb.vec_id AS neighbor_id, {_cosine_sql('qv', 'e')} AS cosine
-  FROM q{p} JOIN vb USING (bucket) WHERE query_id != vb.vec_id
-),
-ap{p} AS ({topk.format(scored=f'ap{p}_scored')})"""
-        )
-        per_probe_rows.append(
-            f"""  SELECT CAST({p} AS INT) AS n_probes,
-         (SELECT COUNT(*) FROM bf) AS n_truth,
-         (SELECT COUNT(*) FROM (SELECT * FROM bf INTERSECT SELECT * FROM ap{p})) AS n_hit,
-         (SELECT COUNT(*) FROM ap{p}_scored) AS n_scored"""
-        )
-    return f"""WITH {_V_CTE},
-vb AS (SELECT vec_id, e, CAST({_BUCKET_SQL.format(e='e')} AS BIGINT) AS bucket FROM v),
-q AS (SELECT vec_id AS query_id, e AS qv FROM v
-      WHERE vec_id % {ANN_QUERY_MOD} = 0 AND vec_id < {ANN_QUERY_MOD * ANN_RECALL_N}),
-bf_scored AS (
-  SELECT query_id, v.vec_id AS neighbor_id, {_cosine_sql('qv', 'e')} AS cosine
-  FROM q, v WHERE query_id != v.vec_id
-),
-bf AS ({topk.format(scored='bf_scored')}),
-{",".join(per_probe_ctes)},
-m AS (
-{" UNION ALL ".join(per_probe_rows)}
-)
-SELECT n_probes, n_truth, n_hit,
-       CAST(n_hit AS DOUBLE) / CAST(n_truth AS DOUBLE) AS recall,
-       n_scored
-FROM m"""
 
 
 #: Flip ladder for the signature-quantizer recall gauge (the headline's
@@ -2144,10 +1828,8 @@ def q_ann_recall_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall gauge for the REGISTERED headline quantizer (sign-LSH
     signature cells + sample-to-cap + int8 scoring): one row per
     ``n_flips`` with hit counts against the exact brute-force truth and
-    the candidate cost that bought them. ``ann_recall`` (primary) keeps
-    gauging the argmax baseline; this twin measures the scheme the
-    headline actually runs — the coherence gap VERDICT r5's re-headline
-    left open. Same fixed-count query sample, so the truth stage stays
+    the candidate cost that bought them — the scheme the headline
+    actually runs. A fixed-count query sample keeps the truth stage
     O(ANN_RECALL_N · |corpus|) at any scale."""
 
     def build() -> DataFrame:
@@ -2327,55 +2009,6 @@ SELECT n_flips, n_truth, n_hit,
        CAST(n_hit AS DOUBLE) / CAST(n_truth AS DOUBLE) AS recall,
        n_scored
 FROM m"""
-
-
-EMBEDDING_CELL_CAP = 150  # ≫ any sf0.01 cell: correctness-scale runs
-# uncapped (the oracle needs no cap model); at corpus scale the cap bounds
-# dominant-component skew cells, dropped cells logged.
-
-IVF_NEAR_DUP_COSINE = 0.3  # demo threshold for the two-level cell: the
-# synthetic vectors are near-orthogonal, so pairs agreeing on BOTH top
-# components max out near cos≈0.35 at sf0.01 — real embedding dedup runs
-# this query at 0.9+ where the top-2 agreement assumption is strong.
-
-
-def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-path cosine near-dup pairs over the two-level (sorted top-2
-    |component|) cell — rewritten in r4 after the sf1 scaling run measured
-    the single-argmax cell's self-join at 98× time for 10× rows (uniform
-    growth makes every one of only ``dim`` cells 10× hotter; see
-    SCALING.md sf1 table)."""
-    return run_released_cpu_dense(
-        spark,
-        lambda: similarity.embedding_near_dup_pairs(
-            _load_emb(spark, sf_dir),
-            threshold=IVF_NEAR_DUP_COSINE,
-            max_bucket_size=EMBEDDING_CELL_CAP,
-        ),
-    )
-
-
-# Top-2 |component| indices, ties broken first-occurrence — mirrors
-# top_p_buckets' (-|x|, idx) struct sort: m1 is the first position of the
-# max; m2 re-scans with position m1 masked to -1, so a duplicated max
-# value yields its SECOND occurrence, exactly the struct sort's idx-asc
-# tie order.
-_MASKED_ABS = (
-    "list_transform(range(1, len(e) + 1),"
-    " i -> CASE WHEN i = m1 THEN -1.0 ELSE abs(e[i]) END)"
-)
-
-ORACLE_EMBEDDING_NEAR_DUP = f"""WITH {_V_CTE},
-vm AS (SELECT vec_id, e, {_BUCKET_SQL.format(e='e')} AS m1 FROM v),
-vm2 AS (SELECT vec_id, e, m1,
-        list_position({_MASKED_ABS}, list_max({_MASKED_ABS})) AS m2 FROM vm),
-vu AS (SELECT vec_id, e, least(m1, m2) AS c1, greatest(m1, m2) AS c2,
-        sqrt(list_sum(list_transform(e, y -> y * y))) AS n
-        FROM vm2)
-SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-       ({_DOT.format(a='a.e', b='b.e')}) / (a.n * b.n) AS cosine
-FROM vu a JOIN vu b ON a.c1 = b.c1 AND a.c2 = b.c2 AND a.vec_id < b.vec_id
-WHERE ({_DOT.format(a='a.e', b='b.e')}) / (a.n * b.n) >= {IVF_NEAR_DUP_COSINE:e}"""
 
 
 HYPERPLANE_BUCKET_CAP = 150  # > sf0.01 max bucket (119): correctness-scale
@@ -3332,8 +2965,8 @@ def q_dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     number). Truth is the within-language exact join (near-identical
     docs share language, the ``ngram_jaccard_pairs`` blocking contract);
     found-pairs are counted against that same set (semi-join). At scale
-    this runs on a SAMPLE block, like ``ann_recall``'s fixed query
-    sample — the gauge's cost model is the exact join's, not the
+    this runs on a SAMPLE block, like ``ann_recall_signature``'s fixed
+    query sample — the gauge's cost model is the exact join's, not the
     corpus'. The recall division is zero-guarded (ADVICE r4): a corpus
     with no true pairs reads recall 0.0 instead of throwing under ANSI
     mode, matching the engine's other rate computations.
@@ -3690,78 +3323,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "repetition_stats": q_repetition_stats,
         "lm_score": q_lm_score,
         "pack_sequences": q_pack_sequences,
-        # r6 rotation: first driver rows for three operators green
-        # locally since r4 (three rel_* twists moved to secondary).
         "batch_novelty": q_batch_novelty,
-        # r7 rotation (VERDICT r6 #4): first driver rows for the rule
-        # gate quality_distill embeds (quality_filter) and the headline
-        # quantizer's recall+cost gauge (ann_recall_signature, new r6);
-        # their demoted twins — text_stats (projection sibling of the
-        # registered token/quality family), pack_apply and
-        # dedup_chunk_apply (materialize twins of the still-registered
-        # layout queries) — keep identical oracle rigor in
-        # entrypoints.secondary_queries().
         "ann_recall_signature": q_ann_recall_signature,
-        # r8 rotation (VERDICT r7 #1): first driver row for the headline
-        # quantizer's float-scored twin — same candidate set as
-        # ann_multiprobe_topk by construction, scored with the
-        # sequential-fold exact dot product instead of int8; the last
-        # never-driver-seen member of the headline ANN family.
         "ann_signature_topk": q_ann_signature_topk,
-        # r11 rotation (VERDICT r10 #1): first driver rows for the four
-        # never-driver-seen r10 operators — the signature-partitioned
-        # two-level quantizer (the corpus-scale semantic-dedup
-        # centerpiece, now with corpus-aware b per VERDICT r10 #6), kNN
-        # majority-vote labeling + its accuracy gauge, and
-        # prototypicality pruning. Displaced to the secondary registry:
-        # ann_quantized_topk, ann_bucketed_float, ann_multiprobe_float,
-        # stratified_sample (r9 promotions, green r9-r10, each a
-        # parameter/strategy twin of a still-registered query — see
-        # entrypoints.secondary_queries).
         "semantic_dedup_partitioned": q_semantic_dedup_partitioned,
         "knn_label": q_knn_label,
         "prototype_prune": q_prototype_prune,
         "knn_label_accuracy": q_knn_label_accuracy,
-        # Late-r9 debuts (rotation policy: every NEW operator earns a
-        # driver row in its debut round): semantic_dedup (SemDeDup
-        # cluster-scoped embedding dedup over the trained codebook),
-        # dedup_canonicalize (quality-argmax representative per
-        # duplicate cluster), mixture_plan (target-mixture domain
-        # reweighting). Displaced to the secondary registry:
-        # embedding_near_dup (the IVF-cell near-dup strategy variant —
-        # the hyperplane variant stays primary and semantic_dedup now
-        # carries the cell-bucketed shape), sample_per_group (count-cap
-        # twist beside the still-registered budget + stratified
-        # samplers), corpus_report (one-row observability rollup, kept
-        # green by batch_novelty and source_curation).
-        # r10 rotation (VERDICT r9 #1): first driver rows for the four
-        # stalest never-driver-seen secondaries — the late-r9 flagship
-        # capability tier (embedding admission on the semantic-dedup cell
-        # machinery, the mixture plan's materialize twin, the two-level
-        # trained quantizer that is the corpus-scale assignment strategy)
-        # plus hash_split (salted-hash train/val/test assignment, demoted
-        # since mid-r5 and never driver-seen). Displaced to the secondary
-        # registry: decay_proportional, incr_snapshot, db_size_users,
-        # get_dist_wipe_regime (see entrypoints.secondary_queries).
         "semantic_admit": q_semantic_admit,
         "mixture_apply": q_mixture_apply,
         "semantic_dedup_two_level": q_semantic_dedup_two_level,
         "hash_split": q_hash_split,
-        # r12 rotation (VERDICT r11 #1c): first driver rows for the four
-        # never-driver-seen r11 probe-family operators — signature
-        # multi-probe recovery for partitioned semantic dedup (the
-        # quality-correct default: the unprobed partition's own gauge
-        # reads 0.46 recall at b=2 / 0.236 at b=6), its admission arm,
-        # the family's drop-set recall gauge, and SEMANTIC
-        # decontamination (the embedding arm of the decontamination
-        # family). Displaced to the secondary registry: ann_recall (the
-        # demoted argmax baseline's sweep gauge — the live headline's
-        # gauge ann_recall_signature stays registered), semantic_dedup
-        # (flat-codebook variant; two-level, partitioned and probed stay),
-        # dedup_canonicalize (representative selection atop the still-
-        # registered dedup_components clusters), mixture_plan (embedded
-        # verbatim by the still-registered mixture_apply) — see
-        # entrypoints.secondary_queries.
         "semantic_dedup_probed": q_semantic_dedup_probed,
         "semantic_probed_recall": q_semantic_probed_recall,
         "semantic_admit_probed": q_semantic_admit_probed,
@@ -3800,8 +3372,6 @@ def oracle_sql(sf_dir: str | None = None) -> dict[str, str]:
         "batch_novelty": _oracle_batch_novelty(),
         "ann_recall_signature": _oracle_ann_recall_signature(),
         "ann_signature_topk": _oracle_ann_signature(),
-        # r10 promotions (oracles follow their queries; the two
-        # generated codebook oracles join the generated block below)
         "mixture_apply": _oracle_mixture_apply(),
         "hash_split": ORACLE_HASH_SPLIT,
     }
@@ -3821,12 +3391,10 @@ def oracle_sql(sf_dir: str | None = None) -> dict[str, str]:
         ("ann_kmeans_topk", _oracle_ann_kmeans),
         ("semantic_admit", _oracle_semantic_admit),
         ("semantic_dedup_two_level", _oracle_semantic_dedup_two_level),
-        # r11 promotions (oracles follow their queries)
         ("semantic_dedup_partitioned", _oracle_semantic_dedup_partitioned),
         ("knn_label", _oracle_knn_label),
         ("prototype_prune", _oracle_prototype_prune),
         ("knn_label_accuracy", _oracle_knn_label_accuracy),
-        # r12 promotions (oracles follow their queries)
         ("semantic_dedup_probed", _oracle_semantic_dedup_probed),
         ("semantic_probed_recall", _oracle_semantic_probed_recall),
         ("semantic_admit_probed", _oracle_semantic_admit_probed),

@@ -1,13 +1,5 @@
-"""General relational queries over the TPC-H-ish tables — beyond-reference
-coverage proving the engine's join/aggregate/sort machinery (the reference
-has no relational algebra at all; SURVEY.md §2.2 absence table).
-
-Float-determinism note: double columns are summed through DECIMAL(18,2)
-accumulators (exact, order-independent addition — a straight double sum
-would depend on partial-aggregation order and could never hash-match an
-oracle), and the exact decimal results are cast to DOUBLE at the very end
-(nearest-double of the same exact value in both engines).
-"""
+"""The conversion-funnel query over the event stream, with its DuckDB
+oracle twin."""
 
 from __future__ import annotations
 
@@ -16,155 +8,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from forgettable_spark.sources import load_events, load_table
-
-
-def _dec(col: str):
-    return F.col(col).cast("decimal(18,2)")
-
-
-def q_rel_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q1-style pricing summary: scan-heavy grouped aggregation with
-    a date predicate that must push into the parquet scan."""
-    li = load_table(spark, sf_dir, "lineitem")
-    disc_price = _dec("l_extendedprice") * (F.lit(1).cast("decimal(18,2)") - _dec("l_discount"))
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-01").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(_dec("l_quantity")).cast("double").alias("sum_qty"),
-            F.sum(_dec("l_extendedprice")).cast("double").alias("sum_base_price"),
-            F.sum(disc_price).cast("double").alias("sum_disc_price"),
-            F.count("*").alias("count_order"),
-        )
-    )
-
-
-ORACLE_REL_PRICING = """SELECT l_returnflag, l_linestatus,
-  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-           * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE)
-    AS sum_disc_price,
-  COUNT(*) AS count_order
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '1998-09-01 00:00:00'
-GROUP BY l_returnflag, l_linestatus"""
-
-
-def q_rel_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-10 customers by order revenue: a broadcast-able dimension join
-    plus grouped aggregation and a deterministic top-k."""
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer")
-    revenue = (
-        orders.groupBy("o_custkey")
-        .agg(F.sum(_dec("o_totalprice")).cast("double").alias("revenue"), F.count("*").alias("n_orders"))
-    )
-    joined = revenue.join(F.broadcast(cust), revenue.o_custkey == cust.c_custkey)
-    return (
-        joined.select("c_custkey", "c_name", "c_mktsegment", "revenue", "n_orders")
-        .orderBy(F.desc("revenue"), F.asc("c_custkey"))
-        .limit(10)
-    )
-
-
-ORACLE_REL_TOP_CUSTOMERS = """SELECT c_custkey, c_name, c_mktsegment,
-  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
-  COUNT(*) AS n_orders
-FROM orders JOIN customer ON o_custkey = c_custkey
-GROUP BY c_custkey, c_name, c_mktsegment
-ORDER BY revenue DESC, c_custkey ASC
-LIMIT 10"""
-
-
-def q_rel_part_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """3-way join (fact + two dimensions) with per-brand/supplier rollup —
-    exercises multi-join planning; both dimensions broadcast."""
-    li = load_table(spark, sf_dir, "lineitem")
-    part = load_table(spark, sf_dir, "part")
-    supp = load_table(spark, sf_dir, "supplier")
-    return (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
-        .groupBy("p_brand", "s_name")
-        .agg(
-            F.sum(_dec("l_quantity")).cast("double").alias("volume"),
-            F.count("*").alias("n_lines"),
-        )
-    )
-
-
-ORACLE_REL_PART_SUPPLIER = """SELECT p_brand, s_name,
-  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS volume,
-  COUNT(*) AS n_lines
-FROM lineitem
-JOIN part ON l_partkey = p_partkey
-JOIN supplier ON l_suppkey = s_suppkey
-GROUP BY p_brand, s_name"""
-
-
-def q_rel_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3 shape: selective dimension filter broadcast into the
-    fact-fact join, date predicates pushed to both scans, exact decimal
-    revenue, top-10 via TakeOrderedAndProject. The canonical 'big join
-    whose small side must broadcast and whose sort must not be global'."""
-    cust = load_table(spark, sf_dir, "customer").filter(
-        F.col("c_mktsegment") == "BUILDING"
-    )
-    orders = load_table(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") < F.lit("1998-06-01").cast("timestamp")
-    )
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") > F.lit("1998-06-01").cast("timestamp")
-    )
-    disc_price = _dec("l_extendedprice") * (
-        F.lit(1).cast("decimal(18,2)") - _dec("l_discount")
-    )
-    return (
-        li.join(
-            orders.join(F.broadcast(cust), orders.o_custkey == cust.c_custkey).select(
-                "o_orderkey", "o_orderdate"
-            ),
-            li.l_orderkey == F.col("o_orderkey"),
-        )
-        .groupBy("l_orderkey", "o_orderdate")
-        .agg(F.sum(disc_price).cast("double").alias("revenue"))
-        .orderBy(F.desc("revenue"), F.asc("l_orderkey"))
-        .limit(10)
-    )
-
-
-ORACLE_REL_SHIPPING_PRIORITY = """SELECT l_orderkey, o_orderdate,
-  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-           * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE)
-    AS revenue
-FROM customer
-JOIN orders ON c_custkey = o_custkey
-JOIN lineitem ON l_orderkey = o_orderkey
-WHERE c_mktsegment = 'BUILDING'
-  AND o_orderdate < TIMESTAMP '1998-06-01 00:00:00'
-  AND l_shipdate > TIMESTAMP '1998-06-01 00:00:00'
-GROUP BY l_orderkey, o_orderdate
-ORDER BY revenue DESC, l_orderkey ASC
-LIMIT 10"""
-
-
-def q_rel_cube_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE grouping over (returnflag, linestatus): every subtotal level in
-    one pass — grouping-set coverage the reference lacks entirely."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return li.cube("l_returnflag", "l_linestatus").agg(
-        F.sum(_dec("l_quantity")).cast("double").alias("sum_qty"),
-        F.count("*").alias("n_rows"),
-    )
-
-
-ORACLE_REL_CUBE = """SELECT l_returnflag, l_linestatus,
-  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-  COUNT(*) AS n_rows
-FROM lineitem
-GROUP BY CUBE (l_returnflag, l_linestatus)"""
+from forgettable_spark.sources import load_events
 
 
 def q_funnel_signup_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -207,123 +51,7 @@ SELECT user_id, signup_us,
 FROM per_user WHERE signup_us IS NOT NULL"""
 
 
-def q_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact per-group quantiles of the event value: Spark's `percentile`
-    and DuckDB's `quantile_cont` share the (n-1)·p linear-interpolation
-    definition, so even the interpolated doubles hash-match."""
-    ev = load_events(spark, sf_dir)
-    return ev.groupBy("event_type").agg(
-        F.percentile("value", 0.25).alias("p25"),
-        F.percentile("value", 0.5).alias("p50"),
-        F.percentile("value", 0.9).alias("p90"),
-        F.count("*").alias("n"),
-    )
-
-
-ORACLE_VALUE_QUANTILES = """SELECT event_type,
-  quantile_cont(value, 2.5e-1) AS p25,
-  quantile_cont(value, 5e-1) AS p50,
-  quantile_cont(value, 9e-1) AS p90,
-  COUNT(*) AS n
-FROM events GROUP BY event_type"""
-
-
-def q_profile_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Data-quality profile of the event stream: per event_type row counts,
-    distinct users, null values, and the observed time range — the audit a
-    pipeline runs before trusting a 100 TB drop. Integer-only output."""
-    ev = load_events(spark, sf_dir)
-    return ev.groupBy("event_type").agg(
-        F.count("*").alias("n_rows"),
-        F.countDistinct("user_id").alias("n_users"),
-        F.sum(F.when(F.col("value").isNull(), 1).otherwise(0)).cast("bigint").alias("n_null_value"),
-        F.unix_micros(F.min("ts")).alias("min_ts_us"),
-        F.unix_micros(F.max("ts")).alias("max_ts_us"),
-    )
-
-
-ORACLE_PROFILE_EVENTS = """SELECT event_type,
-  COUNT(*) AS n_rows,
-  COUNT(DISTINCT user_id) AS n_users,
-  CAST(SUM(CASE WHEN value IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null_value,
-  epoch_us(MIN(ts)) AS min_ts_us,
-  epoch_us(MAX(ts)) AS max_ts_us
-FROM events GROUP BY event_type"""
-
-
-def q_orders_without_lineitems(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Left anti join: orders with no lineitem rows — the anti/semi join
-    family over the fact tables (integer-only output)."""
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey").distinct()
-    return (
-        orders.join(li, orders.o_orderkey == li.l_orderkey, "left_anti")
-        .select("o_orderkey", "o_custkey", "o_orderstatus")
-    )
-
-
-# NOT EXISTS, not NOT IN: a NULL l_orderkey would collapse NOT IN to zero
-# rows while the Spark side's left anti join keeps its NULL-safe semantics —
-# NOT EXISTS shares those semantics.
-ORACLE_ORDERS_ANTI = """SELECT o_orderkey, o_custkey, o_orderstatus
-FROM orders o WHERE NOT EXISTS (
-  SELECT 1 FROM lineitem l WHERE l.l_orderkey = o.o_orderkey)"""
-
-
-def q_user_event_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Set operations over user-id sets: signup ∩ purchase, signup \\
-    purchase, click ∪ view — one labeled row per (op, user)."""
-    ev = load_events(spark, sf_dir)
-
-    def users(t: str) -> DataFrame:
-        return ev.filter(F.col("event_type") == t).select("user_id").distinct()
-
-    both = users("signup").intersect(users("purchase")).withColumn("op", F.lit("signup_and_purchase"))
-    only = users("signup").exceptAll(users("purchase")).withColumn("op", F.lit("signup_no_purchase"))
-    either = users("click").union(users("view")).distinct().withColumn("op", F.lit("click_or_view"))
-    return both.unionByName(only).unionByName(either).select("op", "user_id")
-
-
-ORACLE_SET_OPS = """SELECT 'signup_and_purchase' AS op, user_id FROM (
-  SELECT DISTINCT user_id FROM events WHERE event_type = 'signup'
-  INTERSECT
-  SELECT DISTINCT user_id FROM events WHERE event_type = 'purchase')
-UNION ALL
-SELECT 'signup_no_purchase' AS op, user_id FROM (
-  SELECT DISTINCT user_id FROM events WHERE event_type = 'signup'
-  EXCEPT
-  SELECT DISTINCT user_id FROM events WHERE event_type = 'purchase')
-UNION ALL
-SELECT 'click_or_view' AS op, user_id FROM (
-  SELECT DISTINCT user_id FROM events WHERE event_type = 'click'
-  UNION
-  SELECT DISTINCT user_id FROM events WHERE event_type = 'view')"""
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # rel_pricing_summary and rel_top_customers rotated to the secondary
-    # registry in r5 (driver cap): the scan-agg shape of the former is a
-    # sub-shape of rel_cube_summary (same table, same aggregates, CUBE
-    # adds every subtotal level) and the broadcast-join+topk shape of the
-    # latter is covered by rel_shipping_priority + rel_part_supplier_volume.
-    # rel_part_supplier_volume followed mid-r5 (broadcast-join+agg shape
-    # kept green by rel_shipping_priority) to free a driver row for the
-    # NEW media_near_dup operator's debut round.
-    # r6 rotation: value_quantiles, profile_events and user_event_set_ops
-    # (green driver rows r1-r5) moved to the secondary registry so the
-    # never-driver-seen batch_novelty, sample_per_group and
-    # dedup_simhash_capped earn first rows; their window/pivot/set-op
-    # shapes stay hash-verified locally every session. Late r6:
-    # rel_cube_summary (green r1-r5; its scan-agg sub-shape
-    # rel_pricing_summary is already secondary) followed, freeing the
-    # driver row for the NEW decontaminate_fuzzy operator's debut.
-    # r7 rotation: rel_shipping_priority (green driver rows r1-r6; its
-    # broadcast-join+topk shape stays hash-verified in the secondary
-    # registry) freed a driver row for a never-driver-seen promotion.
-    # r8 rotation: orders_without_lineitems (green driver rows r1-r7;
-    # its broadcast anti-join shape stays exercised by the registered
-    # decontaminate) followed to the secondary registry, freeing the
-    # row for a never-driver-seen promotion.
     return {
         "funnel_signup_purchase": q_funnel_signup_purchase,
     }

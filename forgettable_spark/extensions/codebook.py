@@ -1,7 +1,7 @@
 """Trained balanced codebook (k-means IVF) for ANN cell assignment.
 
 The missing piece SCALING.md names twice: fixed quantizers — argmax
-components (``similarity.argmax_bucket``) and sign-LSH signatures
+components and sign-LSH signatures
 (``similarity.signature_cell``) — partition the corpus by a DATA-BLIND
 rule, so real (clustered) embedding sets concentrate into few hot cells
 and the sample-to-cap knob has to throw recall away to bound work. A
@@ -21,8 +21,8 @@ Scale shape (100 TB posture):
   (FAISS trains on ~30-50 vectors per centroid); the corpus itself never
   leaves the executors.
 - **Assignment is row-local codegen-shape expressions**: k dot folds
-  against literal centroid arrays per row, argmax via the same sorted
-  struct-array trick as ``similarity.top_p_buckets`` — no UDF, no
+  against literal centroid arrays per row, argmax via a sorted
+  (−score, index) struct array — no UDF, no
   shuffle, evaluated in the scan stage.
 - **Search is the capped equi-join**: identical to
   ``signature_ann_topk`` — multi-probe = the query's ``n_probes``
@@ -288,7 +288,7 @@ def top_p_centroid_cells(
 ) -> Column:
     """The query's ``n_probes`` nearest centroid indices, nearest first —
     multi-probe IVF over the trained codebook. Sorted (−score, index)
-    structs, same determinism as ``similarity.top_p_buckets``. String
+    structs: ties break on the lower index. String
     input takes the rendered-SQL fast path (see :func:`centroid_cell`)."""
     if isinstance(vec, str):
         return F.expr(top_p_centroid_cells_sql(vec, centroids, n_probes))

@@ -8,12 +8,12 @@ Two paths:
   window rank. Quadratic — correct at any scale but only *affordable*
   when one side is small (which is the common "query batch vs corpus"
   shape: the corpus side streams, the query side broadcasts).
-- **Bucketed ANN (IVF-style)** — the scale path: a deterministic coarse
-  quantizer (argmax |component|) buckets every vector at scan time;
-  queries only search their own bucket. Candidate generation is an
-  equi-join on the bucket id — the n² never materializes, and the bucket
+- **Cell-bucketed ANN (IVF-style)** — the scale path: a deterministic
+  sign-LSH cell (:func:`signature_cell`) buckets every vector at scan
+  time; queries only search their own cell. Candidate generation is an
+  equi-join on the cell id — the n² never materializes, and the cell
   join co-partitions corpus and queries. Recall is approximate;
-  ``n_probes`` can widen the search (top-p argmax buckets).
+  ``n_flip`` one-bit-flip probes widen the search.
 
 Determinism: dot products are sequential left-to-right double folds —
 bit-identical between Spark's ``aggregate`` and DuckDB's
@@ -106,183 +106,6 @@ def brute_force_topk(
     )
 
 
-def argmax_bucket(vec: Column) -> Column:
-    """Deterministic coarse quantizer: 1-based index of the largest
-    |component|. ``array_position`` takes the first occurrence on ties in
-    both engines (oracle: ``list_position``)."""
-    absv = F.transform(vec, lambda x: F.abs(x))
-    return F.array_position(absv, F.array_max(absv)).cast("bigint")
-
-
-def top_p_buckets(vec: Column, n_probes: int) -> Column:
-    """1-based indices of the ``n_probes`` largest |components| — the
-    multi-probe list for IVF-style search. Implemented with a sorted
-    (|value| desc, index asc) struct array so ties are deterministic."""
-    absv = F.transform(vec, lambda x: F.abs(x))
-    indexed = F.transform(
-        F.sequence(F.lit(1), F.size(absv)),
-        lambda i: F.struct(
-            (-F.element_at(absv, i)).alias("neg"), i.cast("bigint").alias("idx")
-        ),
-    )
-    return F.slice(
-        F.transform(F.array_sort(indexed), lambda s: s["idx"]), 1, n_probes
-    )
-
-
-def bucketed_ann_corpus_side(
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_bucket_size: int | None = None,
-    log_dropped: bool = True,
-) -> DataFrame:
-    """The corpus side of :func:`bucketed_ann_topk` — float vectors,
-    argmax bucket, cap, per-vector norm — split out so a multi-probe
-    sweep can build (and cache) it once."""
-    from forgettable_spark.extensions.dedup import cap_hot_buckets
-
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        as_double(vec_col).alias("_cv"),
-    ).withColumn("bucket", argmax_bucket(F.col("_cv")))
-    c = cap_hot_buckets(c, ["bucket"], max_bucket_size, "bucketed_ann_topk", log_dropped)
-    # per-vector norms before the join (brute_force_topk's rationale)
-    return c.withColumn("_cn", norm("_cv"))
-
-
-def bucketed_ann_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_probes: int = 1,
-    max_bucket_size: int | None = None,
-    log_dropped: bool = True,
-    corpus_side: DataFrame | None = None,
-) -> DataFrame:
-    """IVF-style approximate top-k: search the query's ``n_probes`` best
-    coarse buckets (corpus vectors are indexed under their single argmax
-    bucket, the standard IVF shape).
-
-    Same output shape as :func:`brute_force_topk`; recall < 1 by design
-    and rises with ``n_probes``. The equi-join on ``bucket`` is the whole
-    trick: corpus and queries hash-partition by bucket id, each task
-    scores one bucket's candidates, and cost drops from |Q|·|C| to
-    ``n_probes · Σ_b |Q_b|·|C_b|``. ``max_bucket_size`` excludes corpus
-    buckets larger than the cap (logged, not silent — see
-    :func:`forgettable_spark.extensions.dedup.cap_hot_buckets`): a
-    degenerate quantizer cell holding half the corpus would otherwise
-    drag every query probing it back to brute-force cost.
-
-    ``corpus_side``: a caller sweeping several ``n_probes`` settings
-    (the recall gauge) passes :func:`bucketed_ann_corpus_side`'s frame
-    once — typically scope-cached — instead of re-bucketing and
-    re-norming the whole corpus per setting; probes shape the QUERY
-    side only, so results are bit-equal to the self-built path."""
-    if corpus_side is not None:
-        c = corpus_side
-    else:
-        c = bucketed_ann_corpus_side(
-            corpus, id_col, vec_col, max_bucket_size, log_dropped
-        )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        as_double(vec_col).alias("_qv"),
-    ).withColumn("_qn", norm("_qv"))
-    if n_probes <= 1:
-        q = q.withColumn("bucket", argmax_bucket(F.col("_qv")))
-    else:
-        q = q.withColumn(
-            "bucket", F.explode(top_p_buckets(F.col("_qv"), n_probes))
-        )
-    scored = (
-        q.join(c, "bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine",
-            dot("_qv", "_cv") / (F.col("_qn") * F.col("_cn")),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
-
-
-def embedding_near_dup_pairs(
-    corpus: DataFrame,
-    threshold: float = 0.99,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_bucket_size: int | None = None,
-    log_dropped: bool = True,
-    persist: bool = True,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs: (id_a, id_b, cosine) with
-    cosine >= threshold, id_a < id_b, candidates bucketed by a TWO-LEVEL
-    coarse quantizer: the cell is the *sorted* pair of top-2 |component|
-    indices. Near-identical vectors share their two dominant components
-    (sorting makes the cell invariant to a rank swap between them); the
-    residual recall trade — components 2 and 3 in a near-tie — is the
-    same family as IVF ``n_probes`` and is why the sign-LSH variant
-    (:func:`hyperplane_near_dup_pairs`) exists as the high-recall path.
-
-    Why two levels: the single-argmax cell made the self-join
-    O(Σ_cell |cell|²) over only ``dim`` cells, which grows quadratically
-    when the corpus grows uniformly — measured 98× time at 10× rows
-    (SCALING.md sf1 table). ``dim·(dim−1)/2`` sorted-pair cells keep
-    per-cell population — and the pair join — ~O(corpus) under uniform
-    growth; ``max_bucket_size`` still caps genuinely hot cells
-    (dominant-component skew in real embedding sets; logged drop).
-
-    Verification is norm-once: each row carries its scalar L2 norm, so a
-    candidate pair costs ONE dot fold plus a division — not dot+2 norms.
-    (An earlier draft materialized unit vectors instead; the per-element
-    division lambda re-inlines through projection collapse and tripled
-    the row-local cost — scalars don't.) The capped projection is
-    scope-cached (``persist``) because three plan branches consume it:
-    the cap's window count and both self-join sides."""
-    from forgettable_spark.extensions.dedup import cap_hot_buckets
-
-    cells = F.array_sort(top_p_buckets(F.col("_v"), 2))
-    v = (
-        corpus.select(F.col(id_col), as_double(vec_col).alias("_v"))
-        .withColumn("_n", norm("_v"))
-        .withColumn("_c1", F.element_at(cells, 1))
-        .withColumn("_c2", F.element_at(cells, 2))
-    )
-    v = cap_hot_buckets(
-        v, ["_c1", "_c2"], max_bucket_size, "embedding_near_dup_pairs", log_dropped
-    )
-    if persist:
-        from forgettable_spark.functions.cache import scoped_cache
-
-        v = scoped_cache(v)
-    a = v.alias("a")
-    b = v.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a._c1") == F.col("b._c1"))
-            & (F.col("a._c2") == F.col("b._c2"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .withColumn(
-            "cosine", dot("a._v", "b._v") / (F.col("a._n") * F.col("b._n"))
-        )
-        .filter(F.col("cosine") >= threshold)
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            "cosine",
-        )
-    )
-
-
 # --- int8 quantization ---------------------------------------------------
 
 #: Symmetric int8 range: q ∈ [−127, 127] (−128 unused, symmetric).
@@ -369,113 +192,6 @@ def int_dot(a: Column | str, b: Column | str) -> Column:
         F.zip_with(a, b, lambda x, y: (x * y).cast("bigint")),
         F.lit(0).cast("bigint"),
         lambda acc, x: acc + x,
-    )
-
-
-def quantized_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Cosine top-k over int8-quantized vectors: the reduced-precision
-    twin of :func:`brute_force_topk` for measuring what 4× less vector
-    I/O costs in ranking quality. Returns (query_id, neighbor_id,
-    cosine_q, rank) where ``cosine_q = (s_a·s_b·Σq_a q_b)/(‖a‖·‖b‖)`` —
-    the integer dot reconstructed through both scale factors and the
-    exact norms. The only float steps are four scalar multiplies/divides
-    per pair in a fixed order, so scores are bit-identical cross-engine;
-    ties break on neighbor_id.
-    """
-    c = with_quantization(corpus, vec_col, "_cs", "_cq").select(
-        F.col(id_col).alias("neighbor_id"),
-        "_cs",
-        "_cq",
-        norm(_as_double_expr_sql(vec_col)).alias("_cn"),
-    )
-    q = with_quantization(queries, vec_col, "_qs", "_qq").select(
-        F.col(id_col).alias("query_id"),
-        "_qs",
-        "_qq",
-        norm(_as_double_expr_sql(vec_col)).alias("_qn"),
-    )
-    scored = (
-        q.crossJoin(c)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine_q",
-            (F.col("_qs") * F.col("_cs") * int_dot("_qq", "_cq").cast("double"))
-            / (F.col("_qn") * F.col("_cn")),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_q"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_q", "rank")
-    )
-
-
-def quantized_bucketed_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_probes: int = 1,
-    max_bucket_size: int | None = None,
-    log_dropped: bool = True,
-) -> DataFrame:
-    """IVF-style approximate top-k scored on int8 codes — the full
-    100 TB shape: the coarse quantizer bounds WHO gets scored (bucket
-    equi-join, cost ``n_probes · Σ_b |Q_b|·|C_b|``) and int8 quantization
-    bounds the BYTES that ride the join (codes + one scale + one norm per
-    vector, ~4× less than the float vectors). Buckets are assigned from
-    the original floats (quantization only affects scoring), so the
-    candidate set is identical to :func:`bucketed_ann_topk`; scores are
-    the reconstructed ``(s_a·s_b·Σq_a q_b)/(‖a‖·‖b‖)``, exact integers
-    under any order plus four fixed-order scalar float steps —
-    bit-identical cross-engine. Returns (query_id, neighbor_id,
-    cosine_q, rank)."""
-    from forgettable_spark.extensions.dedup import cap_hot_buckets
-
-    v = as_double(F.col(vec_col))
-    c = with_quantization(corpus, vec_col, "_cs", "_cq").select(
-        F.col(id_col).alias("neighbor_id"),
-        "_cs",
-        "_cq",
-        norm(_as_double_expr_sql(vec_col)).alias("_cn"),
-        argmax_bucket(v).alias("bucket"),
-    )
-    c = cap_hot_buckets(c, ["bucket"], max_bucket_size, "quantized_bucketed_topk", log_dropped)
-    q = with_quantization(queries, vec_col, "_qs", "_qq").select(
-        F.col(id_col).alias("query_id"),
-        "_qs",
-        "_qq",
-        norm(_as_double_expr_sql(vec_col)).alias("_qn"),
-        v.alias("_qv"),
-    )
-    if n_probes <= 1:
-        q = q.withColumn("bucket", argmax_bucket(F.col("_qv"))).drop("_qv")
-    else:
-        q = q.withColumn(
-            "bucket", F.explode(top_p_buckets(F.col("_qv"), n_probes))
-        ).drop("_qv")
-    scored = (
-        q.join(c, "bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine_q",
-            (F.col("_qs") * F.col("_cs") * int_dot("_qq", "_cq").cast("double"))
-            / (F.col("_qn") * F.col("_cn")),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_q"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_q", "rank")
     )
 
 
@@ -657,10 +373,10 @@ def signature_cell(
     positions are unchanged, only the hyperplanes drawn differ.
 
     This is the IVF cell whose COUNT scales with the corpus — the knob
-    :func:`argmax_bucket` lacks. argmax cells are capped at ``dim``
-    (64 here), so when both the corpus and a corpus-proportional query
-    set grow ×s, every cell gets ×s hotter and the bucket join does
-    ×s² work — measured 8.2× wall for 3× rows on the sf3 validation
+    an argmax-|component| quantizer lacks: its cells are capped at
+    ``dim`` (64 here), so when both the corpus and a corpus-proportional
+    query set grow ×s, every cell gets ×s hotter and the bucket join
+    does ×s² work — measured 8.2× wall for 3× rows on the sf3 validation
     corpus (SCALING.md). Sign-LSH cells number 2^n_bits: sizing
     ``n_bits ≈ log2(corpus / target_cell_size)`` holds per-cell
     occupancy constant as the corpus grows (the classic LSH answer;
@@ -718,12 +434,11 @@ def signature_ann_topk(
     log_dropped: bool = True,
 ) -> DataFrame:
     """Approximate top-k over sign-LSH cells — the corpus-scalable IVF
-    variant of :func:`bucketed_ann_topk` (see :func:`signature_cell` for
-    why cell count must scale).
+    search (see :func:`signature_cell` for why cell count must scale).
 
     Multi-probe is the standard LSH form: each query searches its exact
     cell plus the ``n_flip`` cells at Hamming distance 1 (bits 0..n_flip-1
-    flipped) — the analogue of :func:`top_p_buckets`' second-best cells.
+    flipped) — the analogue of IVF's second-best-cell probes.
     Join cost is ``(n_flip+1) · Σ_cell |Q_cell|·|C_cell|`` with per-cell
     occupancy held constant by the ``n_bits`` sizing rule.
 
@@ -834,8 +549,8 @@ def quantized_signature_topk(
     — :func:`signature_ann_topk`) and int8 quantization bounds the BYTES
     that ride the join (codes + scale + norm, ~4× less than floats, and
     integer dots are order-independent codegen —
-    :func:`quantized_bucketed_topk`). Returns (query_id, neighbor_id,
-    cosine_q, rank); candidate set identical to
+    :func:`with_quantization`, :func:`int_dot`). Returns (query_id,
+    neighbor_id, cosine_q, rank); candidate set identical to
     :func:`signature_ann_topk` at the same (n_bits, n_flip, cap) since
     cells are assigned from the original floats.
 
@@ -992,11 +707,10 @@ def hyperplane_near_dup_pairs(
     - the signature table feeds three plan branches (band explode and
       both vector join-backs), so it is cached.
 
-    Complements the IVF path (:func:`embedding_near_dup_pairs`):
-    sign-LSH buckets by direction against fixed hyperplanes, IVF by
-    dominant component. Sign-LSH's sweet spot is high-cosine dedup
-    (per-bit agreement → 1 makes bands selective AND recall total); at
-    moderate cosine its band buckets fatten — hence the cap.
+    Sign-LSH buckets by direction against fixed hyperplanes. Its sweet
+    spot is high-cosine dedup (per-bit agreement → 1 makes bands
+    selective AND recall total); at moderate cosine its band buckets
+    fatten — hence the cap.
     """
     from forgettable_spark.extensions.dedup import cap_hot_buckets
 

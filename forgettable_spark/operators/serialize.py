@@ -1,10 +1,10 @@
 """API-edge serialization (reference op S1).
 
-The reference wraps every response ``{status_code, status_txt, data}`` and
-serializes a distribution as ``{distribution, Z, T, data: [{bin, count,
-p}…], rate, prune}`` (``goforget/http_utils.go:10-46``,
-``goforget/distribution.go:18-40``). Engine-internal results stay
-DataFrames; this adapter produces the JSON shape only at the edge.
+The reference serializes a distribution as ``{distribution, Z, T, data:
+[{bin, count, p}…], rate, prune}`` (``goforget/distribution.go:18-40``).
+Engine-internal results stay DataFrames; this adapter produces the JSON
+shape only at the edge. The HTTP response envelope ``{status_code,
+status_txt, data}`` belongs to :mod:`forgettable_spark.server`.
 """
 
 from __future__ import annotations
@@ -18,16 +18,12 @@ def to_json_payload(
     rate: float,
     prune: bool,
     now_us: int,
-    envelope: bool = False,
 ) -> DataFrame:
     """Collapse a (distribution, bin, count, Z, p) result to one JSON row
     per distribution, matching the reference payload field-for-field.
 
     ``T`` is the evaluation instant (unix seconds, as in the reference);
     bins sort by (count desc, bin asc) inside the array for determinism.
-    ``envelope=True`` additionally wraps the object in the reference's
-    HTTP response envelope ``{status_code, status_txt, data}``
-    (``goforget/http_utils.go:10-15``).
     """
     data_struct = F.struct(F.col("bin"), F.col("count"), F.col("p"))
     per_dist = result.groupBy("distribution").agg(
@@ -44,10 +40,4 @@ def to_json_payload(
         F.lit(rate).alias("rate"),
         F.lit(prune).alias("prune"),
     )
-    if envelope:
-        body = F.struct(
-            F.lit(200).alias("status_code"),
-            F.lit("OK").alias("status_txt"),
-            body.alias("data"),
-        )
     return per_dist.select(F.to_json(body).alias("json"))

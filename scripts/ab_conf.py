@@ -53,7 +53,17 @@ def run_side(names, extra):
 
 def main() -> None:
     names = sys.argv[1:]
-    kv = os.environ["AB_CONF"].split("=", 1)
+    ab_conf = os.environ.get("AB_CONF", "")
+    if "=" not in ab_conf:
+        raise SystemExit(f"AB_CONF must be key=value, got {ab_conf!r}")
+    from forgettable_spark import entrypoints as ep
+
+    if not names:
+        raise SystemExit("usage: AB_CONF=key=value ab_conf.py QUERY [QUERY ...]")
+    unknown = sorted(set(names) - set(ep.queries()))
+    if unknown:
+        raise SystemExit(f"not registered queries: {unknown}")
+    kv = ab_conf.split("=", 1)
     base = run_side(names, {})
     # fresh JVM for the B side
     import subprocess, json

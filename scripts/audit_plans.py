@@ -17,6 +17,12 @@ tests/test_plans.py asserts the load-bearing cases; this script makes
 the full surface inspectable at a glance and regenerates on demand:
 
     python scripts/audit_plans.py          # writes PLANS.md
+
+Dump mode writes each driver-registered query's full formatted plan to
+plans/<ROUND>/<query>_<TAG>.txt (before/after evidence for a plan-shape
+claim; corpus sf0.1 unless SPARK_GRAFT_SF_DIR is set):
+
+    python scripts/audit_plans.py --dump r14 before [query ...]
 """
 
 from __future__ import annotations
@@ -27,7 +33,11 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
+DUMP_SF_DIR = os.environ.get(
+    "SPARK_GRAFT_SF_DIR", os.path.join(os.path.dirname(SF_DIR), "sf0.1")
+)
 
 
 def _formatted_plan(df) -> str:
@@ -176,9 +186,46 @@ def summarize(plan: str) -> dict:
     }
 
 
+def dump(spark, round_name: str, tag: str, names: set[str]) -> None:
+    """Write plans/<round_name>/<query>_<tag>.txt for every registered
+    query (or just ``names``), built in plan-audit mode."""
+    from forgettable_spark import entrypoints as ep
+    from forgettable_spark.functions.cache import plan_audit_mode
+
+    out_dir = os.path.join(REPO, "plans", round_name)
+    os.makedirs(out_dir, exist_ok=True)
+    for name, fn in sorted(ep.queries().items()):
+        if names and name not in names:
+            continue
+        try:
+            with plan_audit_mode():
+                plan = _formatted_plan(fn(spark, DUMP_SF_DIR))
+        except Exception as ex:  # noqa: BLE001 — record the failure, keep going
+            plan = f"PLAN FAILED: {ex!r}"
+        path = os.path.join(out_dir, f"{name}_{tag}.txt")
+        with open(path, "w") as fh:
+            fh.write(plan)
+        print(name, "->", path, flush=True)
+
+
 def main() -> None:
     from forgettable_spark.session import get_spark
     from forgettable_spark import entrypoints as ep
+
+    args = sys.argv[1:]
+    if args and args[0] == "--dump":
+        if len(args) < 3:
+            sys.exit("usage: audit_plans.py --dump ROUND TAG [query ...]")
+        spark = get_spark(
+            app_name="dump-plans",
+            master="local[8]",
+            shuffle_partitions=8,
+            extra_conf={"spark.ui.enabled": "false"},
+        )
+        spark.sparkContext.setLogLevel("ERROR")
+        dump(spark, args[1], args[2], set(args[3:]))
+        spark.stop()
+        return
 
     spark = get_spark(
         app_name="plan-audit",
@@ -197,7 +244,10 @@ def main() -> None:
 
     sections = [
         ("Primary registry", ep.queries()),
-        ("Secondary registry", ep.secondary_queries()),
+        (
+            "Secondary registry (oracle-checked locally, not driver-registered)",
+            ep.secondary_queries(),
+        ),
     ]
     out = [
         "# PLANS — physical-plan audit of every registered query\n",
@@ -259,7 +309,7 @@ def main() -> None:
                 f"{notes} |\n"
             )
     spark.catalog.clearCache()
-    with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"), "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.writelines(out)
     print("wrote PLANS.md")
     spark.stop()

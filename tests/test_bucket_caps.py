@@ -1,7 +1,7 @@
-"""Hot-bucket cap: the skew guard on LSH / SimHash / IVF candidate joins.
+"""Hot-bucket cap: the skew guard on LSH / SimHash candidate joins.
 
 A boilerplate-heavy corpus can put a huge slice of the documents under one
-band key (or byte block, or quantizer cell); the cap excludes such buckets
+band key (or byte block); the cap excludes such buckets
 from candidate generation — bounded work, logged drop — instead of letting
 one bucket square into the candidate join.
 """
@@ -12,7 +12,7 @@ import logging
 
 from pyspark.sql import functions as F
 
-from forgettable_spark.extensions import dedup, similarity
+from forgettable_spark.extensions import dedup
 
 
 def _boilerplate_docs(spark, n_hot=40, n_normal=6):
@@ -75,22 +75,6 @@ def test_cap_none_is_identity(spark):
     a = dedup.simhash_pairs(docs, persist=False).collect()
     b = dedup.simhash_pairs(docs, persist=False, max_bucket_size=None).collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-
-
-def test_ivf_cap_drops_degenerate_bucket(spark, caplog):
-    """All-hot-bucket corpus: vectors sharing one argmax component land in
-    one quantizer cell; the cap removes them from the searchable corpus."""
-    vecs = spark.range(30).select(
-        F.col("id").alias("vec_id"),
-        F.array(F.lit(1.0), (F.col("id") % 3).cast("double") / 10.0).alias("embedding"),
-    )
-    queries = vecs.filter(F.col("vec_id") < 2)
-    dedup._PENDING_REPORTS.clear()
-    with caplog.at_level(logging.WARNING, logger="forgettable_spark.extensions"):
-        out = similarity.bucketed_ann_topk(vecs, queries, k=5, max_bucket_size=10)
-        assert out.count() == 0  # the only cell is hot -> nothing searchable
-        dedup.flush_bucket_reports()
-    assert any("bucketed_ann_topk" in rec.message for rec in caplog.records)
 
 
 def test_cap_agg_variant_matches_window_variant(spark, caplog):

@@ -23,9 +23,7 @@ CACHING_QUERIES = [
     "dedup_canonicalize",
     "semantic_dedup_two_level",
     "semantic_admit",
-    "embedding_near_dup",
     "embedding_near_dup_hyperplane",
-    "ann_recall",
     "bm25_search",
 ]
 

@@ -146,9 +146,3 @@ def test_json_payload(snap):
     assert doc["T"] == NOW_US // 1_000_000
     assert [d["bin"] for d in doc["data"]] == ["red", "blue"]  # count desc
     assert doc["rate"] == RATE and doc["prune"] is True
-
-    # reference HTTP envelope (goforget/http_utils.go:10-15)
-    wrapped = ops.to_json_payload(out, rate=RATE, prune=True, now_us=NOW_US, envelope=True).collect()
-    env = json.loads(wrapped[0]["json"])
-    assert env["status_code"] == 200 and env["status_txt"] == "OK"
-    assert env["data"]["distribution"] == "colors"

@@ -161,17 +161,6 @@ def test_whole_stage_codegen_covers_decay(spark):
         assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_relational_joins_broadcast_dimensions(spark):
-    """Dimension tables must broadcast — a shuffle join on a 100 TB fact
-    side for a kB-scale dimension is the classic scale failure."""
-    for name in ("rel_top_customers", "rel_part_supplier_volume"):
-        df = {**ep.queries(), **ep.secondary_queries()}[name](spark, SF_SMOKE)
-        df.collect()
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" in plan, f"{name} did not broadcast:\n{plan[:500]}"
-        assert "SortMergeJoin" not in plan
-
-
 def test_poisson_mode_uses_arrow_udf(spark):
     """Stochastic mode is the explicit exception: exactly one Arrow-batched
     Python stage, never row-at-a-time."""

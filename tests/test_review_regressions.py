@@ -107,6 +107,33 @@ def test_fuzzy_decontaminate_accepts_custom_id_col(spark):
     assert rows[0]["jaccard"] == 1.0
 
 
+def test_spread_gate_reads_byte_conf_as_spark_does(spark):
+    """The small-scan spread reads spark.sql.files.maxPartitionBytes
+    through Spark's own byte parser: a bare "b" suffix on a plain byte
+    count ("268435456b") used to raise ValueError in a hand-rolled
+    parser and silently turn the spread off."""
+    from forgettable_spark.entrypoints_ext import (
+        _EMB_ROWS_PER_SPREAD_PARTITION,
+        _spread_parts,
+    )
+    from tests.conftest import SF_SMOKE
+
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    counts = []
+    try:
+        for value in ("268435456b", "256m"):
+            spark.conf.set(key, value)
+            counts.append(
+                _spread_parts(
+                    spark, SF_SMOKE, "embeddings", _EMB_ROWS_PER_SPREAD_PARTITION, {}
+                )
+            )
+    finally:
+        spark.conf.set(key, old)
+    assert counts[0] == counts[1] > 0
+
+
 def test_kmeans_oracle_degrades_to_omission_without_corpus():
     """ADVICE r6: an oracle_sql() fetch against an environment lacking
     the corpus must omit ann_kmeans_topk (rows-only check) instead of

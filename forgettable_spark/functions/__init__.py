@@ -3,11 +3,8 @@
 from forgettable_spark.functions.decay import (
     GOFORGET_DEFAULT_RATE,
     PYFORGET_DEFAULT_RATE,
-    dt_seconds,
-    expected_decay_linear,
-    expected_decay_proportional,
-    decayed_count,
-    poisson_decayed_count,
+    decayed_count_sql,
+    dt_sql,
 )
 from forgettable_spark.functions.normalize import with_z_and_p
 from forgettable_spark.functions.expiry import expiry_horizon_seconds, DEFAULT_SIGMA
@@ -15,11 +12,8 @@ from forgettable_spark.functions.expiry import expiry_horizon_seconds, DEFAULT_S
 __all__ = [
     "GOFORGET_DEFAULT_RATE",
     "PYFORGET_DEFAULT_RATE",
-    "dt_seconds",
-    "expected_decay_linear",
-    "expected_decay_proportional",
-    "decayed_count",
-    "poisson_decayed_count",
+    "decayed_count_sql",
+    "dt_sql",
     "with_z_and_p",
     "expiry_horizon_seconds",
     "DEFAULT_SIGMA",

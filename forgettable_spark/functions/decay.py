@@ -9,9 +9,11 @@ prune mode or 1 otherwise (``goforget/distribution.go:153-175``).
 Two engine modes:
 
 - ``expected`` (deterministic, default): replace the draw by its
-  expectation, as a pure Catalyst column expression — whole-stage-codegen
-  friendly and hash-matchable against a SQL oracle. The linear law's
-  wipe-threshold behavior (λ ≳ 18.4 nukes the bin, ``goforget/decay.go:
+  expectation, rendered once as Spark SQL expression text
+  (:func:`decayed_count_sql`) — whole-stage-codegen friendly,
+  hash-matchable against a SQL oracle, and cheap to plan: a read parses
+  one string instead of building a Column tree call by call over py4j.
+  The linear law's wipe-threshold behavior (λ ≳ 18.4 nukes the bin, ``goforget/decay.go:
   17-19``) emerges naturally: ``count - floor(rate*dt)`` reaches the clamp
   for any idle distribution.
 - ``poisson`` (stochastic, faithful): a seeded vectorized pandas UDF in
@@ -27,8 +29,7 @@ both engines, so ``floor`` can never disagree.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+import math
 
 #: goforget ``--default-rate`` (events/sec) — goforget/forget.go:22.
 GOFORGET_DEFAULT_RATE = 0.5
@@ -36,42 +37,42 @@ GOFORGET_DEFAULT_RATE = 0.5
 PYFORGET_DEFAULT_RATE = 0.02
 
 
-def dt_seconds(t: Column, now_us: Column) -> Column:
-    """Elapsed seconds between a timestamp column and ``now`` (epoch µs).
+def _double_sql(x: float) -> str:
+    """``x`` as a Spark SQL DOUBLE that parses back to the same bits.
 
-    DOUBLE, computed as ``(now_us - unix_micros(t)) / 1e6`` — exactly the
-    oracle's ``(now_us - epoch_us(t)) / 1000000.0``.
+    ``repr`` round-trips every finite double; the ``D`` suffix makes it a
+    DOUBLE literal, not a DECIMAL. Spark has no literal for a non-finite
+    double (the HTTP edge accepts ``rate=inf`` and ``rate=nan``), so
+    those go through the string cast Spark defines for them.
     """
-    return (now_us - F.unix_micros(t)).cast("double") / F.lit(1e6)
+    x = float(x)
+    return f"{x!r}D" if math.isfinite(x) else f"CAST('{x!r}' AS DOUBLE)"
 
 
-def expected_decay_linear(rate: float, dt_sec: Column) -> Column:
-    """E[decay] under the goforget law: ``floor(rate * dt)`` (BIGINT).
+def dt_sql(now_us: int) -> str:
+    """Elapsed seconds between column ``t`` and ``now`` (epoch µs), DOUBLE.
 
-    Count-independent — every bin of a distribution loses the same amount
-    per elapsed interval (``goforget/decay.go:47``: ``lambda = rate*dt``).
+    ``(now_us - unix_micros(t)) / 1e6`` — exactly the oracle's
+    ``(now_us - epoch_us(t)) / 1e6``.
     """
-    return F.floor(F.lit(float(rate)) * dt_sec)
+    return f"CAST({int(now_us)}L - unix_micros(t) AS DOUBLE) / 1000000.0D"
 
 
-def expected_decay_proportional(rate: float, dt_sec: Column, count: Column) -> Column:
-    """E[decay] under the pyforget law: ``floor(count * rate * dt)`` (BIGINT).
-
-    Proportional to mass (``pyforget/distribution.py:29``:
-    ``lambda_i = count_i * rate * dt``) — exponential decay in expectation.
-    """
-    return F.floor(count.cast("double") * F.lit(float(rate)) * dt_sec)
-
-
-def decayed_count(
-    count: Column,
-    t: Column,
-    now_us: Column,
+def decayed_count_sql(
+    now_us: int,
     rate: float,
     prune: bool = True,
     law: str = "linear",
-) -> Column:
-    """Post-decay count (BIGINT) in deterministic ``expected`` mode.
+) -> str:
+    """Post-decay ``count`` (BIGINT) in deterministic ``expected`` mode,
+    as SQL text over the snapshot columns ``count`` and ``t``.
+
+    E[decay] is ``floor(rate * dt)`` under the goforget law —
+    count-independent, every bin of a distribution loses the same amount
+    (``goforget/decay.go:47``: ``lambda = rate*dt``) — and
+    ``floor(count * rate * dt)`` under the pyforget law, proportional to
+    mass (``pyforget/distribution.py:29``: ``lambda_i = count_i * rate *
+    dt``), i.e. exponential decay in expectation.
 
     Clamp semantics (``goforget/distribution.go:158-164``): prune mode
     floors at 0 (the caller drops zero bins, reference ``ZREM``); non-prune
@@ -88,45 +89,12 @@ def decayed_count(
     non-positive count in a raw event log passes through unchanged instead
     of being inflated to the floor (the stochastic sampler agrees).
     """
-    dt = F.greatest(dt_seconds(t, now_us), F.lit(0.0))
+    dt = f"GREATEST({dt_sql(now_us)}, 0.0D)"
     if law == "linear":
-        k = expected_decay_linear(rate, dt)
+        k = f"FLOOR({_double_sql(rate)} * {dt})"
     elif law == "proportional":
-        k = expected_decay_proportional(rate, dt, count)
+        k = f"FLOOR(CAST(count AS DOUBLE) * {_double_sql(rate)} * {dt})"
     else:
         raise ValueError(f"unknown decay law: {law!r} (want 'linear' or 'proportional')")
-    floor_at = F.lit(0).cast("bigint") if prune else F.lit(1).cast("bigint")
-    return (
-        F.when(count < 1, count).otherwise(F.greatest(count - k, floor_at)).alias("count")
-    )
-
-
-def poisson_decayed_count(
-    count: Column,
-    t: Column,
-    now_us: Column,
-    rate: float,
-    prune: bool = True,
-    law: str = "linear",
-    seed: int = 0,
-    distribution: Column | None = None,
-    bin: Column | None = None,
-) -> Column:
-    """Post-decay count in faithful stochastic mode (seeded Poisson draw).
-
-    Thin re-export; see :func:`forgettable_spark.functions.sampling.
-    poisson_decay_column` for the sampler contract.
-    """
-    from forgettable_spark.functions.sampling import poisson_decay_column
-
-    return poisson_decay_column(
-        count=count,
-        t=t,
-        now_us=now_us,
-        rate=rate,
-        prune=prune,
-        law=law,
-        seed=seed,
-        distribution=distribution,
-        bin=bin,
-    )
+    floor_at = "0L" if prune else "1L"
+    return f"CASE WHEN count < 1 THEN count ELSE GREATEST(count - {k}, {floor_at}) END"

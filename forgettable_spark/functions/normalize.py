@@ -8,17 +8,17 @@ invariant ``Z = Σ counts`` by construction (SURVEY.md §2.3 item 6).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: ``Z``: per-distribution sum of ``count`` (BIGINT), as a window.
+Z_SQL = "SUM(count) OVER (PARTITION BY distribution)"
+#: ``p``: ``count / Z`` (DOUBLE), 0.0 for an empty distribution.
+P_SQL = "CASE WHEN Z = 0 THEN 0.0D ELSE CAST(count AS DOUBLE) / CAST(Z AS DOUBLE) END"
 
-def with_z_and_p(
-    df: DataFrame,
-    count_col: str = "count",
-    dist_col: str = "distribution",
-    strategy: str = "window",
-) -> DataFrame:
-    """Add ``Z`` (BIGINT, per-distribution sum) and ``p`` (DOUBLE) columns.
+
+def with_z_and_p(df: DataFrame, strategy: str = "window") -> DataFrame:
+    """Add ``Z`` and ``p`` columns over ``(distribution, count)``.
 
     Two physically different, result-identical strategies:
 
@@ -35,16 +35,10 @@ def with_z_and_p(
       plan for 100 TB with power-law distribution sizes.
     """
     if strategy == "window":
-        w = Window.partitionBy(dist_col)
-        df = df.withColumn("Z", F.sum(F.col(count_col)).over(w).alias("Z"))
+        df = df.withColumn("Z", F.expr(Z_SQL))
     elif strategy == "join":
-        totals = df.groupBy(dist_col).agg(F.sum(F.col(count_col)).alias("Z"))
-        df = df.join(totals, dist_col)
+        totals = df.groupBy("distribution").agg(F.sum("count").alias("Z"))
+        df = df.join(totals, "distribution")
     else:
         raise ValueError(f"unknown normalize strategy: {strategy!r} (want 'window' or 'join')")
-    p = (
-        F.when(F.col("Z") == 0, F.lit(0.0))
-        .otherwise(F.col(count_col).cast("double") / F.col("Z").cast("double"))
-        .alias("p")
-    )
-    return df.withColumn("p", p)
+    return df.withColumn("p", F.expr(P_SQL))

@@ -35,7 +35,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
-from forgettable_spark.functions.decay import dt_seconds
+from forgettable_spark.functions.decay import dt_sql
 
 #: Reference wipe guard: pmf start e^-λ below this → treat the bin as fully
 #: decayed (goforget/decay.go:17-19 returns MaxInt32).
@@ -150,25 +150,19 @@ def make_poisson_decay_udf(rate: float, prune: bool, law: str):
 
 
 def poisson_decay_column(
-    count: Column,
-    t: Column,
-    now_us: int | Column,
+    now_us: int,
     rate: float,
     prune: bool = True,
     law: str = "linear",
     seed: int = 0,
-    distribution: Column | None = None,
-    bin: Column | None = None,
 ) -> Column:
-    """Post-decay count (BIGINT) under seeded stochastic Poisson decay.
+    """Post-decay ``count`` (BIGINT) of a snapshot row under seeded
+    stochastic Poisson decay.
 
-    Drop-in replacement for :func:`forgettable_spark.functions.decay.
-    decayed_count`; composes with the same prune filter / normalize /
-    top-N operators.
+    The stochastic twin of :func:`forgettable_spark.functions.decay.
+    decayed_count_sql`, over the same columns and the same ``dt``;
+    composes with the same prune filter / normalize / top-N operators.
     """
-    now_col = F.lit(now_us).cast("bigint") if isinstance(now_us, int) else now_us
-    dist_col = distribution if distribution is not None else F.col("distribution")
-    bin_col = bin if bin is not None else F.col("bin")
-    u = uniform_column(dist_col, bin_col, now_col, seed)
+    u = uniform_column(F.col("distribution"), F.col("bin"), F.lit(now_us).cast("bigint"), seed)
     udf = make_poisson_decay_udf(rate, prune, law)
-    return udf(count, dt_seconds(t, now_col), u)
+    return udf(F.col("count"), F.expr(dt_sql(now_us)), u)

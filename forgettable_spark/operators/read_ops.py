@@ -8,74 +8,76 @@ its read path, and pinning it is what makes results oracle-checkable.
 All operators accept ``rate`` / ``prune`` / ``law`` and run in
 deterministic ``expected`` decay mode; stochastic mode lives in
 :mod:`forgettable_spark.functions.sampling` and composes the same way.
+
+Plans are built from SQL expression text — the decay law
+(:func:`~forgettable_spark.functions.decay.decayed_count_sql`) and ``Z`` /
+``p`` (:mod:`~forgettable_spark.functions.normalize`) are each rendered in
+one place — in a few ``withColumn``/``where`` steps. Every Column call is
+a py4j round trip, and on a point read building the same plan as a
+Column tree took longer than running it. User-supplied names
+(distribution, fields) stay bound literals and never enter SQL text.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from forgettable_spark.functions.decay import GOFORGET_DEFAULT_RATE, decayed_count
+from forgettable_spark.functions.decay import GOFORGET_DEFAULT_RATE, decayed_count_sql, dt_sql
 from forgettable_spark.functions.expiry import DEFAULT_SIGMA, expiry_horizon_seconds
 from forgettable_spark.functions.normalize import with_z_and_p
 
+#: R3's selection order: un-decayed count desc, ties by bin name.
+_RANK_SQL = "ROW_NUMBER() OVER (PARTITION BY distribution ORDER BY count DESC, bin ASC)"
 
-def _now_col(now_us: int | Column) -> Column:
-    return F.lit(now_us).cast("bigint") if isinstance(now_us, int) else now_us
 
-
-def _decayed_count_col(
-    count: Column,
-    t: Column,
-    now_us: int | Column,
-    rate: float,
-    prune: bool,
-    law: str,
-    mode: str,
-    seed: int,
-) -> Column:
-    """Post-decay count column in either decay mode (shared by every read
-    operator so ``mode``/``seed`` behave identically across R1-R3)."""
-    if mode == "expected":
-        return decayed_count(count, t, _now_col(now_us), rate, prune, law)
-    if mode == "poisson":
-        from forgettable_spark.functions.sampling import poisson_decay_column
-
-        return poisson_decay_column(count, t, _now_col(now_us), rate, prune, law, seed)
-    raise ValueError(f"unknown decay mode: {mode!r} (want 'expected' or 'poisson')")
+def _one_distribution(snap: DataFrame, distribution: str | None) -> DataFrame:
+    """Filter to one distribution (a bound literal, never SQL text) before
+    any aggregation, so Catalyst pushes the equality into the scan."""
+    if distribution is None:
+        return snap
+    return snap.where(F.col("distribution") == F.lit(distribution))
 
 
 def decayed_state(
     snap: DataFrame,
-    now_us: int | Column,
+    now_us: int,
     rate: float = GOFORGET_DEFAULT_RATE,
     prune: bool = True,
     law: str = "linear",
     mode: str = "expected",
     seed: int = 0,
 ) -> DataFrame:
-    """Apply decay-at-read to a snapshot → (distribution, bin, count, t).
+    """Apply decay-at-read to a snapshot: ``count`` becomes the post-decay
+    count, every other column passes through.
 
-    ``mode="expected"`` (default) is the deterministic pure-Catalyst law;
-    ``mode="poisson"`` is the faithful seeded stochastic sampler (a
+    ``mode="expected"`` (default) is the deterministic law rendered as SQL
+    text; ``mode="poisson"`` is the faithful seeded stochastic sampler (a
     vectorized pandas UDF — reproducible and partition-independent, see
-    :mod:`forgettable_spark.functions.sampling`).
+    :mod:`forgettable_spark.functions.sampling`). Either way every read
+    operator decays through here, so ``mode``/``seed`` behave identically
+    across R1-R3.
 
     In prune mode bins decayed to 0 are dropped (reference removes them at
     write-back, ``goforget/redis_utils.go:163-172``); an entire distribution
     decaying away simply yields no rows (the reference discards the write
     and lets TTL expiry reap the keys, ``redis_utils.go:158-161``).
     """
-    c = _decayed_count_col(F.col("count"), F.col("t"), now_us, rate, prune, law, mode, seed)
-    out = snap.withColumn("count", c)
-    if prune:
-        out = out.filter(F.col("count") > 0)
-    return out
+    if mode == "expected":
+        count = F.expr(decayed_count_sql(now_us, rate, prune, law))
+    elif mode == "poisson":
+        from forgettable_spark.functions.sampling import poisson_decay_column
+
+        count = poisson_decay_column(now_us, rate, prune, law, seed)
+    else:
+        raise ValueError(f"unknown decay mode: {mode!r} (want 'expected' or 'poisson')")
+    out = snap.withColumn("count", count)
+    return out.where("count > 0") if prune else out
 
 
 def get_dist(
     snap: DataFrame,
-    now_us: int | Column,
+    now_us: int,
     distribution: str | None = None,
     rate: float = GOFORGET_DEFAULT_RATE,
     prune: bool = True,
@@ -99,10 +101,9 @@ def get_dist(
     pushes the equality predicate into the parquet scan (partition pruning
     when the log is partitioned by distribution).
     """
-    if distribution is not None:
-        snap = snap.filter(F.col("distribution") == distribution)
+    snap = _one_distribution(snap, distribution)
     out = decayed_state(snap, now_us, rate, prune, law, mode, seed)
-    return with_z_and_p(out, strategy=z_strategy).select(
+    return with_z_and_p(out, strategy=z_strategy).selectExpr(
         "distribution", "bin", "count", "Z", "p"
     )
 
@@ -110,7 +111,7 @@ def get_dist(
 def get_field(
     snap: DataFrame,
     fields: list[str],
-    now_us: int | Column,
+    now_us: int,
     distribution: str | None = None,
     rate: float = GOFORGET_DEFAULT_RATE,
     prune: bool = True,
@@ -132,19 +133,13 @@ def get_field(
     ``count`` is post-decay — so ``p`` and ``count`` are mutually
     inconsistent, exactly as the reference returns them.
     """
-    if distribution is not None:
-        snap = snap.filter(F.col("distribution") == distribution)
+    snap = _one_distribution(snap, distribution)
     if compat_partial_z:
-        with_p = with_z_and_p(snap)  # p from un-decayed count / un-decayed Z
-        out = with_p.withColumn(
-            "count",
-            _decayed_count_col(F.col("count"), F.col("t"), now_us, rate, prune, law, mode, seed),
-        )
-        if prune:
-            out = out.filter(F.col("count") > 0)
+        # p from un-decayed count / un-decayed Z, then decay the count
+        out = decayed_state(with_z_and_p(snap), now_us, rate, prune, law, mode, seed)
     else:
         out = with_z_and_p(decayed_state(snap, now_us, rate, prune, law, mode, seed))
-    return out.filter(F.col("bin").isin(fields)).select(
+    return out.where(F.col("bin").isin(fields)).selectExpr(
         "distribution", "bin", "count", "Z", "p"
     )
 
@@ -152,7 +147,7 @@ def get_field(
 def n_most_probable(
     snap: DataFrame,
     n: int = 10,
-    now_us: int | Column = 0,
+    now_us: int = 0,
     distribution: str | None = None,
     rate: float = GOFORGET_DEFAULT_RATE,
     prune: bool = True,
@@ -170,44 +165,17 @@ def n_most_probable(
     a deterministic total order. ``Z``/``p`` come from the full decayed
     distribution (normative full-Z semantics).
 
-    Plan shape: for a single distribution this is
-    ``TakeOrderedAndProject``-able; for all distributions it is one window
+    Plan shape: ``rank`` is computed first, so decay then replaces
+    ``count`` in place. For all distributions this is one window
     (``row_number`` over (distribution | count desc, bin asc)) over the
     already-collapsed snapshot — the Spark analogue of the reference's
-    store-side sort+limit pushdown.
+    store-side sort+limit pushdown — plus the ``Z`` window.
     """
-    if distribution is not None:
-        snap = snap.filter(F.col("distribution") == distribution)
-    order = [F.col("count").desc(), F.col("bin").asc()]
-    rank = F.row_number().over(Window.partitionBy("distribution").orderBy(*order))
-    ranked = snap.withColumn("rank", rank)
-    decayed = ranked.withColumn(
-        "count_decayed",
-        _decayed_count_col(F.col("count"), F.col("t"), now_us, rate, prune, law, mode, seed),
+    ranked = _one_distribution(snap, distribution).withColumn("rank", F.expr(_RANK_SQL))
+    out = with_z_and_p(decayed_state(ranked, now_us, rate, prune, law, mode, seed))
+    return out.where(f"rank <= {int(n)}").selectExpr(
+        "distribution", "bin", "count", "Z", "p", "rank"
     )
-    if prune:
-        decayed = decayed.filter(F.col("count_decayed") > 0)
-    decayed = decayed.withColumn(
-        "Z", F.sum("count_decayed").over(Window.partitionBy("distribution"))
-    )
-    out = (
-        decayed.filter(F.col("rank") <= n)
-        .withColumn(
-            "p",
-            F.when(F.col("Z") == 0, F.lit(0.0)).otherwise(
-                F.col("count_decayed").cast("double") / F.col("Z").cast("double")
-            ),
-        )
-        .select(
-            "distribution",
-            "bin",
-            F.col("count_decayed").alias("count"),
-            "Z",
-            "p",
-            "rank",
-        )
-    )
-    return out
 
 
 def db_size(
@@ -232,7 +200,7 @@ def db_size(
 
 def live_distributions(
     snap: DataFrame,
-    now_us: int | Column,
+    now_us: int,
     rate: float = GOFORGET_DEFAULT_RATE,
     sigma: float = DEFAULT_SIGMA,
 ) -> DataFrame:
@@ -251,7 +219,7 @@ def live_distributions(
         F.max("t").alias("t"),
     )
     horizon = expiry_horizon_seconds(F.col("max_count"), rate, sigma)
-    age_sec = (_now_col(now_us) - F.unix_micros(F.col("t"))).cast("double") / F.lit(1e6)
+    age_sec = F.expr(dt_sql(now_us))
     return (
         per_dist.withColumn("horizon_sec", horizon)
         .filter(age_sec <= F.col("horizon_sec"))

@@ -18,7 +18,8 @@ Success envelope is ``{"status_code": 200, "status_txt": "", "data": ...}``
 ``{"status_code": 500, "status_txt": "<REASON>", "data": null}`` using the
 reference's exact reason strings (``MISSING_ARG_DISTRIBUTION``,
 ``MISSING_ARG_FIELD``, ``COULDNT_PARSE_N``, ``CANNOT_PARSE_RATE``,
-``INVALID_ARG_N`` — ``goforget/forget.go:31-215``). A distribution payload
+``INVALID_ARG_N`` — ``goforget/forget.go:31-215``; ``CANNOT_PARSE_NOW``
+is the engine's own, for the ``now`` extension below). A distribution payload
 is ``{distribution, Z, T, data: [{bin, count, p}...], rate, prune}``
 (``goforget/distribution.go:18-40``) with bins ordered (count desc, bin
 asc) — the reference's Go map iteration is unordered, so any order is
@@ -44,7 +45,13 @@ distribution. The server computes the table's snapshot once at start
 (:meth:`ForgetTable.materialize`) and persists it hash-partitioned by
 distribution, so a read is a filtered scan of that in-memory snapshot
 plus the per-distribution window, with no exchange and no aggregate —
-the same read operators as the batch path. Appends union onto the
+the same read operators as the batch path. Those build each read from
+the shared SQL text of the decay and normalize law
+(``functions/decay.py``, ``functions/normalize.py``) in a few
+``withColumn``/``where`` steps: ~50-90 py4j round trips per read,
+where a Column tree cost 400-500 and took longer to build than to run.
+The persisted snapshot is read through the DataFrame, never a temp
+view: dropping a view uncaches the plan behind it. Appends union onto the
 persisted snapshot; every ``checkpoint_every`` appends the snapshot is
 recomputed and the one it replaces is freed.
 """
@@ -247,16 +254,27 @@ def _make_handler(server: ForgetHTTPServer):
                 self._error("CANNOT_PARSE_RATE")
                 return None
 
-        def _now_us(self, q) -> int:
+        def _now_us(self, q) -> int | None:
             """Engine extension: explicit evaluation instant (unix sec);
             omitted -> wall clock."""
             raw = q.get("now", [""])[0]
-            return _to_us(None if raw == "" else int(float(raw) * 1_000_000))
+            if raw == "":
+                return _to_us(None)
+            try:
+                now_us = int(float(raw) * 1_000_000)
+            except (ValueError, OverflowError):  # abc, nan, inf
+                now_us = None
+            if now_us is None or not -(1 << 63) <= now_us < 1 << 63:
+                self._error("CANNOT_PARSE_NOW")
+                return None
+            return now_us
 
         def _reply_read(self, q, d: str, rate: float, read) -> None:
             """Run ``read(table, now_us)`` on the served table and reply
             with the distribution envelope, ``T`` at the same instant."""
             now_us = self._now_us(q)
+            if now_us is None:
+                return
             with server.reading() as table:
                 rows = read(table, now_us).collect()
             self._envelope(200, _payload(rows, d, rate, table.prune, now_us // 1_000_000))

@@ -87,8 +87,6 @@ def publish_batch(
     CommitConflictError and the publish retries against the freshly
     published version instead of silently overwriting it.
     """
-    if batch_df.isEmpty():
-        return None
     spark = batch_df.sparkSession
     updated = batch_df.select(
         "distribution",
@@ -96,13 +94,14 @@ def publish_batch(
         F.col("count").alias("n"),
         F.timestamp_micros(F.col("t_us")).alias("ts"),
     )
-    # The micro-batch df is recomputed per action; the publish below reads
-    # it at least twice (groups + write) and a conflict retry reads it
-    # again. `updated.rdd.unpersist()` would not release the checkpoint
-    # blocks (DataFrame.rdd is a fresh derived RDD, never the persisted
-    # internal one), so without an id sweep a long-running stream leaks
-    # one checkpoint per micro-batch until JVM GC — unbounded storage
-    # creep. The sweep set is computed IMMEDIATELY around the one persist
+    # The micro-batch df is recomputed per action — each one re-runs the
+    # whole state operator — and the publish reads it at least three times
+    # (emptiness, groups, write) plus once per conflict retry, so it is
+    # checkpointed before the first of them. `updated.rdd.unpersist()`
+    # would not release the checkpoint blocks (DataFrame.rdd is a fresh
+    # derived RDD, never the persisted internal one), so without an id
+    # sweep a long-running stream leaks one checkpoint per micro-batch
+    # until JVM GC — unbounded storage creep. The sweep set is computed IMMEDIATELY around the one persist
     # this function performs — before/after the localCheckpoint, not at
     # function exit — so it can only ever name our own checkpoint plus
     # whatever a concurrent session user persisted inside that
@@ -117,6 +116,8 @@ def publish_batch(
         return F.pmod(F.xxhash64(col), F.lit(n_shards)).cast("int")
 
     try:
+        if updated.isEmpty():
+            return None
         # Touched state groups: O(batch) rows, collected once (the claim
         # list rides the manifest, the reference's per-key write-back
         # granularity made durable). Driver-size bound: the collect is

@@ -327,27 +327,68 @@ def _nodes_outside_cache(plan) -> list[str]:
     return names
 
 
-def test_materialized_point_read_is_one_job_without_exchange(spark):
-    """A served point read scans the persisted snapshot, which is already
-    hash-partitioned by distribution: one job, and no exchange or
-    aggregate outside the cached relation."""
+#: One point read per served route, over a ForgetTable and a distribution.
+POINT_READS = {
+    "dist": lambda t, d: t.dist(d),
+    "get": lambda t, d: t.get(d, ["1", "2", "3"]),
+    "n_most_probable": lambda t, d: t.n_most_probable(d, 10),
+}
+
+
+@pytest.fixture(scope="module")
+def materialized(spark):
+    """A materialized table over the sf0.001 log and one of its
+    distributions."""
     from forgettable_spark.api import ForgetTable
     from forgettable_spark.sources import load_forget_events
 
     table = ForgetTable(spark, load_forget_events(spark, SF_SMOKE), rate=0.0).materialize()
+    yield table, table.events.first()["distribution"]
+    table._snapshot().unpersist()
+
+
+@pytest.mark.parametrize("route", POINT_READS)
+def test_materialized_point_read_is_one_job_without_exchange(spark, materialized, route):
+    """A served point read scans the persisted snapshot, which is already
+    hash-partitioned by distribution: one job, and no exchange or
+    aggregate outside the cached relation — also for R3's two windows."""
+    table, d = materialized
+    df = POINT_READS[route](table, d)
+    sc = spark.sparkContext
+    group = f"materialized-point-read-{route}"
+    sc.setJobGroup(group, group)
     try:
-        d = table.events.first()["distribution"]
-        df = table.dist(d)
-        sc = spark.sparkContext
-        group = "materialized-point-read"
-        sc.setJobGroup(group, group)
-        try:
-            assert df.collect()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
-        names = _nodes_outside_cache(df._jdf.queryExecution().executedPlan())
-        assert "InMemoryTableScanExec" in names or "TableCacheQueryStageExec" in names
-        assert not [n for n in names if "Exchange" in n or "Aggregate" in n], names
+        assert df.collect()
     finally:
-        table._snapshot().unpersist()
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    names = _nodes_outside_cache(df._jdf.queryExecution().executedPlan())
+    assert "InMemoryTableScanExec" in names or "TableCacheQueryStageExec" in names
+    assert not [n for n in names if "Exchange" in n or "Aggregate" in n], names
+
+
+@pytest.mark.parametrize("route,limit", [("dist", 100), ("get", 120), ("n_most_probable", 100)])
+def test_point_read_build_py4j_round_trips(spark, materialized, route, limit):
+    """Building a served read is a few SQL-text steps, not a Column tree:
+    py4j round trips are a count noise cannot move (a Column-tree build
+    was 416 for /dist, 453 for a 3-field /get, 515 for /nmostprobable).
+    Releases of garbage-collected Java proxies, flushed whenever earlier
+    work's garbage is collected, are not part of the build."""
+    from py4j.protocol import MEMORY_COMMAND_NAME
+
+    table, d = materialized
+    client = type(spark.sparkContext._gateway._gateway_client)
+    send, calls = client.send_command, []
+
+    def counted(self, command, *args, **kwargs):
+        if not command.startswith(MEMORY_COMMAND_NAME):
+            calls.append(command)
+        return send(self, command, *args, **kwargs)
+
+    POINT_READS[route](table, d)  # first build of the route: warm lookups
+    client.send_command = counted
+    try:
+        POINT_READS[route](table, d)
+    finally:
+        client.send_command = send
+    assert len(calls) <= limit, len(calls)

@@ -153,6 +153,10 @@ def test_dbsize(served):
         ("/dist?distribution=colors&rate=xyz", "CANNOT_PARSE_RATE"),
         ("/get?distribution=colors&field=red&rate=xyz", "CANNOT_PARSE_RATE"),
         ("/nmostprobable?distribution=colors&rate=xyz", "CANNOT_PARSE_RATE"),
+        ("/dist?distribution=colors&now=abc", "CANNOT_PARSE_NOW"),
+        ("/get?distribution=colors&field=red&now=nan", "CANNOT_PARSE_NOW"),
+        ("/nmostprobable?distribution=colors&now=inf", "CANNOT_PARSE_NOW"),
+        ("/dist?distribution=colors&now=1e300", "CANNOT_PARSE_NOW"),
     ],
 )
 def test_error_reasons(served, path, reason):
@@ -325,16 +329,20 @@ def _plain_read(table: ForgetTable, path: str):
     return {"status_code": 200, "status_txt": "", "data": data}
 
 
-def _assert_parity(base: str, plain: ForgetTable, distributions, now_sec: int) -> None:
+def _assert_parity(
+    base: str, plain: ForgetTable, distributions, now_sec: int, rates=(PARITY_RATE,)
+) -> None:
     paths = ["/dbsize"] + [
-        p.format(d=d) + f"&rate={PARITY_RATE}&now={now_sec}"
+        p.format(d=d) + f"&rate={rate}&now={now_sec}"
         for d in distributions
         for p in PARITY_READS
+        for rate in rates
     ]
     for path in paths:
         status, env = _get_json(base, path)
         assert status == 200, path
-        assert env == _plain_read(plain, path), path
+        # compared as JSON text, so a NaN rate equals itself
+        assert json.dumps(env) == json.dumps(_plain_read(plain, path)), path
 
 
 @pytest.mark.parametrize("prune", [True, False])
@@ -347,7 +355,15 @@ def test_materialized_server_matches_raw_log(spark, prune):
     host, port = srv.start()
     base = f"http://{host}:{port}"
     try:
-        _assert_parity(base, raw, ("colors", "pets", "fading", "wide", "ghost"), PARITY_NOW)
+        _assert_parity(
+            base, raw, ("colors", "pets", "fading", "wide", "ghost"), PARITY_NOW,
+            rates=(PARITY_RATE, 0.0, float("inf"), float("nan")),
+        )
+        # The edge accepts any float rate: 0 and nan leave counts as they
+        # are, inf decays every bin to the clamp.
+        for rate, counts in (("0", [3, 1]), ("nan", [3, 1]), ("inf", [] if prune else [1, 1])):
+            _, env = _get_json(base, f"/dist?distribution=colors&rate={rate}&now={PARITY_NOW}")
+            assert [r["count"] for r in env["data"]["data"]] == counts, rate
 
         # Reads after an /incr: replay the server's append (same ts) on the raw log.
         assert _get(base, "/incr?distribution=pets&field=cat&field=eel&N=2") == (200, b"OK")

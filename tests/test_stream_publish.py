@@ -149,6 +149,33 @@ def test_publish_batch_skips_empty_and_retries_conflict(spark, dirs):
     assert table.read(spark).count() == 1
 
 
+def test_publish_batch_runs_the_batch_plan_once(spark, dirs):
+    """The micro-batch plan (in a stream, the whole state operator) runs
+    once per publish: emptiness is tested on the checkpoint, not on the
+    un-persisted batch. The accumulator counts rows on the map side of a
+    pandas grouped operator — like the state operator, one that no limit
+    passes — so every action over the batch re-runs it in full."""
+    sc = spark.sparkContext
+    runs = sc.accumulator(0)
+
+    def counted(row):
+        runs.add(1)
+        return row
+
+    schema = "distribution STRING, bin STRING, count BIGINT, t_us BIGINT"
+    t_us = int(T0.timestamp() * 1e6)
+    rows = [("colors", "red", 1, t_us), ("colors", "blue", 3, t_us), ("pets", "cat", 2, t_us)]
+    batch = (
+        spark.createDataFrame(sc.parallelize(rows, 2).map(counted), schema)
+        .groupBy("distribution", "bin")
+        .applyInPandas(lambda pdf: pdf, schema)
+    )
+    table = ManifestTable(f"{dirs}/tbl")
+    assert publish_batch(batch, table) == 1
+    assert runs.value == len(rows)
+    assert table.read(spark).count() == len(rows)
+
+
 def test_sharded_stream_publish_keeps_untouched_shards(spark, dirs):
     """With n_shards, a micro-batch carries only the updated shards' bins
     of a distribution; the merge must replace (distribution, shard)

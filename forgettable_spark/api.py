@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from forgettable_spark import operators as ops
 from forgettable_spark.functions.decay import GOFORGET_DEFAULT_RATE
+from forgettable_spark.functions.cache import local_frame
 from forgettable_spark.functions.expiry import DEFAULT_SIGMA
 from forgettable_spark.operators.snapshot import FORGET_EVENTS_SCHEMA
 
@@ -259,4 +260,4 @@ class ForgetTable:
 
     @classmethod
     def empty(cls, spark: SparkSession, **kwargs) -> "ForgetTable":
-        return cls(spark, spark.createDataFrame([], FORGET_EVENTS_SCHEMA), **kwargs)
+        return cls(spark, local_frame(spark, [], FORGET_EVENTS_SCHEMA), **kwargs)

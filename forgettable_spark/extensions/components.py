@@ -31,6 +31,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from forgettable_spark.functions.cache import local_frame
+
 #: Edges per loop task — fixed-width (src, dst) pairs are tiny, so one
 #: task can own millions; below this the loop runs single-partition.
 EDGES_PER_PARTITION = 2_000_000
@@ -74,9 +76,7 @@ def _local_components(spark, pairs: DataFrame, a_col: str, b_col: str) -> DataFr
     schema = StructType(
         [StructField("node", dtype, False), StructField("component", dtype, False)]
     )
-    return spark.createDataFrame(
-        [(n, roots[find(n)]) for n in parent], schema
-    )
+    return local_frame(spark, [(n, roots[find(n)]) for n in parent], schema)
 
 
 def connected_components(

@@ -48,6 +48,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from forgettable_spark.extensions.codebook import _sql_double
 from forgettable_spark.extensions.text import tokens
@@ -77,7 +78,7 @@ def bm25_topk(
     fixed-width postings parquet scan (dl rides each row) and the
     corpus stats aggregate the narrow doc_stats table. Results are
     bit-identical either way (test-asserted)."""
-    from forgettable_spark.functions.cache import scoped_cache
+    from forgettable_spark.functions.cache import local_frame, scoped_cache
 
     all_terms = sorted({t for ts in query_terms.values() for t in ts})
     if not all_terms:
@@ -122,9 +123,10 @@ def bm25_topk(
     dfreq = postings.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     # Terms dedupe within a query (the fold's struct sort assumes one
     # score row per (query, doc, term); the oracle dedupes identically).
-    q = spark.createDataFrame(
+    q = local_frame(
+        spark,
         [(qid, t) for qid, ts in sorted(query_terms.items()) for t in sorted(set(ts))],
-        ["query_id", "term"],
+        T.StructType([T.StructField(c, T.StringType()) for c in ("query_id", "term")]),
     )
     # Constants are computed ONCE here and injected as literals in both
     # engines (k1+1 parsed from its own decimal string could differ by

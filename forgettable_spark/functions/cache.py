@@ -162,7 +162,8 @@ def _schema_contains(dt, target) -> bool:
 
 def _tz_awareize(value, dt):
     """Attach the driver's LOCAL timezone to every naive datetime under
-    a TimestampType in a collected value tree (ADVICE r12):
+    a TimestampType in a collected value tree (ADVICE r12; a struct is a
+    dict, Row or tuple):
     ``collect()`` yields TimestampType values as NAIVE datetimes in
     driver-local time, but pyarrow treats naive datetimes as UTC wall
     time when building a ``timestamp(us, tz='UTC')`` array — on a
@@ -180,9 +181,12 @@ def _tz_awareize(value, dt):
     if isinstance(dt, TimestampType):
         return value.astimezone() if value.tzinfo is None else value
     if isinstance(dt, StructType):
-        return {
-            f.name: _tz_awareize(value.get(f.name), f.dataType) for f in dt.fields
-        }
+        if isinstance(value, dict):
+            return {
+                f.name: _tz_awareize(value.get(f.name), f.dataType)
+                for f in dt.fields
+            }
+        return tuple(_tz_awareize(v, f.dataType) for v, f in zip(value, dt.fields))
     if isinstance(dt, ArrayType):
         return [_tz_awareize(v, dt.elementType) for v in value]
     if isinstance(dt, MapType):
@@ -193,45 +197,63 @@ def _tz_awareize(value, dt):
     return value
 
 
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """A frame built on the driver, as a JVM ``LocalRelation``.
+
+    ``spark.createDataFrame(list_of_tuples, schema)`` parallelizes
+    PICKLED rows into a ``PythonRDD``: every action over the frame, and
+    over any plan that joins or unions it, runs a Python-worker stage
+    (on a 4-core host 170–300 ms from task launch to the function
+    starting, 2.4–3.3 s when workers are cold). The same rows routed
+    through ONE pyarrow table, typed from the Spark schema, become a
+    local relation: a scan of it starts no Python worker, and collecting
+    it alone starts no job. This holds with the Arrow conf off and for
+    empty ``rows``.
+
+    ``rows`` are sequences in schema order (tuples or Rows). A naive
+    datetime under a TimestampType is read as UTC, the API's rule
+    (``api._to_us``); collected rows, whose naive values are
+    driver-local, go through :func:`_tz_awareize` first."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
+
+
 def _local_result_df(spark: SparkSession, rows: list, schema) -> DataFrame:
-    """Re-wrap collected rows as a DataFrame for the caller (r12
-    optimization, guide §4 — eliminate the Python boundary).
+    """Re-wrap collected rows as a DataFrame for the caller, through
+    :func:`local_frame` (value-equality is test-locked in
+    tests/test_cache_lifecycle.py::test_local_result_df_arrow_path):
+    a noop write of a 500-row result measures ~0.05 s against ~0.49 s
+    for pickled rows. coalesce(1): the result is driver-small by
+    contract (RUN_RELEASED_MAX_ROWS), so fanning it back out over
+    defaultParallelism tasks is pure scheduling overhead.
 
-    ``spark.createDataFrame(rows, schema)`` parallelizes PICKLED rows:
-    every later action on the result (the bench's noop write, a
-    caller's collect) re-launches Python workers to deserialize them —
-    measured ~0.49 s per noop write of a 500-row result, paid by every
-    registered query. Routing the same rows through ONE pyarrow table
-    (schema derived exactly from the Spark schema, so types — including
-    tz-aware timestamps, decimals, nested arrays/structs — round-trip
-    bit-identically; value-equality is test-locked in
-    tests/test_cache_lifecycle.py::test_local_result_df_arrow_path) makes the
-    result a JVM-side Arrow relation: the same noop write measures
-    ~0.05 s with no Python stage. coalesce(1): the result is
-    driver-small by contract (RUN_RELEASED_MAX_ROWS), so fanning it
-    back out over defaultParallelism empty tasks is pure scheduling
-    overhead. Any conversion surprise (pyarrow absent, exotic type,
-    duplicate column names defeating the dict conversion) falls back to
-    the original rows path — never a behavior change."""
+    A type Arrow cannot convert falls back to pickled rows with a
+    warning naming the schema; a registered query reaching it is a bug."""
+    import pyarrow as pa
+    from pyspark.errors import PySparkTypeError
+    from pyspark.sql.types import TimestampType
+
+    if _schema_contains(schema, TimestampType):
+        # Collected TimestampType values are NAIVE local datetimes; make
+        # them aware before Arrow reads them as UTC (_tz_awareize).
+        rows = [_tz_awareize(r, schema) for r in rows]
     try:
-        if len(set(schema.names)) != len(schema.names):
-            raise ValueError("duplicate column names")
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql.types import TimestampType
-
-        payload = [r.asDict(recursive=True) for r in rows]
-        if _schema_contains(schema, TimestampType):
-            # tz-aware timestamps collect as NAIVE local datetimes; make
-            # them aware before Arrow reads them as UTC (ADVICE r12 —
-            # the _tz_awareize docstring has the full story). The walk
-            # is schema-guided, so NTZ fields elsewhere in the same
-            # schema stay naive.
-            payload = [_tz_awareize(r, schema) for r in payload]
-        arrow_schema = to_arrow_schema(schema)
-        tbl = pa.Table.from_pylist(payload, schema=arrow_schema)
-        return spark.createDataFrame(tbl, schema).coalesce(1)
-    except Exception:  # noqa: BLE001 — fidelity fallback, never a failure
+        return local_frame(spark, rows, schema).coalesce(1)
+    except (pa.ArrowException, PySparkTypeError) as exc:
+        logging.getLogger(__name__).warning(
+            "_local_result_df: Arrow conversion failed (%s); pickled rows "
+            "for schema %s",
+            exc,
+            schema.simpleString(),
+        )
         return spark.createDataFrame(rows, schema)
 
 

@@ -15,6 +15,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from forgettable_spark.functions.cache import local_frame
+
 #: forget_events schema (FIXTURES.md A1).
 FORGET_EVENTS_SCHEMA = T.StructType(
     [
@@ -37,10 +39,11 @@ def incr_events(
 
     One row per field, each of weight ``n`` — the reference adds ``n`` to
     every named field and ``n·len(fields)`` to Z (``goforget/forget.go:
-    31-69``); here Z is derived so only the per-bin rows exist.
+    31-69``); here Z is derived so only the per-bin rows exist. A naive
+    ``ts`` is UTC, as everywhere in the API (``api._to_us``).
     """
     rows = [(distribution, f, n, ts) for f in fields]
-    return spark.createDataFrame(rows, FORGET_EVENTS_SCHEMA)
+    return local_frame(spark, rows, FORGET_EVENTS_SCHEMA)
 
 
 def incr(events: DataFrame, new_events: DataFrame) -> DataFrame:

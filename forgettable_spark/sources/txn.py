@@ -39,6 +39,9 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from forgettable_spark.functions.cache import local_frame
 
 _MANIFEST_RE = re.compile(r"^v(\d{8})\.json$")
 
@@ -126,22 +129,24 @@ class ManifestTable:
         # the segments join on a string-cast shadow column: the manifest
         # round-trips groups through JSON (which would coerce a BIGINT key
         # to int anyway), and a non-string key_col (commit_delta is
-        # key-agnostic) would otherwise make createDataFrame's hardcoded
+        # key-agnostic) would otherwise make the claim map's hardcoded
         # STRING schema reject the committed version at read time. The
         # string rendering is injective for the string/int keys the state
         # tables use, so the masking semantics are unchanged.
         if n_shards:
-            owners = spark.createDataFrame(
-                [(str(k), int(sh), i) for (k, sh), i in claimed.items()],
-                "_gk STRING, _shard INT, _owner INT",
-            )
             keys = ["_gk", "_shard"]
+            rows = [(str(k), int(sh), i) for (k, sh), i in claimed.items()]
         else:
-            owners = spark.createDataFrame(
-                [(str(k), i) for (k,), i in claimed.items()],
-                "_gk STRING, _owner INT",
-            )
             keys = ["_gk"]
+            rows = [(str(k), i) for (k,), i in claimed.items()]
+        owners = local_frame(
+            spark,
+            rows,
+            T.StructType(
+                [T.StructField("_gk", T.StringType())]
+                + [T.StructField(k, T.IntegerType()) for k in keys[1:] + ["_owner"]]
+            ),
+        )
         parts = []
         for i, seg in enumerate(segs):
             df = spark.read.parquet(seg["data_path"]).withColumn(

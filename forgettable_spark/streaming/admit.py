@@ -72,7 +72,11 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from forgettable_spark.extensions import dedup
-from forgettable_spark.functions.cache import _persistent_rdd_ids, released_scope
+from forgettable_spark.functions.cache import (
+    _persistent_rdd_ids,
+    local_frame,
+    released_scope,
+)
 
 #: Verdict match_kind values.
 KIND_NONE = "none"
@@ -140,7 +144,7 @@ def _read_or_empty(
     parts = _table_parts(path, exclude_batch)
     if parts:
         return spark.read.schema(schema).parquet(*parts)
-    return spark.createDataFrame([], schema)
+    return local_frame(spark, [], schema)
 
 
 def _fold(spark: SparkSession, path: str, batch_id: int) -> None:

@@ -59,7 +59,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from forgettable_spark.extensions import codebook as cb
-from forgettable_spark.functions.cache import released_scope
+from forgettable_spark.functions.cache import local_frame, released_scope
 from forgettable_spark.streaming.admit import (
     FOLD_EVERY,
     _loop_width,
@@ -173,7 +173,7 @@ def _read_index(
     so an old index keeps working unpruned until a fold migrates it."""
     parts = _table_parts(index_dir, exclude_batch)
     if not parts:
-        return spark.createDataFrame([], INDEX_SCHEMA)
+        return local_frame(spark, [], INDEX_SCHEMA)
     out = None
     for p in parts:
         if _part_is_bucketed(p):

@@ -89,3 +89,28 @@ def test_json_payload_shape(ft):
     doc = json.loads(payload[0]["json"])
     assert doc["distribution"] == "colors"
     assert {d["bin"] for d in doc["data"]} == {"red", "blue"}
+
+
+def test_incr_naive_ts_is_utc_on_non_utc_driver(spark):
+    """A naive ``ts`` means UTC on every host, as a naive ``now`` does
+    (``api._to_us``). Pickled rows read it as driver-local time, so a
+    New York driver stored the append 4 h later than ``_to_us``."""
+    import os
+    import time
+
+    from forgettable_spark.api import _to_us
+
+    naive = datetime(2024, 6, 1, 12)
+    old_tz = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    try:
+        events = ForgetTable.empty(spark).incr("d", ["a"], ts=naive).events
+        got = events.selectExpr("unix_micros(ts) AS us").first()["us"]
+    finally:
+        if old_tz is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = old_tz
+        time.tzset()
+    assert got == _to_us(naive) == 1_717_243_200_000_000

@@ -142,6 +142,28 @@ def test_local_result_df_arrow_path(spark):
     assert [tuple(r) for r in out.collect()] == [(1, 2)]
 
 
+def test_local_result_df_fallback_is_logged(spark, monkeypatch, caplog):
+    """A type Arrow cannot convert falls back to pickled rows, with a
+    warning that names the schema; the rows are unchanged."""
+    import logging
+
+    import pyarrow as pa
+    from pyspark.sql import types as T
+
+    from forgettable_spark.functions import cache
+
+    def no_arrow(*_a, **_k):
+        raise pa.ArrowInvalid("unconvertible")
+
+    schema = T.StructType([T.StructField("a", T.LongType())])
+    rows = spark.createDataFrame([(1,), (2,)], schema).collect()
+    monkeypatch.setattr(cache, "local_frame", no_arrow)
+    with caplog.at_level(logging.WARNING, logger=cache.__name__):
+        out = cache._local_result_df(spark, rows, schema)
+    assert out.collect() == rows
+    assert "struct<a:bigint>" in caplog.text and "unconvertible" in caplog.text
+
+
 def test_tz_awareize_non_utc_driver(monkeypatch):
     """ADVICE r12: on a non-UTC driver, collect() yields TimestampType
     values as naive LOCAL datetimes, and the Arrow fast path must not

@@ -392,3 +392,46 @@ def test_point_read_build_py4j_round_trips(spark, materialized, route, limit):
     finally:
         client.send_command = send
     assert len(calls) <= limit, len(calls)
+
+
+def _optimized(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_read_after_appends_runs_no_python_stage(spark, materialized):
+    """``/incr`` rows are a JVM local relation (``functions.cache.
+    local_frame``), so a ``/dist`` read over the snapshot plus k = 2
+    appends has no Python-worker stage: pickled append rows made every
+    later read launch Python workers for them."""
+    table, d = materialized
+    grown = table.incr(d, ["_x"]).incr(d, ["_y", "_z"], n=2)
+    df = grown.dist(d)
+    assert "PythonRDD" not in df._jdf.queryExecution().toRdd().toDebugString()
+    assert {"_x", "_y", "_z"} <= {r["bin"] for r in df.collect()}
+
+
+def test_driver_frames_are_local_relations(spark, tmp_path):
+    """The frames the library builds on the driver optimize to a
+    ``LocalRelation``: the ``/incr`` rows, an empty log, and the claim
+    map a segmented ``ManifestTable`` read masks each segment with."""
+    from datetime import datetime
+
+    from forgettable_spark.api import ForgetTable
+    from forgettable_spark.operators.snapshot import incr_events
+    from forgettable_spark.sources.txn import ManifestTable
+
+    t = datetime(2024, 6, 1)
+    assert _optimized(incr_events(spark, "d", ["a", "b"], t)).startswith("LocalRelation")
+    empty = ForgetTable.empty(spark).events
+    assert _optimized(empty).startswith("LocalRelation")
+
+    table = ManifestTable(str(tmp_path / "t"))
+    table.commit(incr_events(spark, "a", ["x", "y"], t), base_version=None)
+    table.commit_delta(incr_events(spark, "a", ["x"], t, n=5), [("a",)], base_version=1)
+    read = table.read(spark)
+    assert table.segment_count(2) == 2
+    # The claim map is broadcast, so its RDD is not in the read's own
+    # lineage; a pickled one shows in the plan as a LogicalRDD.
+    assert "LocalRelation" in _optimized(read)
+    assert "LogicalRDD" not in _optimized(read)
+    assert sorted((r["bin"], r["n"]) for r in read.collect()) == [("x", 5)]

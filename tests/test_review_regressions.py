@@ -162,3 +162,62 @@ def test_table_parts_skip_batch_dir_without_success(tmp_path):
             (d / "_SUCCESS").write_text("")
     parts = _table_parts(str(root), exclude_batch=-1)
     assert [p.rsplit("/", 1)[1] for p in parts] == ["batch-0", "batch-2"]
+
+
+def _pickled_frame_calls(source: str) -> list[int]:
+    """Lines of ``createDataFrame(x, …)`` calls whose ``x`` is a list,
+    tuple or comprehension, written inline or bound to a name in the same
+    function."""
+    import ast
+
+    rows_like = (ast.List, ast.Tuple, ast.ListComp, ast.GeneratorExp)
+    tree = ast.parse(source)
+    scopes = [n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)]
+    found = set()
+    for scope in [tree, *scopes]:
+        bound = {
+            t.id
+            for n in ast.walk(scope)
+            if isinstance(n, ast.Assign) and isinstance(n.value, rows_like)
+            for t in n.targets
+            if isinstance(t, ast.Name)
+        }
+        for n in ast.walk(scope):
+            if (
+                isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Attribute)
+                and n.func.attr == "createDataFrame"
+                and n.args
+                and (
+                    isinstance(n.args[0], rows_like)
+                    or isinstance(n.args[0], ast.Name) and n.args[0].id in bound
+                )
+            ):
+                found.add(n.lineno)
+    return sorted(found)
+
+
+def test_no_pickled_driver_frames():
+    """Frames built on the driver go through ``functions.cache.
+    local_frame`` (a JVM local relation). ``createDataFrame`` over Python
+    rows parallelizes pickled rows into a ``PythonRDD``, so every action
+    over the frame, or over a plan that joins or unions it, runs a
+    Python-worker stage. The one pickled call left is
+    ``_local_result_df``'s logged fallback for types Arrow cannot
+    convert."""
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1] / "forgettable_spark"
+    hits = {
+        str(p.relative_to(root)): lines
+        for p in sorted(root.rglob("*.py"))
+        if (lines := _pickled_frame_calls(p.read_text()))
+    }
+    fallback = "functions/cache.py"
+    assert len(hits.pop(fallback, [])) <= 1, fallback
+    assert not hits, hits
+    # The scan sees both spellings of a pickled frame.
+    assert _pickled_frame_calls("spark.createDataFrame([(1,)], 'a INT')") == [1]
+    assert _pickled_frame_calls(
+        "def f(spark):\n    rows = [(1,)]\n    return spark.createDataFrame(rows, 'a INT')"
+    ) == [3]

@@ -584,15 +584,7 @@ def secondary_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
       banded-OR recovery pair, priced by the registered
       ``semantic_probed_recall``;
     - ``mixture_plan`` (embedded by the registered ``mixture_apply``)
-      and ``semantic_dedup`` (the flat-codebook variant);
-    - the text family — ``token_counts``, ``language_id``,
-      ``doc_fingerprint``, ``pii_scan``, ``corpus_top_ngrams``,
-      ``quality_filter``, ``corpus_report``, ``text_stats`` — row-local
-      and partial-aggregate siblings of the registered text queries;
-    - the sampling and materialize twins — ``stratified_sample``,
-      ``sample_per_group``, ``pack_apply``, ``dedup_chunk_apply``,
-      ``dedup_canonicalize`` — beside the registered samplers and the
-      layout queries they apply.
+      and ``semantic_dedup`` (the flat-codebook variant).
     """
     from forgettable_spark import entrypoints_ext
 
@@ -611,19 +603,6 @@ def secondary_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "semantic_admit_banded": entrypoints_ext.q_semantic_admit_banded,
         "mixture_plan": entrypoints_ext.q_mixture_plan,
         "semantic_dedup": entrypoints_ext.q_semantic_dedup,
-        "token_counts": entrypoints_ext.q_token_counts,
-        "language_id": entrypoints_ext.q_language_id,
-        "doc_fingerprint": entrypoints_ext.q_doc_fingerprint,
-        "pii_scan": entrypoints_ext.q_pii_scan,
-        "corpus_top_ngrams": entrypoints_ext.q_corpus_top_ngrams,
-        "quality_filter": entrypoints_ext.q_quality_filter,
-        "corpus_report": entrypoints_ext.q_corpus_report,
-        "text_stats": entrypoints_ext.q_text_stats,
-        "stratified_sample": entrypoints_ext.q_stratified_sample,
-        "sample_per_group": entrypoints_ext.q_sample_per_group,
-        "pack_apply": entrypoints_ext.q_pack_apply,
-        "dedup_chunk_apply": entrypoints_ext.q_dedup_chunk_apply,
-        "dedup_canonicalize": entrypoints_ext.q_dedup_canonicalize,
     }
 
 
@@ -734,19 +713,6 @@ def secondary_oracle_sql(sf_dir: str | None = None) -> dict[str, str]:
         "dedup_simhash": entrypoints_ext.ORACLE_DEDUP_SIMHASH,
         "dedup_simhash_capped": entrypoints_ext.ORACLE_DEDUP_SIMHASH_CAPPED,
         "mixture_plan": entrypoints_ext._oracle_mixture_plan(),
-        "token_counts": entrypoints_ext.ORACLE_TOKEN_COUNTS,
-        "language_id": entrypoints_ext._oracle_language_id(),
-        "doc_fingerprint": entrypoints_ext.ORACLE_DOC_FINGERPRINT,
-        "pii_scan": entrypoints_ext.ORACLE_PII_SCAN,
-        "corpus_top_ngrams": entrypoints_ext.ORACLE_TOP_NGRAMS,
-        "quality_filter": entrypoints_ext.ORACLE_QUALITY_FILTER,
-        "corpus_report": entrypoints_ext.ORACLE_CORPUS_REPORT,
-        "text_stats": entrypoints_ext.ORACLE_TEXT_STATS,
-        "stratified_sample": entrypoints_ext.ORACLE_STRATIFIED_SAMPLE,
-        "sample_per_group": entrypoints_ext.ORACLE_SAMPLE_PER_GROUP,
-        "pack_apply": entrypoints_ext._oracle_pack_apply(),
-        "dedup_chunk_apply": entrypoints_ext.ORACLE_DEDUP_CHUNK_APPLY,
-        "dedup_canonicalize": entrypoints_ext._oracle_dedup_canonicalize(),
     }
     corpus = sf_dir or entrypoints_ext._KMEANS_ORACLE_DEFAULT_SF
     for name, gen in (

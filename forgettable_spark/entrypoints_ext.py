@@ -46,8 +46,6 @@ SIMHASH_BUCKET_CAP = 5  # hot-bucket cap for the registered capped variant:
 # buckets whose pairs all re-form through other bands). Production corpora
 # tune this orders of magnitude higher; it exists to bound boilerplate skew.
 
-_STOP_LIST_SQL = ", ".join(f"'{w}'" for w in text.ALL_STOPWORDS)
-
 # Shared SQL fragments ------------------------------------------------------
 
 _TOK_CTE = "tok AS (SELECT *, string_split(text, ' ') AS w FROM documents)"
@@ -84,87 +82,6 @@ def _cosine_sql(a: str, b: str) -> str:
     na = f"sqrt({_DOT.format(a=a, b=a)})"
     nb = f"sqrt({_DOT.format(a=b, b=b)})"
     return f"({dot}) / (({na}) * ({nb}))"
-
-
-# Text analysis --------------------------------------------------------------
-
-
-def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    return text.with_text_stats(docs).select(
-        "doc_id",
-        "n_tokens",
-        "n_distinct",
-        "mean_token_len",
-        "stopword_ratio",
-        "distinct_ratio",
-        "quality_score",
-    )
-
-
-ORACLE_TEXT_STATS = f"""WITH {_TOK_CTE}
-SELECT doc_id,
-  CAST(len(w) AS BIGINT) AS n_tokens,
-  CAST(len(list_distinct(w)) AS BIGINT) AS n_distinct,
-  CAST(length(text) - (len(w) - 1) AS DOUBLE) / CAST(len(w) AS DOUBLE) AS mean_token_len,
-  CAST(len(list_filter(w, x -> x IN ({_STOP_LIST_SQL}))) AS DOUBLE) / CAST(len(w) AS DOUBLE)
-    AS stopword_ratio,
-  CAST(len(list_distinct(w)) AS DOUBLE) / CAST(len(w) AS DOUBLE) AS distinct_ratio,
-  5e-1 * (CAST(len(list_filter(w, x -> x IN ({_STOP_LIST_SQL}))) AS DOUBLE) / CAST(len(w) AS DOUBLE))
-    + 5e-1 * (CAST(len(list_distinct(w)) AS DOUBLE) / CAST(len(w) AS DOUBLE)) AS quality_score
-FROM tok"""
-
-
-def q_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    return text.token_counts(docs)
-
-
-ORACLE_TOKEN_COUNTS = f"""SELECT doc_id,
-  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens_ws,
-  CAST(len(regexp_extract_all(text, '{text.BPE_ISH_PATTERN}')) AS BIGINT) AS n_tokens_bpe,
-  CAST(len(regexp_extract_all(text, '{text.BPE_ISH_PATTERN}')) AS DOUBLE)
-    / CAST(len(string_split(text, ' ')) AS DOUBLE) AS bpe_per_ws
-FROM documents"""
-
-
-def q_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    return text.language_id(docs).select("doc_id", "lang", "lang_pred", "lang_score")
-
-
-def _oracle_language_id() -> str:
-    scores = {
-        lang: f"CAST(len(list_filter(w, x -> x IN ({', '.join(repr(s) for s in ws)}))) AS BIGINT)"
-        for lang, ws in text.STOPWORDS.items()
-    }
-    score_cols = ",\n  ".join(f"{expr} AS s_{lang}" for lang, expr in scores.items())
-    best = f"GREATEST({', '.join('s_' + lang for lang in text.STOPWORDS)})"
-    whens = "\n    ".join(
-        f"WHEN s_{lang} = best AND best > 0 THEN '{lang}'" for lang in sorted(text.STOPWORDS)
-    )
-    return f"""WITH {_TOK_CTE},
-scored AS (SELECT doc_id, lang, w, {score_cols} FROM tok),
-b AS (SELECT *, {best} AS best FROM scored)
-SELECT doc_id, lang,
-  CASE {whens} ELSE 'und' END AS lang_pred,
-  best AS lang_score
-FROM b"""
-
-
-def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    fp = text.fingerprint(docs, k=MINHASH_K)
-    return fp.select(
-        "doc_id", "fp_md5", F.concat_ws("|", F.col("minhash")).alias("minhash_sig")
-    )
-
-
-ORACLE_DOC_FINGERPRINT = f"""WITH {_TOK_CTE}, {_SHINGLE_CTE},
-based AS (SELECT doc_id, text, {_MINHASH_BASE_SQL.format(src='shingles')} AS mhb FROM sh)
-SELECT doc_id, md5(text) AS fp_md5,
-  concat_ws('|', {', '.join(_minhash_sql(i) for i in range(MINHASH_K))}) AS minhash_sig
-FROM based"""
 
 
 # Dedup ----------------------------------------------------------------------
@@ -313,37 +230,6 @@ m AS (
 )
 SELECT doc_id, chunk_idx, chunk_md5, n_copies, rn = 1 AS is_canonical
 FROM m WHERE n_copies > 1"""
-
-
-def q_dedup_chunk_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The cleaning step chunk_dedup feeds: rebuild text with every
-    non-canonical duplicated chunk removed. Lazy — one row per doc."""
-    return dedup.chunk_dedup_apply(
-        load_table(spark, sf_dir, "documents"), width=CHUNK_DEDUP_WIDTH
-    )
-
-
-ORACLE_DEDUP_CHUNK_APPLY = f"""WITH t AS (
-  SELECT doc_id, string_split(text, ' ') AS w FROM documents
-  WHERE text IS NOT NULL
-),
-c AS (
-  SELECT doc_id, CAST(i AS BIGINT) AS chunk_idx,
-         array_to_string(
-           w[(i * {CHUNK_DEDUP_WIDTH} + 1):(i * {CHUNK_DEDUP_WIDTH} + {CHUNK_DEDUP_WIDTH})],
-           ' ') AS chunk
-  FROM t, unnest(range(0, CAST(ceil(len(w) / {CHUNK_DEDUP_WIDTH}.0) AS BIGINT))) AS u(i)
-),
-f AS (
-  SELECT *, ROW_NUMBER() OVER (
-    PARTITION BY md5(chunk) ORDER BY doc_id, chunk_idx) = 1 AS keep
-  FROM c
-)
-SELECT doc_id,
-       COALESCE(string_agg(chunk, ' ' ORDER BY chunk_idx) FILTER (WHERE keep), '') AS clean_text,
-       COUNT(*) AS n_chunks,
-       CAST(SUM(CASE WHEN NOT keep THEN 1 ELSE 0 END) AS BIGINT) AS n_dropped
-FROM f GROUP BY doc_id"""
 
 
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1547,16 +1433,58 @@ def _oracle_semantic_probed_recall(sf_dir: str) -> str:
 SEM_ADMIT_BATCH = 200
 
 
+def _count_bounded_batch(df: DataFrame, id_col: str, bound: int) -> DataFrame:
+    """The count-bounded admission batch shared by ``dedup_incremental``
+    and every semantic-admit arm: the ``bound`` lowest ``id_col`` values
+    by ``(md5('incr:'||id), id)`` — a distributed top-K (TakeOrdered, no
+    global sort), mirrored by the oracles' member CTE ``ORDER BY
+    md5('incr:'||id), id LIMIT bound``.
+
+    r13 (guide §2.4 — don't run jobs you don't need): the id set is
+    driver-bounded by construction (≤ the caller's cap of BIGINTs), so
+    it is collected ONCE and re-wrapped as a LOCAL one-partition
+    relation for the callers' semi/anti broadcast joins — the previous
+    scoped-cache subtree made each broadcast build re-evaluate the
+    cached top-K plan (cache fill + one distributed broadcast-build job
+    per join); a local relation broadcast-builds with no upstream stage
+    and the identical builds collapse to one ReusedExchange.
+    Row-identical: the joins see the exact same key set. (An isin()
+    literal filter was measured and rejected: a wash on the admit arms
+    at 200 ids, and 1.33 -> 1.78 s min-of-3 on dedup_incremental, where
+    four 1000-element InSet copies cost more in analysis/codegen than
+    the broadcast builds they replaced.)"""
+    from pyspark.sql import types as T
+
+    from forgettable_spark.functions.cache import _local_result_df
+
+    rows = (
+        df.select(
+            id_col,
+            F.md5(
+                F.concat(F.lit(f"{INCR_SALT}:"), F.col(id_col).cast("string"))
+            ).alias("_k"),
+        )
+        .orderBy("_k", id_col)
+        .limit(bound)
+        .select(id_col)
+        .collect()
+    )
+    return _local_result_df(
+        df.sparkSession, rows, T.StructType([T.StructField(id_col, T.LongType())])
+    )
+
+
 def _admit_member_split(
     emb: DataFrame,
     frame: DataFrame | None = None,
     n_rows: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """The count-bounded admission batch device shared by every
-    semantic-admit query arm and mirrored by the oracle member CTE
-    (``md5('incr:'||id), id LIMIT LEAST(SEM_ADMIT_BATCH, ceil(n/8))``):
-    returns (index, batch). ONE definition so the flat and probed arms
-    cannot drift from the shared oracle text (review r11).
+    """The semantic-admit arms' (index, batch) split over the
+    :func:`_count_bounded_batch` of ``vec_id`` with bound
+    ``min(SEM_ADMIT_BATCH, ceil(n/8))`` (the oracle member CTE's
+    ``LIMIT LEAST(SEM_ADMIT_BATCH, ceil(n/8))``). ONE definition so the
+    flat, probed and banded arms cannot drift from the shared oracle
+    text (review r11).
 
     ``frame`` (r12): an ASSIGNED view of the same id universe to split
     instead of ``emb`` — assignment is row-local, so it commutes with
@@ -1572,42 +1500,9 @@ def _admit_member_split(
     admit arm otherwise pays per call. Identical bound by construction:
     the footer count of an unfiltered single-table read IS ``count()``,
     and the oracle's ``LEAST(..., (COUNT(*)+7)//8)`` computes the same
-    number its own way.
-
-    r13 (guide §2.4 — don't run jobs you don't need): the member id SET
-    is driver-bounded by construction (≤ SEM_ADMIT_BATCH = 200 BIGINTs),
-    so it is collected ONCE and re-wrapped as a LOCAL one-partition
-    relation for the two semi/anti broadcast joins — the previous
-    scoped-cache subtree made each broadcast build re-evaluate the
-    cached top-K plan (cache fill + two distributed broadcast-build
-    jobs); a local relation broadcast-builds with no upstream stage and
-    the identical builds collapse to one ReusedExchange. Row-identical:
-    the joins see the exact same key set. (A 200-literal isin() filter
-    pair was measured too — a wash on wall clock; the local relation
-    keeps the join shape and avoids per-stage InSet codegen.)"""
-    from pyspark.sql import types as T
-
-    from forgettable_spark.functions.cache import _local_result_df
-
+    number its own way."""
     n = emb.count() if n_rows is None else n_rows
-    bound = min(SEM_ADMIT_BATCH, (n + 7) // 8)
-    rows = (
-        emb.select(
-            "vec_id",
-            F.md5(
-                F.concat(F.lit(f"{INCR_SALT}:"), F.col("vec_id").cast("string"))
-            ).alias("_k"),
-        )
-        .orderBy("_k", "vec_id")
-        .limit(bound)
-        .select("vec_id")
-        .collect()
-    )
-    new_ids = _local_result_df(
-        emb.sparkSession,
-        rows,
-        T.StructType([T.StructField("vec_id", T.LongType())]),
-    )
+    new_ids = _count_bounded_batch(emb, "vec_id", min(SEM_ADMIT_BATCH, (n + 7) // 8))
     tgt = frame if frame is not None else emb
     return (
         tgt.join(F.broadcast(new_ids), "vec_id", "left_anti"),
@@ -2118,82 +2013,6 @@ comp AS (SELECT node, MIN(label) AS component FROM reach GROUP BY node)
 SELECT node AS doc_id, component, node = component AS keep FROM comp"""
 
 
-def q_dedup_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The decision layer above `dedup_components`: per duplicate
-    cluster, keep the HIGHEST-QUALITY member (``components.
-    canonical_by_score`` over the text quality score), not the smallest
-    id — the choice that matters when a boilerplate-stripped mirror
-    should beat the original crawl hit. Same O(near-dup docs) output
-    contract as `dedup_components`, plus the score and the chosen
-    representative per member."""
-    from forgettable_spark.extensions.components import (
-        canonical_by_score,
-        connected_components,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    _, sp = _sketch_spine(spark, sf_dir)
-
-    def build() -> DataFrame:
-        pairs = dedup.simhash_pairs_from_sketch(
-            sp["simhash"], max_hamming=SIMHASH_MAX_HAMMING
-        )
-        comp = connected_components(pairs)
-        members = comp.select(F.col("node").alias("doc_id"), "component")
-        # Members are O(near-dup docs) — broadcast them into the corpus
-        # scan; quality re-derives row-locally on the joined slice (the
-        # same formula the text_stats family oracle-locks).
-        scored = text.with_text_stats(docs.join(F.broadcast(members), "doc_id"))
-        return canonical_by_score(
-            scored.select("doc_id", "component", "quality_score"), "quality_score"
-        ).select("doc_id", "component", "quality_score", "canonical_id", "keep")
-
-    return run_released(spark, build)
-
-
-def _oracle_dedup_canonicalize() -> str:
-    """The components fixpoint (recursive CTE, as `_oracle_dedup_
-    components`) joined to the text-stats quality formula, with the
-    representative picked by the mirrored (score DESC, id ASC) window."""
-    qs = (
-        f"5e-1 * (CAST(len(list_filter(w, x -> x IN ({_STOP_LIST_SQL}))) AS DOUBLE)"
-        " / CAST(len(w) AS DOUBLE))"
-        " + 5e-1 * (CAST(len(list_distinct(w)) AS DOUBLE) / CAST(len(w) AS DOUBLE))"
-    )
-    return f"""WITH RECURSIVE {_SIMHASH_CAND_CTE},
-pairs AS (
-  SELECT doc_a, doc_b FROM cand
-  WHERE bit_count(xor(sim_a, sim_b)) <= {SIMHASH_MAX_HAMMING}
-),
-edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM pairs
-  UNION
-  SELECT doc_b AS src, doc_a AS dst FROM pairs
-),
-reach(node, label) AS (
-  SELECT src, src FROM edges
-  UNION
-  SELECT e.dst, r.label FROM reach r JOIN edges e ON r.node = e.src
-),
-comp AS (SELECT node AS doc_id, MIN(label) AS component FROM reach GROUP BY node),
-scored AS (
-  SELECT t.doc_id, comp.component, {qs} AS quality_score
-  FROM comp JOIN (
-    SELECT doc_id, string_split(text, ' ') AS w FROM documents
-  ) t USING (doc_id)
-),
-best AS (
-  SELECT component, doc_id AS canonical_id FROM (
-    SELECT component, doc_id, ROW_NUMBER() OVER (
-      PARTITION BY component ORDER BY quality_score DESC, doc_id ASC) AS rn
-    FROM scored
-  ) WHERE rn = 1
-)
-SELECT s.doc_id, s.component, s.quality_score, b.canonical_id,
-       s.doc_id = b.canonical_id AS keep
-FROM scored s JOIN best b USING (component)"""
-
-
 # Multimodal ------------------------------------------------------------------
 #
 # No parquet media ships in the testdata, so the table is the deterministic
@@ -2444,73 +2263,9 @@ SELECT j.doc_id, j.eval_doc_id, j.n_shared,
 FROM j JOIN sz USING (eval_doc_id)"""
 
 
-def q_pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII detection + redaction fingerprint. The synthetic corpus holds
-    no PII, so the query plants deterministic emails (doc_id % 7) and
-    URLs (doc_id % 11) in both engines and verifies the operator finds
-    and redacts exactly those — a byte-for-byte round-trip check via
-    redacted_md5, not a vacuous all-zero pass."""
-    docs = load_table(spark, sf_dir, "documents")
-    d = F.col("doc_id")
-    t0 = F.when(
-        d % 7 == 0,
-        F.concat(
-            F.col("text"),
-            F.lit(" contact user"),
-            d.cast("string"),
-            F.lit("@example.com for details"),
-        ),
-    ).otherwise(F.col("text"))
-    t1 = F.when(
-        d % 11 == 0,
-        F.concat(t0, F.lit(" see http://site"), d.cast("string"), F.lit(".example.org/page")),
-    ).otherwise(t0)
-    return text.pii_scan(docs.withColumn("text", t1))
-
-
-ORACLE_PII_SCAN = f"""WITH inj AS (
-  SELECT doc_id,
-    CASE WHEN doc_id % 7 = 0
-      THEN text || ' contact user' || CAST(doc_id AS VARCHAR) || '@example.com for details'
-      ELSE text END AS t0
-  FROM documents
-), inj2 AS (
-  SELECT doc_id,
-    CASE WHEN doc_id % 11 = 0
-      THEN t0 || ' see http://site' || CAST(doc_id AS VARCHAR) || '.example.org/page'
-      ELSE t0 END AS t
-  FROM inj
-)
-SELECT doc_id,
-  CAST(len(regexp_extract_all(t, '{text.EMAIL_PATTERN}')) AS BIGINT) AS n_emails,
-  CAST(len(regexp_extract_all(t, '{text.URL_PATTERN}')) AS BIGINT) AS n_urls,
-  md5(regexp_replace(regexp_replace(t, '{text.EMAIL_PATTERN}', '<EMAIL>', 'g'),
-      '{text.URL_PATTERN}', '<URL>', 'g')) AS redacted_md5
-FROM inj2"""
-
-
-TOP_NGRAMS_K = 20
-
-
-def q_corpus_top_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-wide 3-gram frequency top-20 (ties broken by gram asc —
-    a unique total order, so both engines pick the same set)."""
-    docs = load_table(spark, sf_dir, "documents")
-    return text.top_ngrams(docs, n=3, k=TOP_NGRAMS_K)
-
-
-ORACLE_TOP_NGRAMS = f"""WITH {_TOK_CTE},
-{_SHINGLE_CTE},
-f AS (SELECT u.s AS ngram, COUNT(*) AS freq FROM sh, unnest(shingles) AS u(s) GROUP BY 1)
-SELECT ngram, CAST(freq AS BIGINT) AS freq FROM f
-ORDER BY freq DESC, ngram LIMIT {TOP_NGRAMS_K}"""
-
-
-# Deterministic sampling / splits / quality filter ----------------------------
+# Deterministic sampling / splits / mixing -----------------------------------
 
 SPLIT_WEIGHTS = {"train": 0.9, "val": 0.05, "test": 0.05}
-SAMPLE_FRACTIONS = {"en": 0.5, "zh": 0.25}
-SAMPLE_DEFAULT_FRACTION = 0.1
 
 
 def q_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2528,54 +2283,6 @@ ORACLE_HASH_SPLIT = """WITH b AS (
 SELECT doc_id,
   CASE WHEN bkt < 9000 THEN 'train' WHEN bkt < 9500 THEN 'val' ELSE 'test' END AS split
 FROM b"""
-
-
-def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-language deterministic downsampling (en 50%, zh 25%, rest
-    10%) — row-local hash filter, nested-sample property for free."""
-    docs = load_table(spark, sf_dir, "documents")
-    return sampling.stratified_sample(
-        docs, SAMPLE_FRACTIONS, default_fraction=SAMPLE_DEFAULT_FRACTION
-    ).select("doc_id", "lang")
-
-
-def _stratified_threshold_case() -> str:
-    """Integer bucket thresholds resolved with the SAME Python round() the
-    engine uses (sampling.stratified_sample) — no float arithmetic in
-    either plan, so the kept sets cannot diverge."""
-    whens = " ".join(
-        f"WHEN '{s}' THEN {round(f * sampling.BUCKETS)}"
-        for s, f in SAMPLE_FRACTIONS.items()
-    )
-    return f"CASE lang {whens} ELSE {round(SAMPLE_DEFAULT_FRACTION * sampling.BUCKETS)} END"
-
-
-ORACLE_STRATIFIED_SAMPLE = f"""WITH b AS (
-  SELECT doc_id, lang,
-    ('0x' || substr(md5('sample:' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT % 10000 AS bkt
-  FROM documents
-)
-SELECT doc_id, lang FROM b
-WHERE bkt < ({_stratified_threshold_case()})"""
-
-
-GROUP_SAMPLE_CAP = 40  # bites at sf0.01: every language has >40 docs
-
-
-def q_sample_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Balanced data mixing: at most GROUP_SAMPLE_CAP docs per language,
-    deterministic md5 order — absolute-count balancing that fraction
-    sampling can't express without knowing group sizes."""
-    docs = load_table(spark, sf_dir, "documents")
-    return sampling.sample_per_group(docs, GROUP_SAMPLE_CAP).select("doc_id", "lang")
-
-
-ORACLE_SAMPLE_PER_GROUP = f"""SELECT doc_id, lang FROM (
-  SELECT doc_id, lang, ROW_NUMBER() OVER (
-    PARTITION BY lang
-    ORDER BY md5('sample' || '|' || CAST(doc_id AS VARCHAR)), doc_id) AS srn
-  FROM documents
-) WHERE srn <= {GROUP_SAMPLE_CAP}"""
 
 
 #: mixture_plan's target recipe: non-uniform shares over five of the
@@ -2642,10 +2349,9 @@ FROM p CROSS JOIN s"""
 
 
 def q_mixture_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Secondary (the plan-primary / apply-twin split of the packing and
-    chunk-dedup families): materialize the registered `mixture_plan` —
-    exactly keep_n docs per source in the engine's deterministic md5
-    order (`sampling.mixture_apply`)."""
+    """Materialize the `mixture_plan` (a secondary) — exactly keep_n
+    docs per source in the engine's deterministic md5 order
+    (`sampling.mixture_apply`)."""
     docs = load_table(spark, sf_dir, "documents")
     return sampling.mixture_apply(docs, MIXTURE_TARGETS)
 
@@ -2687,37 +2393,6 @@ ORACLE_SAMPLE_PER_GROUP_BUDGET = f"""SELECT doc_id, lang, n_chars FROM (
 ) WHERE cum <= {GROUP_SAMPLE_BUDGET} OR srn = 1"""
 
 
-def q_corpus_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-row dataset card (ingest sanity / filter impact / dup level)
-    — integer-exact corpus aggregates in one pass + an md5 group pass."""
-    return text.corpus_report(load_table(spark, sf_dir, "documents"))
-
-
-ORACLE_CORPUS_REPORT = """WITH base AS (
-  SELECT
-    CAST(COUNT(*) AS BIGINT) AS n_docs,
-    CAST(COUNT(*) FILTER (WHERE text IS NULL) AS BIGINT) AS n_null_text,
-    CAST(COUNT(DISTINCT lang) AS BIGINT) AS n_langs,
-    CAST(SUM(n_chars) AS BIGINT) AS total_chars,
-    CAST(SUM(CASE WHEN text IS NOT NULL
-         THEN len(string_split(text, ' ')) END) AS BIGINT) AS total_tokens,
-    CAST(SUM(CASE WHEN text IS NOT NULL
-         AND len(string_split(text, ' ')) >= 20
-         AND CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE)
-             / CAST(len(string_split(text, ' ')) AS DOUBLE) >= 3.5e-1
-         THEN 1 ELSE 0 END) AS BIGINT) AS n_pass_quality
-  FROM documents
-),
-dups AS (
-  SELECT
-    CAST(COALESCE(SUM(CASE WHEN c > 1 THEN c ELSE 0 END), 0) AS BIGINT) AS n_dup_docs,
-    CAST(COALESCE(SUM(CASE WHEN c > 1 THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_dup_groups
-  FROM (SELECT md5(text) AS h, COUNT(*) AS c FROM documents
-        WHERE text IS NOT NULL GROUP BY 1)
-)
-SELECT * FROM base, dups"""
-
-
 def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Within-document repetition (Gopher-rule family): top-bigram and
     duplicate-bigram fractions per doc. Secondary registry — the driver
@@ -2748,28 +2423,6 @@ SELECT doc_id,
   CAST(m AS DOUBLE) / CAST(n AS DOUBLE) AS top_bigram_frac,
   CAST(n - d AS DOUBLE) / CAST(n AS DOUBLE) AS dup_bigram_frac
 FROM agg"""
-
-
-def q_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pre-training quality gate: length + lexical-diversity thresholds
-    as one scan-stage predicate; survivors carry their scores."""
-    docs = load_table(spark, sf_dir, "documents")
-    return text.quality_filter(docs, min_tokens=20, min_distinct_ratio=0.35)
-
-
-ORACLE_QUALITY_FILTER = f"""WITH {_TOK_CTE},
-s AS (
-  SELECT doc_id,
-    CAST(len(w) AS BIGINT) AS n_tokens,
-    CAST(len(list_distinct(w)) AS DOUBLE) / CAST(len(w) AS DOUBLE) AS distinct_ratio,
-    CAST(len(list_filter(w, x -> x IN ({_STOP_LIST_SQL}))) AS DOUBLE) / CAST(len(w) AS DOUBLE)
-      AS stopword_ratio
-  FROM tok
-)
-SELECT doc_id, n_tokens, distinct_ratio, stopword_ratio,
-  5e-1 * stopword_ratio + 5e-1 * distinct_ratio AS quality_score
-FROM s
-WHERE n_tokens >= 20 AND distinct_ratio >= 0.35 AND stopword_ratio >= 0.0"""
 
 
 def q_tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3101,24 +2754,6 @@ def _oracle_pack_sequences() -> str:
     return packing.pack_oracle_sql()
 
 
-def q_pack_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Materialized packing (``packing.pack_apply``): one row per
-    (shard, bin) with the packed sequence's md5 — every packed training
-    sequence verified byte-for-byte cross-engine without text leaving
-    the executors. Secondary registry: the apply step of the primary
-    `pack_sequences` layout (same rotation logic as dedup_chunk_apply)."""
-    from forgettable_spark.extensions import packing
-
-    docs = load_table(spark, sf_dir, "documents")
-    return packing.pack_apply(docs)
-
-
-def _oracle_pack_apply() -> str:
-    from forgettable_spark.extensions import packing
-
-    return packing.pack_apply_oracle_sql()
-
-
 def q_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus bigram-LM fluency score (``extensions/lm.py``): the CCNet
     / RefinedWeb-style LM quality filter with a hash-exact rational
@@ -3190,37 +2825,8 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             n_docs = table_footer_rows(sf_dir, "documents")
         except (FileNotFoundError, OSError, ValueError, ImportError):
             n_docs = docs.count()
-        bound = min(INCR_BATCH_DOCS, (n_docs + 7) // 8)
-        # r13 (guide §2.4): the batch id set is driver-bounded by
-        # construction (≤ INCR_BATCH_DOCS = 1000 BIGINTs), so collect it
-        # ONCE and re-wrap it as a LOCAL one-partition relation for the
-        # four semi/anti broadcast joins — the previous scoped-cache
-        # subtree made every broadcast build re-read the cached top-K
-        # (cache fill + four distributed broadcast-build jobs); a local
-        # relation broadcast-builds without any upstream stage, and the
-        # four identical builds collapse to one ReusedExchange.
-        # Row-identical: the join sees the exact same key set. (A
-        # 1000-literal isin() filter was measured and rejected — four
-        # 1000-element InSet copies cost more in analysis/codegen than
-        # the broadcast builds they replaced: 1.33 -> 1.78 s min-of-3.)
-        from pyspark.sql import types as T
-
-        from forgettable_spark.functions.cache import _local_result_df
-
-        ids = (
-            docs.select(
-                "doc_id",
-                F.md5(
-                    F.concat(F.lit(f"{INCR_SALT}:"), F.col("doc_id").cast("string"))
-                ).alias("_k"),
-            )
-            .orderBy("_k", "doc_id")
-            .limit(bound)
-            .select("doc_id")
-            .collect()
-        )
-        new_ids = _local_result_df(
-            spark, ids, T.StructType([T.StructField("doc_id", T.LongType())])
+        new_ids = _count_bounded_batch(
+            docs, "doc_id", min(INCR_BATCH_DOCS, (n_docs + 7) // 8)
         )
         sigs = sp["shingled"].select("doc_id", "mh")
         return dedup.incremental_admit_from_sketches(

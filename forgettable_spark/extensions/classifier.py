@@ -3,7 +3,7 @@ own labels, then score every document with the learned model.
 
 The standard production ladder for corpus quality is rules → cheap
 learned classifier → (sometimes) LLM judge: the rule gate
-(:func:`text.quality_filter`) is precise but rigid, so pipelines
+(:func:`text.quality_pass`) is precise but rigid, so pipelines
 DISTILL it (or a costlier teacher) into a token-level linear model that
 generalizes the signal and exposes a tunable threshold (CCNet's
 fastText stage is the canonical example). This module runs that
@@ -70,7 +70,7 @@ def _token_label_pairs_standalone(
     """(doc_id, label, token, tf) from raw text — the non-spine branch
     of :func:`distill_quality_classifier`. THE rule gate
     (text.quality_pass) labels each document; the label is the same
-    expression quality_filter/corpus_report/source_curation gate on.
+    expression source_curation gates on.
 
     Two-step select, deliberately (same fix as postings.py
     _tables_from_base, r9): alongside the explode in one projection, the

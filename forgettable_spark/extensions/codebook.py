@@ -489,11 +489,9 @@ def semantic_dedup(
 
     Keep rule: a document is dropped iff a LOWER-id member of its cell
     scores ``cosine >= threshold`` against it (keep-min-id, the engine's
-    canonical deterministic rule — see ``connected_components``; the
-    quality-based representative choice is the separate
-    ``dedup_canonicalize`` operator). Output is one row per DROPPED
-    document with its minimal witness: (vec_id, cell, dup_of, cosine) —
-    O(duplicates), never O(corpus).
+    canonical deterministic rule — see ``connected_components``). Output
+    is one row per DROPPED document with its minimal witness: (vec_id,
+    cell, dup_of, cosine) — O(duplicates), never O(corpus).
 
     Scale posture (100 TB): assignment is row-local literal-codebook
     folds in the scan stage (``centroid_cell``); the only shuffle is the

@@ -205,41 +205,6 @@ def connected_components(
     )
 
 
-def dedup_keep_best(
-    pairs: DataFrame,
-    scored_docs: DataFrame,
-    id_col: str = "doc_id",
-    score_col: str = "score",
-) -> DataFrame:
-    """Keep/drop decisions that retain the HIGHEST-SCORING document of
-    each near-dup component (ties broken by minimum id) instead of
-    :func:`dedup_keep_list`'s canonical-min rule — what production
-    pipelines actually do (keep the longest / highest-quality member,
-    e.g. a `text.quality_score` column, rather than an arbitrary id).
-
-    ``scored_docs`` must carry ``id_col`` and ``score_col`` for every
-    document. Returns (doc_id, component, score, keep); singletons
-    (absent from every pair) keep themselves. One extra window over the
-    component key on top of the connected-components labels — the
-    scores join rides the same id-keyed shuffle the label join already
-    pays.
-    """
-    from pyspark.sql import Window
-
-    comp = connected_components(pairs)
-    labeled = (
-        scored_docs.select(F.col(id_col), F.col(score_col).alias("score"))
-        .join(comp.withColumnRenamed("node", id_col), id_col, "left")
-        .withColumn("component", F.coalesce(F.col("component"), F.col(id_col)))
-    )
-    w = Window.partitionBy("component").orderBy(
-        F.desc("score"), F.asc(id_col)
-    )
-    return labeled.withColumn("keep", F.row_number().over(w) == 1).select(
-        id_col, "component", "score", "keep"
-    )
-
-
 def dedup_keep_list(
     pairs: DataFrame,
     all_ids: DataFrame,
@@ -259,35 +224,3 @@ def dedup_keep_list(
         .withColumn("keep", F.col(id_col) == F.col("component"))
     )
     return out
-
-
-def canonical_by_score(
-    members: DataFrame,
-    score_col: str,
-    id_col: str = "doc_id",
-    comp_col: str = "component",
-) -> DataFrame:
-    """Representative selection over duplicate clusters: per component,
-    ``canonical_id`` = the member with the HIGHEST ``score_col`` (ties →
-    lowest ``id_col``), plus a per-member ``keep`` verdict.
-
-    This is the decision layer between pairwise dedup and the training
-    set: min-id components answer "which docs are duplicates"; this
-    answers "which copy do we train on" (keep the highest-quality copy,
-    not the one with the smallest id — boilerplate-stripped mirrors
-    usually beat the original crawl hit).
-
-    One window over the component key — components are O(near-dup docs),
-    so the shuffle is tiny relative to the corpus. The argmax is a
-    struct max: (score, −id) compares score first, then −id, so equal
-    scores pick the smallest id — exactly the oracle's
-    ``ORDER BY score DESC, id ASC`` window.
-    """
-    from pyspark.sql import Window
-
-    best = F.max(
-        F.struct(F.col(score_col).alias("s"), (-F.col(id_col)).alias("ni"))
-    ).over(Window.partitionBy(comp_col))
-    return members.withColumn("canonical_id", -best["ni"]).withColumn(
-        "keep", F.col(id_col) == F.col("canonical_id")
-    )

@@ -27,7 +27,7 @@ import logging
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from forgettable_spark.extensions.text import minhash_signature, shingles, tokens
+from forgettable_spark.extensions.text import shingles, tokens
 from forgettable_spark.functions.cache import scoped_cache
 
 logger = logging.getLogger("forgettable_spark.extensions")
@@ -308,25 +308,6 @@ def _minhash_sketches(
     return out if keep_tokens else out.drop("_t")
 
 
-def minhash_sketches_from_shingled(
-    sh: DataFrame, id_col: str = "doc_id", k: int = 12
-) -> DataFrame:
-    """:func:`_minhash_sketches`'s (id, shd, mh) shape derived from a
-    PRE-BUILT shingled frame (id, shd distinct, ...) instead of raw
-    text — the sketch half of the shared-scan API
-    (:func:`ngram_jaccard_pairs_from_shingled` is the exact-join half).
-    The min-fold is order-independent, so a sorted ``shd`` yields the
-    identical signature."""
-    from forgettable_spark.extensions.text import minhash_signature_from_base, shingle_hash
-
-    return (
-        sh.select(F.col(id_col), "shd")
-        .withColumn("_base", F.transform(F.col("shd"), shingle_hash))
-        .withColumn("mh", minhash_signature_from_base(F.col("_base"), k))
-        .drop("_base")
-    )
-
-
 def minhash_lsh_pairs(
     docs: DataFrame,
     text_col: str = "text",
@@ -568,65 +549,6 @@ def chunk_dedup(
             "chunk_md5",
             "n_copies",
             (F.col("_rn") == 1).alias("is_canonical"),
-        )
-    )
-
-
-def chunk_dedup_apply(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    width: int = 20,
-) -> DataFrame:
-    """Apply chunk-level dedup: rebuild each document's text with every
-    NON-CANONICAL duplicated chunk removed (the first occurrence
-    corpus-wide survives, later occurrences are cut) — the cleaning step
-    :func:`chunk_dedup` feeds in a training-data pipeline.
-
-    Returns ``(doc_id, clean_text, n_chunks, n_dropped)``; documents
-    with NULL text are excluded (they have no chunks to clean). The
-    reassembly is ``concat_ws`` over the kept chunks in chunk order, so
-    for chunk-aligned duplication ``clean_text`` is exactly the source
-    text minus the dropped spans.
-
-    Scale shape: the only shuffles are the chunk-hash window (fixed
-    32-char keys, as in :func:`chunk_dedup`) and the per-document
-    regroup keyed by ``id_col`` — both O(chunks); the chunk text rides
-    only the second, document-local shuffle, and the map-side partial
-    of ``collect_list`` keeps it one row per document on the wire.
-    """
-    from pyspark.sql import Window
-
-    exploded = docs.filter(F.col(text_col).isNotNull()).select(
-        F.col(id_col),
-        F.posexplode(chunk_array(F.col(text_col), width)).alias(
-            "chunk_idx", "_chunk"
-        ),
-    )
-    hashed = exploded.withColumn("chunk_md5", F.md5(F.col("_chunk")))
-    worder = Window.partitionBy("chunk_md5").orderBy(id_col, "chunk_idx")
-    flagged = hashed.withColumn("_keep", F.row_number().over(worder) == 1)
-    return (
-        flagged.groupBy(id_col)
-        .agg(
-            F.concat_ws(
-                " ",
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.when(
-                                F.col("_keep"),
-                                F.struct(F.col("chunk_idx"), F.col("_chunk").alias("c")),
-                            )
-                        )
-                    ),
-                    lambda s: s["c"],
-                ),
-            ).alias("clean_text"),
-            F.count("*").cast("bigint").alias("n_chunks"),
-            F.sum(F.when(~F.col("_keep"), 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_dropped"),
         )
     )
 

@@ -8,12 +8,10 @@ and cut the stream every ``budget`` tokens; a document may span a cut
 (the attention mask / EOS handling downstream is the trainer's
 concern). :func:`pack_concat` computes that layout — which bin(s) each
 document lands in and at what offset — without materializing any token
-stream; :func:`pack_apply` materializes the packed bins (emitting each
-sequence's md5, so the whole packed corpus verifies cross-engine
-without text leaving the executors).
+stream.
 
-Semantics (shared bit-for-bit with the DuckDB oracles, and defined ONCE
-in :func:`_sharded_cum` / :func:`_cum_cte_sql` for both operators):
+Semantics (shared bit-for-bit with the DuckDB oracle through
+:func:`_sharded_cum` / :func:`_cum_cte_sql`):
 
 - Documents with NULL text are excluded (they contribute no tokens).
 - Order is the engine's standard deterministic pseudo-random order:
@@ -34,9 +32,7 @@ in :func:`_sharded_cum` / :func:`_cum_cte_sql` for both operators):
 
 Scale posture: one shuffle keyed by shard, then a sort-based window per
 shard (Spark's standard window execution). The layout's rows carry
-(id, 3 ints) — the text itself never moves; the apply step additionally
-explodes per-doc bin spans (corpus_tokens / budget rows in total) and
-reassembles each bin with one (shard, bin) aggregation.
+(id, 3 ints) — the text itself never moves.
 """
 
 from __future__ import annotations
@@ -58,14 +54,10 @@ def _sharded_cum(
     text_col: str,
     id_col: str,
     salt: str,
-    keep_tokens: bool,
 ) -> DataFrame:
-    """THE layout definition, shared by :func:`pack_concat` and
-    :func:`pack_apply` (one encoding → the apply step can never pack a
-    different stream than the layout reports): (doc_id, shard, n_tokens,
-    _cb) with the token array ``_w`` kept only when the caller needs it
-    — the layout's window shuffle must stay (id, ints)-narrow, so the
-    array is carried through the sort only for the apply step."""
+    """THE layout definition behind :func:`pack_concat`: (doc_id, shard,
+    n_tokens, _cb), where ``_cb`` is the shard's running token total
+    before the document. The window shuffle stays (id, ints)-narrow."""
     order = F.md5(F.concat_ws("|", F.lit(salt), F.col(id_col).cast("string")))
     # Shard from a DIFFERENT salt than the order hash: deriving both from
     # one digest would correlate "which stream" with "where in the
@@ -77,19 +69,12 @@ def _sharded_cum(
     shard = (
         F.conv(F.substring(shard_h, 1, 15), 16, 10).cast("bigint") % F.lit(n_shards)
     ).cast("int")
-    cols = [
+    base = docs.filter(F.col(text_col).isNotNull()).select(
         F.col(id_col).alias("doc_id"),
-        tokens(F.col(text_col)).alias("_w"),
         shard.alias("shard"),
         order.alias("_ord"),
-    ]
-    base = (
-        docs.filter(F.col(text_col).isNotNull())
-        .select(*cols)
-        .withColumn("n_tokens", F.size("_w").cast("bigint"))
+        F.size(tokens(F.col(text_col))).cast("bigint").alias("n_tokens"),
     )
-    if not keep_tokens:
-        base = base.drop("_w")
     w = (
         Window.partitionBy("shard")
         .orderBy("_ord", "doc_id")
@@ -100,13 +85,12 @@ def _sharded_cum(
     ).drop("_ord")
 
 
-def _cum_cte_sql(n_shards: int, salt: str, keep_tokens: bool) -> str:
+def _cum_cte_sql(n_shards: int, salt: str) -> str:
     """DuckDB twin of :func:`_sharded_cum` as ``base``/``cum`` CTE text
     (same single definition discipline on the oracle side). The salt is
     data, not SQL — escaped."""
     s = _sql_str(salt)
     s_shard = _sql_str(salt + "-shard")
-    w_col = "w, " if keep_tokens else ""
     return f"""base AS (
   SELECT doc_id, string_split(text, ' ') AS w,
     CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
@@ -116,19 +100,12 @@ def _cum_cte_sql(n_shards: int, salt: str, keep_tokens: bool) -> str:
   FROM documents WHERE text IS NOT NULL
 ),
 cum AS (
-  SELECT doc_id, {w_col}shard, n_tokens,
+  SELECT doc_id, shard, n_tokens,
     COALESCE(SUM(n_tokens) OVER (
       PARTITION BY shard ORDER BY ord, doc_id
       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cb
   FROM base
 )"""
-
-
-def _check_params(op: str, budget: int, n_shards: int) -> None:
-    if budget <= 0:
-        raise ValueError(f"{op}: budget must be positive, got {budget}")
-    if n_shards <= 0:
-        raise ValueError(f"{op}: n_shards must be positive, got {n_shards}")
 
 
 def pack_concat(
@@ -148,10 +125,13 @@ def pack_concat(
     ``end_bin - start_bin + 1`` sequences. Offsets and bins are
     shard-local (module docstring).
     """
-    _check_params("pack_concat", budget, n_shards)
+    if budget <= 0:
+        raise ValueError(f"pack_concat: budget must be positive, got {budget}")
+    if n_shards <= 0:
+        raise ValueError(f"pack_concat: n_shards must be positive, got {n_shards}")
     # Integer division (DIV / DuckDB //), not floor-of-double-divide:
     # exact at any stream length, no dependence on double rounding.
-    return _sharded_cum(docs, n_shards, text_col, id_col, salt, keep_tokens=False).select(
+    return _sharded_cum(docs, n_shards, text_col, id_col, salt).select(
         "doc_id",
         "shard",
         "n_tokens",
@@ -167,120 +147,9 @@ def pack_oracle_sql(
     """DuckDB twin of :func:`pack_concat` over the pre-registered
     ``documents`` view — same hashes, same window, same integer
     arithmetic (shared CTE text)."""
-    return f"""WITH {_cum_cte_sql(n_shards, salt, keep_tokens=False)}
+    return f"""WITH {_cum_cte_sql(n_shards, salt)}
 SELECT doc_id, shard, n_tokens,
   CAST(cb // {budget} AS BIGINT) AS start_bin,
   CAST((cb + n_tokens - 1) // {budget} AS BIGINT) AS end_bin,
   CAST(cb % {budget} AS BIGINT) AS offset_in_bin
 FROM cum"""
-
-
-def pack_apply(
-    docs: DataFrame,
-    budget: int = PACK_BUDGET,
-    n_shards: int = 4,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    salt: str = "pack",
-) -> DataFrame:
-    """MATERIALIZE the packed sequences :func:`pack_concat` lays out:
-    one row per (shard, bin) with the bin's document count, token count,
-    and the md5 of its space-joined token stream — the verification
-    shape (the oracle checks every packed sequence byte-for-byte without
-    the text ever leaving the executors; a trainer-facing writer would
-    emit the joined text instead of its hash).
-
-    Documents spanning a bin boundary are SPLIT at it (the concat-and-
-    cut contract): each (doc, bin) overlap contributes the token slice
-    covering ``[bin·budget, (bin+1)·budget) ∩ [cum_before, cum_before +
-    n_tokens)``. Within a bin, pieces concatenate in stream order
-    (ascending ``cum_before`` — unique per shard, so the sort is total).
-    Every bin except possibly each shard's last holds exactly ``budget``
-    tokens (test-asserted).
-
-    Plan shape: the same single shard-keyed window as the layout (via
-    the shared :func:`_sharded_cum`, with the token arrays carried
-    through), then one explode of per-doc bin spans (a doc yields
-    ``end_bin - start_bin + 1`` rows — corpus tokens / budget total, not
-    corpus × anything) and one (shard, bin) aggregation whose sorted
-    struct list reassembles the stream deterministically.
-    """
-    _check_params("pack_apply", budget, n_shards)
-    cum = _sharded_cum(docs, n_shards, text_col, id_col, salt, keep_tokens=True)
-    spans = cum.select(
-        "shard",
-        "_w",
-        "_cb",
-        "n_tokens",
-        F.explode(
-            F.sequence(
-                F.expr(f"_cb DIV {budget}"),
-                F.expr(f"(_cb + n_tokens - 1) DIV {budget}"),
-            )
-        ).alias("bin"),
-    )
-    # token indices (0-based within the doc) covered by this bin
-    lo = F.greatest(F.col("bin") * budget - F.col("_cb"), F.lit(0).cast("bigint"))
-    hi = F.least(
-        (F.col("bin") + 1) * budget - F.col("_cb"), F.col("n_tokens")
-    )  # exclusive
-    pieces = spans.select(
-        "shard",
-        "bin",
-        F.col("_cb").alias("_pos"),
-        F.slice(F.col("_w"), (lo + 1).cast("int"), (hi - lo).cast("int")).alias(
-            "_piece"
-        ),
-    )
-    return (
-        pieces.groupBy("shard", "bin")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-            F.sum(F.size("_piece")).cast("bigint").alias("n_tokens"),
-            F.md5(
-                F.array_join(
-                    F.flatten(
-                        F.transform(
-                            F.array_sort(
-                                F.collect_list(F.struct("_pos", "_piece"))
-                            ),
-                            lambda x: x["_piece"],
-                        )
-                    ),
-                    " ",
-                )
-            ).alias("packed_md5"),
-        )
-        .select(
-            "shard",
-            F.col("bin").cast("bigint").alias("bin"),
-            "n_docs",
-            "n_tokens",
-            "packed_md5",
-        )
-    )
-
-
-def pack_apply_oracle_sql(
-    budget: int = PACK_BUDGET, n_shards: int = 4, salt: str = "pack"
-) -> str:
-    """DuckDB twin of :func:`pack_apply` — same window (shared CTE
-    text), spans, slices, stream-order reassembly, and md5."""
-    return f"""WITH {_cum_cte_sql(n_shards, salt, keep_tokens=True)},
-spans AS (
-  SELECT shard, w, cb, n_tokens,
-    unnest(range(CAST(cb // {budget} AS BIGINT),
-                 CAST((cb + n_tokens - 1) // {budget} + 1 AS BIGINT))) AS bin
-  FROM cum
-),
-pieces AS (
-  SELECT shard, bin, cb AS pos,
-    w[CAST(GREATEST(bin * {budget} - cb, 0) + 1 AS INT):CAST(LEAST((bin + 1) * {budget} - cb, n_tokens) AS INT)] AS piece
-  FROM spans
-)
-SELECT shard, CAST(bin AS BIGINT) AS bin,
-  CAST(COUNT(*) AS BIGINT) AS n_docs,
-  CAST(SUM(len(piece)) AS BIGINT) AS n_tokens,
-  md5(array_to_string(flatten(list_transform(
-    list_sort(list({{'pos': pos, 'piece': piece}})), x -> x.piece)), ' ')) AS packed_md5
-FROM pieces GROUP BY shard, bin"""

@@ -59,72 +59,6 @@ def hash_split(
     return docs.withColumn("split", expr.otherwise(F.lit(last)))
 
 
-def stratified_sample(
-    docs: DataFrame,
-    fractions: dict[str, float],
-    strata_col: str = "lang",
-    id_col: str = "doc_id",
-    default_fraction: float = 0.0,
-    salt: str = "sample",
-) -> DataFrame:
-    """Keep each row with its stratum's fraction, deterministically:
-    ``bucket(id) < round(fraction * BUCKETS)``. Strata absent from
-    ``fractions`` use ``default_fraction``. Row-local filter — no shuffle,
-    no per-stratum scan, and the kept set is a subset of any larger
-    fraction's kept set (nested samples for free).
-
-    Each fraction resolves to an INTEGER bucket threshold on the driver
-    (Python ``round``, same as :func:`hash_split`'s boundaries) and only
-    that integer enters the plan. A float threshold in the plan would
-    truncate (``cast`` floors) while DECIMAL-arithmetic engines round —
-    for a fraction whose ``f * BUCKETS`` lands just under an integer
-    (e.g. ``0.5609 * 10000 = 5608.999…``) the two engines would keep
-    different rows. Integer thresholds make the comparison exact
-    everywhere.
-    """
-    b = hash_bucket(F.col(id_col), salt)
-    thr = None
-    for stratum, f in fractions.items():
-        cond = F.col(strata_col) == stratum
-        bound = F.lit(round(f * BUCKETS)).cast("bigint")
-        thr = F.when(cond, bound) if thr is None else thr.when(cond, bound)
-    default_bound = F.lit(round(default_fraction * BUCKETS)).cast("bigint")
-    thr = default_bound if thr is None else thr.otherwise(default_bound)
-    return docs.filter(b < thr)
-
-
-def sample_per_group(
-    docs: DataFrame,
-    cap: int,
-    group_col: str = "lang",
-    id_col: str = "doc_id",
-    salt: str = "sample",
-) -> DataFrame:
-    """Keep at most ``cap`` rows per group, chosen by a deterministic
-    pseudo-random order — the data-mixing step that balances a training
-    corpus by language/source to absolute COUNTS (a 90%-English crawl
-    capped to N docs per language), where :func:`stratified_sample`'s
-    per-stratum FRACTIONS can't express "equal representation" without
-    knowing every group's size up front.
-
-    The order is md5 over the salted id (ties impossible: id appended),
-    so the kept set is stable across runs, partitionings, and engines —
-    and raising ``cap`` only ever ADDS rows (nested samples, like the
-    fraction path). One shuffle keyed by the group column; the window
-    row_number is the same sample-to-cap machinery the signature-ANN
-    cell bound uses.
-    """
-    from pyspark.sql import Window
-
-    order = F.md5(F.concat_ws("|", F.lit(salt), F.col(id_col).cast("string")))
-    w = Window.partitionBy(group_col).orderBy(order, F.col(id_col))
-    return (
-        docs.withColumn("_srn", F.row_number().over(w))
-        .filter(F.col("_srn") <= cap)
-        .drop("_srn")
-    )
-
-
 def sample_per_group_budget(
     docs: DataFrame,
     budget: int,
@@ -133,8 +67,9 @@ def sample_per_group_budget(
     id_col: str = "doc_id",
     salt: str = "sample",
 ) -> DataFrame:
-    """Budgeted variant of :func:`sample_per_group`: keep documents in
-    the same deterministic md5 order until each group's cumulative
+    """Token-budgeted per-group sampling: keep documents in a
+    deterministic pseudo-random order (md5 over the salted id, the id
+    appended so ties are impossible) until each group's cumulative
     ``weight_col`` reaches ``budget`` — "about N tokens per language",
     the unit training mixes are actually specified in, where a document
     COUNT cap over-weights groups with long documents.
@@ -187,8 +122,8 @@ def mixture_plan(
     the recipe is worse than a loud all-zero one (the zero row names the
     missing/misspelled source). Output is O(sources): (source, n_docs,
     target_share, keep_n, achieved_share) — a PLAN, driver-safe at any
-    corpus scale; materializing it is one ``sample_per_group``-style
-    rank filter with ``keep_n`` as the per-source cap.
+    corpus scale; materializing it is one per-source md5-order rank
+    filter with ``keep_n`` as the cap (:func:`mixture_apply`).
 
     Scale posture: one partial-aggregated groupBy(source) plus two
     1-row broadcast cross-joins; nothing row-level ever shuffles. The
@@ -260,15 +195,10 @@ def mixture_apply(
 ) -> DataFrame:
     """Materialize a :func:`mixture_plan`: keep exactly ``keep_n`` rows
     per source, chosen in the engine's deterministic md5 order (the
-    :func:`sample_per_group` device — stable across runs, partitionings,
-    and engines; growing a source's share only ever ADDS rows). The
-    plan is O(sources), so it broadcasts into the corpus scan; the one
-    row-level shuffle is the per-source rank window, identical to every
-    other sampler here.
-
-    Same plan-primary / apply-twin split as ``pack_sequences`` /
-    ``pack_apply``: the plan is the registered decision artifact, the
-    apply is the byte-level consequence the local gate keeps verified.
+    :func:`sample_per_group_budget` order — stable across runs,
+    partitionings, and engines; growing a source's share only ever ADDS
+    rows). The plan is O(sources), so it broadcasts into the corpus
+    scan; the one row-level shuffle is the per-source rank window.
     """
     plan = mixture_plan(docs, targets, group_col).select(group_col, "keep_n")
     from pyspark.sql import Window

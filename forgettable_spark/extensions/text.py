@@ -1,5 +1,5 @@
-"""Text analysis over the ``documents`` table: tokenization, quality
-scoring, language ID, fingerprinting.
+"""Text analysis over the ``documents`` table: tokenization, shingles
+and MinHash signatures, quality gating, repetition, keywords, novelty.
 
 Determinism contract (shared with the DuckDB oracles): tokens are the
 single-space split of ``text`` (the corpus is single-space separated — a
@@ -17,25 +17,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-#: Tiny per-language stopword lists for the heuristic language-ID.
-#: Deliberately short — the point is the operator shape (argmax of
-#: per-language evidence counts), not lexicon quality.
-STOPWORDS: dict[str, tuple[str, ...]] = {
-    "de": ("der", "die", "das", "und", "ein"),
-    "en": ("the", "a", "is", "of", "and"),
-    "es": ("el", "los", "las", "y", "una"),
-    "fr": ("le", "la", "les", "et", "une"),
-    "zh": ("的", "是", "了", "在", "和"),
-}
-
-#: Flat stopword set used by the quality score.
-ALL_STOPWORDS: tuple[str, ...] = tuple(sorted({w for ws in STOPWORDS.values() for w in ws}))
-
 #: THE quality-gate thresholds (length + lexical diversity), defined
-#: once: quality_filter, corpus_report, source_curation, and the
-#: distilled classifier's labeling step all gate on the same rule, and
-#: their DuckDB oracles interpolate these same values — a tuning change
-#: lands everywhere or nowhere.
+#: once: source_curation and the distilled classifier's labeling step
+#: both gate on the same rule, and their DuckDB oracles interpolate
+#: these same values — a tuning change lands everywhere or nowhere.
 QUALITY_MIN_TOKENS = 20
 QUALITY_MIN_DISTINCT_RATIO = 0.35
 
@@ -77,94 +62,6 @@ def quality_pass_sql(text_expr: str = "text",
 def tokens(text: Column) -> Column:
     """Token array: single-space split (see module determinism contract)."""
     return F.split(text, " ")
-
-
-def _count_in(arr: Column, words: tuple[str, ...]) -> Column:
-    """Occurrences (with duplicates) of any of ``words`` in ``arr`` —
-    row-local higher-order filter, no explode."""
-    return F.size(F.filter(arr, lambda w: w.isin(*words)))
-
-
-def with_text_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Per-document statistics + a composite quality score.
-
-    Columns added:
-      n_tokens        — token count (BIGINT)
-      n_distinct      — distinct token count
-      mean_token_len  — (chars - spaces) / tokens, DOUBLE
-      stopword_ratio  — stopword occurrences / tokens
-      distinct_ratio  — distinct / total tokens (1 - duplication)
-      quality_score   — 0.5·stopword_ratio + 0.5·distinct_ratio
-    """
-    w = tokens(F.col(text_col))
-    n = F.size(w).cast("bigint")
-    nd = F.size(F.array_distinct(w)).cast("bigint")
-    stop_hits = _count_in(w, ALL_STOPWORDS).cast("bigint")
-    mean_len = (F.length(F.col(text_col)).cast("bigint") - (n - 1)).cast("double") / n.cast(
-        "double"
-    )
-    stop_ratio = stop_hits.cast("double") / n.cast("double")
-    distinct_ratio = nd.cast("double") / n.cast("double")
-    return (
-        docs.withColumn("n_tokens", n)
-        .withColumn("n_distinct", nd)
-        .withColumn("mean_token_len", mean_len)
-        .withColumn("stopword_ratio", stop_ratio)
-        .withColumn("distinct_ratio", distinct_ratio)
-        .withColumn(
-            "quality_score", F.lit(0.5) * stop_ratio + F.lit(0.5) * distinct_ratio
-        )
-    )
-
-
-#: BPE-ish pre-tokenization: alphanumeric runs OR single non-space
-#: symbols — the GPT-2-style first pass that turns "it's 4.2!" into
-#: [it, ', s, 4, ., 2, !]. Simple character classes only, so Java regex
-#: (Spark) and DuckDB's engine count identically (asserted in tests).
-BPE_ISH_PATTERN = r"[A-Za-z0-9]+|[^A-Za-z0-9\s]"
-
-
-def token_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Per-document token counts under both counting conventions:
-
-      n_tokens_ws   — whitespace tokens (the engine's split contract)
-      n_tokens_bpe  — BPE-ish subword-ish units (:data:`BPE_ISH_PATTERN`)
-      bpe_per_ws    — their ratio, a cheap proxy for *tokenizer cost* of
-                      a document (symbol-heavy text expands under BPE)
-
-    Row-local codegen expressions (split / regexp_count) — zero shuffle,
-    computed in the scan stage at any corpus size.
-    """
-    ws = F.size(tokens(F.col(text_col))).cast("bigint")
-    bpe = F.regexp_count(F.col(text_col), F.lit(BPE_ISH_PATTERN)).cast("bigint")
-    return docs.select(
-        "doc_id",
-        ws.alias("n_tokens_ws"),
-        bpe.alias("n_tokens_bpe"),
-        (bpe.cast("double") / ws.cast("double")).alias("bpe_per_ws"),
-    )
-
-
-def language_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Heuristic language ID: argmax of per-language stopword evidence.
-
-    Adds ``lang_pred`` (ISO code or ``und`` when no list scores > 0) and
-    ``lang_score`` (the winning evidence count). Ties break on language
-    code ascending — a deterministic total order shared with the oracle.
-    """
-    w = tokens(F.col(text_col))
-    scored = docs
-    for lang, words in STOPWORDS.items():
-        scored = scored.withColumn(f"_score_{lang}", _count_in(w, words).cast("bigint"))
-    best = F.greatest(*[F.col(f"_score_{lang}") for lang in STOPWORDS])
-    pred = F.lit("und")
-    # reversed: earlier (ascending) language wins ties via later when-override
-    for lang in sorted(STOPWORDS, reverse=True):
-        pred = F.when(
-            (F.col(f"_score_{lang}") == best) & (best > 0), F.lit(lang)
-        ).otherwise(pred)
-    out = scored.withColumn("lang_pred", pred).withColumn("lang_score", best)
-    return out.drop(*[f"_score_{lang}" for lang in STOPWORDS])
 
 
 def shingles(text: Column, n: int = 3) -> Column:
@@ -278,74 +175,6 @@ def minhash_signature_from_base(base: Column, k: int = 12) -> Column:
     return F.aggregate(base, init, merge)
 
 
-def fingerprint(docs: DataFrame, text_col: str = "text", k: int = 12) -> DataFrame:
-    """Document fingerprints: exact-hash + MinHash sketch.
-
-    Adds ``fp_md5`` (exact content hash) and ``minhash`` (k-element BIGINT
-    signature). The signature approximates shingle-set Jaccard:
-    ``P[mh_i(a) = mh_i(b)] = J(a, b)``. The base-hash array is
-    materialized once, so the whole sketch costs one md5 per shingle.
-    """
-    base = F.transform(shingles(F.col(text_col)), shingle_hash)
-    return (
-        docs.withColumn("fp_md5", F.md5(F.col(text_col)))
-        .withColumn("_mh_base", base)
-        .withColumn("minhash", minhash_signature_from_base(F.col("_mh_base"), k))
-        .drop("_mh_base")
-    )
-
-
-#: PII patterns, deliberately restricted to character classes + bounded
-#: quantifiers so Java regex (Spark) and RE2 (DuckDB) match identically.
-EMAIL_PATTERN = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
-URL_PATTERN = r"https?://[^ ]+"
-
-
-def pii_scan(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Per-document PII detection + redaction fingerprint.
-
-    Columns: ``n_emails``, ``n_urls`` (non-overlapping match counts) and
-    ``redacted_md5`` — the hash of the text after replacing every email
-    with ``<EMAIL>`` and every URL with ``<URL>``, which lets a test (or
-    oracle) verify the *entire redacted corpus* byte-for-byte without
-    shipping the text back.
-
-    Row-local regexp expressions — scan-stage codegen, zero shuffle, the
-    same shape at 100 TB. Redaction order is emails first, then URLs.
-    """
-    t = F.col(text_col)
-    redacted = F.regexp_replace(
-        F.regexp_replace(t, EMAIL_PATTERN, "<EMAIL>"), URL_PATTERN, "<URL>"
-    )
-    return docs.select(
-        "doc_id",
-        F.regexp_count(t, F.lit(EMAIL_PATTERN)).cast("bigint").alias("n_emails"),
-        F.regexp_count(t, F.lit(URL_PATTERN)).cast("bigint").alias("n_urls"),
-        F.md5(redacted).alias("redacted_md5"),
-    )
-
-
-def top_ngrams(docs: DataFrame, text_col: str = "text", n: int = 3, k: int = 20) -> DataFrame:
-    """Corpus-wide n-gram frequency: the ``k`` most frequent word
-    n-grams with counts (duplicates counted, ties broken ascending by
-    gram for a deterministic total order).
-
-    Plan shape: explode -> partial count (map-side combine) -> one
-    shuffle keyed by gram -> ``TakeOrderedAndProject`` top-k. The only
-    full-width shuffle rows are (gram, partial_count) pairs; at corpus
-    scale the partial aggregation collapses each executor's grams before
-    anything moves.
-    """
-    return (
-        docs.filter(F.col(text_col).isNotNull())  # NULL text has no grams
-        .select(F.explode(shingles(F.col(text_col), n)).alias("ngram"))
-        .groupBy("ngram")
-        .agg(F.count(F.lit(1)).alias("freq"))
-        .orderBy(F.desc("freq"), F.asc("ngram"))
-        .limit(k)
-    )
-
-
 def repetition_stats(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -389,97 +218,6 @@ def repetition_stats(
             "dup_bigram_frac"
         ),
     )
-
-
-def quality_filter(
-    docs: DataFrame,
-    text_col: str = "text",
-    min_tokens: int = QUALITY_MIN_TOKENS,
-    min_distinct_ratio: float = QUALITY_MIN_DISTINCT_RATIO,
-    min_stopword_ratio: float = 0.0,
-) -> DataFrame:
-    """Quality keep-list: documents passing the composite thresholds,
-    with their scores. The standard pre-training filter pass (length +
-    lexical-diversity + stopword-evidence gates) as one row-local
-    predicate over :func:`with_text_stats` — computed in the scan stage,
-    zero shuffle, and Catalyst collapses the stats projection into the
-    filter so rejected rows never leave the scan."""
-    stats = with_text_stats(docs, text_col)
-    return stats.filter(
-        (F.col("n_tokens") >= min_tokens)
-        & (F.col("distinct_ratio") >= min_distinct_ratio)
-        & (F.col("stopword_ratio") >= min_stopword_ratio)
-    ).select("doc_id", "n_tokens", "distinct_ratio", "stopword_ratio", "quality_score")
-
-
-def corpus_report(
-    docs: DataFrame,
-    text_col: str = "text",
-    min_tokens: int = QUALITY_MIN_TOKENS,
-    min_distinct_ratio: float = QUALITY_MIN_DISTINCT_RATIO,
-) -> DataFrame:
-    """One-row dataset card: the corpus-level numbers an operator reads
-    before and after a pipeline run (ingest sanity, filter impact,
-    duplication level) without assembling six queries by hand.
-
-    Columns — all exact integers, so the row is hash-stable across
-    engines and partitionings (a mean of DOUBLEs would sum in partition
-    order and break bit parity):
-
-      n_docs, n_null_text, n_langs, total_chars, total_tokens,
-      n_pass_quality   — documents passing the default quality gate
-                         (:func:`quality_filter` thresholds),
-      n_dup_docs       — documents whose exact content hash appears
-                         more than once,
-      n_dup_groups     — distinct duplicated contents.
-
-    Two aggregations (corpus scan + md5 group sizes) joined as one-row
-    frames; both have map-side partials, so the shuffles carry one row
-    per partition and per distinct hash respectively.
-    """
-    t = F.col(text_col)
-    w = tokens(t)
-    n = F.size(w).cast("bigint")
-    nd = F.size(F.array_distinct(w)).cast("bigint")
-    base = docs.select(
-        t.alias("_t"),
-        F.col("lang"),
-        F.col("n_chars"),
-        F.when(t.isNotNull(), n).alias("_n_tok"),
-        quality_pass(t, min_tokens, min_distinct_ratio).alias("_pass"),
-    ).agg(
-        F.count("*").cast("bigint").alias("n_docs"),
-        F.sum(F.when(F.col("_t").isNull(), 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_null_text"),
-        F.countDistinct("lang").cast("bigint").alias("n_langs"),
-        F.sum("n_chars").cast("bigint").alias("total_chars"),
-        F.sum("_n_tok").cast("bigint").alias("total_tokens"),
-        F.sum("_pass").cast("bigint").alias("n_pass_quality"),
-    )
-    # coalesce(0): on a corpus with zero non-null-text docs the grouped
-    # frame is empty and SUM returns NULL — the oracle's COALESCE(...,0)
-    # and this must agree for the card to hash-match on exactly the
-    # ingest-failure corpus it exists to diagnose.
-    dups = (
-        docs.filter(t.isNotNull())
-        .groupBy(F.md5(t).alias("_h"))
-        .count()
-        .agg(
-            F.coalesce(
-                F.sum(F.when(F.col("count") > 1, F.col("count")).otherwise(0)),
-                F.lit(0),
-            )
-            .cast("bigint")
-            .alias("n_dup_docs"),
-            F.coalesce(
-                F.sum(F.when(F.col("count") > 1, 1).otherwise(0)), F.lit(0)
-            )
-            .cast("bigint")
-            .alias("n_dup_groups"),
-        )
-    )
-    return base.crossJoin(dups)
 
 
 def tfidf_keywords(

@@ -20,7 +20,6 @@ CACHING_QUERIES = [
     "dedup_simhash_pairs",
     "dedup_simhash_capped",
     "dedup_components",
-    "dedup_canonicalize",
     "semantic_dedup_two_level",
     "semantic_admit",
     "embedding_near_dup_hyperplane",

@@ -85,19 +85,3 @@ def test_loop_partitions_sized_from_edges(spark):
     """Tiny graph → narrow loop; the explicit override still wins."""
     comp = connected_components(_pairs(spark, [(1, 2)]), loop_partitions=3)
     assert {r["component"] for r in comp.collect()} == {1}
-
-
-def test_keep_best_retains_highest_score(spark):
-    """dedup_keep_best keeps the highest-scoring member of each
-    component (tie -> min id); singletons keep themselves."""
-    from forgettable_spark.extensions.components import dedup_keep_best
-
-    pairs = _pairs(spark, [(1, 2), (2, 3), (10, 11)])
-    docs = spark.createDataFrame(
-        [(1, 0.2), (2, 0.9), (3, 0.5), (10, 0.4), (11, 0.4), (99, 0.1)],
-        "doc_id long, score double",
-    )
-    out = {r["doc_id"]: r for r in dedup_keep_best(pairs, docs).collect()}
-    assert [out[i]["keep"] for i in (1, 2, 3)] == [False, True, False]  # 2 best
-    assert out[10]["keep"] is True and out[11]["keep"] is False  # tie -> min id
-    assert out[99]["keep"] is True and out[99]["component"] == 99  # singleton

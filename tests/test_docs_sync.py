@@ -9,10 +9,12 @@ rotation can't desync them again.
 
 from __future__ import annotations
 
+import json
 import os
 import re
 
 QUERIES_MD = os.path.join(os.path.dirname(__file__), os.pardir, "QUERIES.md")
+ROTATIONS_JSON = os.path.join(os.path.dirname(__file__), os.pardir, "ROTATIONS.json")
 
 # bench.py lines that are deliberately not driver-registered queries —
 # they appear in the primary table with "n/a (bench-only)" correctness.
@@ -75,3 +77,16 @@ def test_no_stray_bench_times_in_secondary_why_column():
     for line in secondary.splitlines():
         m = re.match(r"\| `[a-z0-9_]+` \| ([0-9.]+) \|\s*$", line)
         assert m is None, f"stray bench time in secondary why-column: {line!r}"
+
+
+def test_deleted_queries_stay_unregistered():
+    """A name in ROTATIONS.json's ``deleted`` ledger must not come back
+    in either registry: a restore that forgets the ledger (or a deletion
+    that forgets the registry) fails here."""
+    from forgettable_spark import entrypoints
+
+    with open(ROTATIONS_JSON) as fh:
+        deleted = set(json.load(fh)["deleted"])
+    assert deleted, "ROTATIONS.json has an empty deleted ledger"
+    back = deleted & (set(entrypoints.queries()) | set(entrypoints.secondary_queries()))
+    assert back == set(), f"deleted queries registered again: {sorted(back)}"

@@ -1,6 +1,5 @@
-"""Planted-case semantics for the three late-r9 operators: semantic_dedup
-(cluster-scoped embedding dedup), canonical_by_score (quality-argmax
-representative per duplicate cluster), mixture_plan (target-mixture
+"""Planted-case semantics for the late-r9 operators semantic_dedup
+(cluster-scoped embedding dedup) and mixture_plan (target-mixture
 domain reweighting). The registered configs are oracle-hash-locked by
 tests/test_oracle_parity.py; these tests pin the CLAIMS on inputs where
 the expected answer is hand-derivable."""
@@ -11,7 +10,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from forgettable_spark.extensions.codebook import semantic_dedup
-from forgettable_spark.extensions.components import canonical_by_score
 from forgettable_spark.extensions.sampling import mixture_plan
 
 #: Two unit centroids: cell 0 = x-axis, cell 1 = y-axis (score is
@@ -55,19 +53,6 @@ def test_semantic_dedup_cap_excludes_members_entirely(spark):
     # others are neither droppable nor witnesses, so no rows survive.
     df = _emb(spark, [(0, (1.0, 0.0)), (1, (1.0, 0.0)), (2, (1.0, 0.0))])
     assert semantic_dedup(df, CENTS, threshold=0.95, max_cell_size=1).count() == 0
-
-
-def test_canonical_by_score_argmax_with_id_tiebreak(spark):
-    members = spark.createDataFrame(
-        [(10, 10, 0.2), (11, 10, 0.5), (12, 10, 0.5), (20, 20, 0.1)],
-        "doc_id long, component long, score double",
-    )
-    rows = {r["doc_id"]: r for r in canonical_by_score(members, "score").collect()}
-    # component 10: 11 and 12 tie on score — lowest id wins.
-    assert rows[10]["canonical_id"] == 11 and not rows[10]["keep"]
-    assert rows[11]["keep"] and not rows[12]["keep"]
-    # singleton component keeps itself.
-    assert rows[20]["canonical_id"] == 20 and rows[20]["keep"]
 
 
 def _docs(spark, counts):
@@ -546,38 +531,6 @@ def test_mixture_plan_invariants(spark, case):
             # p·T allocation, so each achieved share sits within
             # len(targets)/total of its target.
             assert abs(plan[s]["achieved_share"] - p) <= len(targets) / total
-
-
-@settings(max_examples=12, deadline=None)
-@given(
-    st.lists(
-        st.tuples(
-            st.integers(min_value=0, max_value=99),  # doc id
-            st.integers(min_value=0, max_value=3),  # component
-            st.integers(min_value=0, max_value=5),  # score bucket
-        ),
-        min_size=1,
-        max_size=30,
-        unique_by=lambda t: t[0],
-    )
-)
-def test_canonical_by_score_invariants(spark, rows):
-    """The canonical is always a member of its own component carrying
-    the component-max score with the smallest id among max carriers,
-    and exactly one member per component keeps."""
-    members = spark.createDataFrame(
-        [(i, c, s / 4.0) for i, c, s in rows],
-        "doc_id long, component long, score double",
-    )
-    out = canonical_by_score(members, "score").collect()
-    by_comp = {}
-    for r in out:
-        by_comp.setdefault(r["component"], []).append(r)
-    for comp, rs in by_comp.items():
-        best = max(rs, key=lambda r: (r["score"], -r["doc_id"]))
-        assert all(r["canonical_id"] == best["doc_id"] for r in rs)
-        assert sum(r["keep"] for r in rs) == 1
-        assert next(r for r in rs if r["keep"])["doc_id"] == best["doc_id"]
 
 
 def test_probe_cells_prefix_composition_and_bigint_exactness(spark):

@@ -219,50 +219,8 @@ def test_distill_single_class_is_well_defined(spark):
 # Materialized packing ---------------------------------------------------------
 
 
-def test_pack_apply_bins_are_exactly_budget(spark):
-    """Every bin except each shard's last holds exactly `budget` tokens,
-    totals conserve the corpus token count, and the packed stream
-    reassembles the layout (doc pieces in stream order)."""
-    from forgettable_spark.extensions.packing import pack_apply, pack_concat
-
-    rows = [(i, " ".join(f"t{i}x{j}" for j in range(3 + i % 13))) for i in range(50)]
-    budget, shards = 16, 3
-    bins = pack_apply(_docs(spark, rows), budget=budget, n_shards=shards).collect()
-    layout = pack_concat(_docs(spark, rows), budget=budget, n_shards=shards).collect()
-    per_shard_tokens = {}
-    for r in layout:
-        per_shard_tokens[r["shard"]] = per_shard_tokens.get(r["shard"], 0) + r["n_tokens"]
-    by_shard = {}
-    for b in bins:
-        by_shard.setdefault(b["shard"], []).append(b)
-    assert sum(b["n_tokens"] for b in bins) == sum(per_shard_tokens.values())
-    for shard, bs in by_shard.items():
-        bs = sorted(bs, key=lambda b: b["bin"])
-        assert [b["bin"] for b in bs] == list(range(len(bs)))  # contiguous
-        for b in bs[:-1]:
-            assert b["n_tokens"] == budget, (shard, b)
-        assert bs[-1]["n_tokens"] == per_shard_tokens[shard] - budget * (len(bs) - 1)
 
 
-def test_pack_apply_reconstructs_known_stream(spark):
-    """Single shard, hand-checkable: the packed md5s equal md5 of the
-    expected token windows of the concatenated stream."""
-    import hashlib
-
-    from forgettable_spark.extensions.packing import pack_apply, pack_concat
-
-    rows = [(i, " ".join(f"d{i}w{j}" for j in range(5))) for i in range(6)]
-    layout = sorted(
-        pack_concat(_docs(spark, rows), budget=7, n_shards=1).collect(),
-        key=lambda r: (r["start_bin"], r["offset_in_bin"]),
-    )
-    stream = []
-    for r in layout:
-        stream.extend(f"d{r['doc_id']}w{j}" for j in range(5))
-    out = {r["bin"]: r for r in pack_apply(_docs(spark, rows), budget=7, n_shards=1).collect()}
-    for b, row in out.items():
-        expect = " ".join(stream[b * 7 : (b + 1) * 7])
-        assert row["packed_md5"] == hashlib.md5(expect.encode()).hexdigest(), b
 
 
 def test_pack_matches_independent_python_model(spark):

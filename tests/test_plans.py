@@ -96,12 +96,6 @@ def test_media_near_dup_candidate_join_is_ids_only(spark):
     assert "MapInPandas" in plan
 
 
-def test_text_ops_are_shuffle_free(spark):
-    """Text analysis is row-local: no Exchange anywhere in the plan.
-    (text_stats moved to the secondary registry in the r7 rotation —
-    the plan contract is unchanged.)"""
-    plan = _formatted_plan(ep.secondary_queries()["text_stats"](spark, SF_SMOKE))
-    assert "Exchange" not in plan
 
 
 def test_simhash_sketch_shuffles_one_counter_row_per_doc(spark):
@@ -181,21 +175,8 @@ def test_decontaminate_broadcasts_eval_grams(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_pii_scan_is_shuffle_free(spark):
-    """PII scan is row-local regexp work: no Exchange in the plan.
-    (Secondary registry since the r8 rotation.)"""
-    plan = _formatted_plan(ep.secondary_queries()["pii_scan"](spark, SF_SMOKE))
-    assert "Exchange" not in plan
 
 
-def test_top_ngrams_partial_aggregates_before_shuffle(spark):
-    """Corpus vocabulary: the gram counts must partial-aggregate map-side
-    and the top-k must be a TakeOrderedAndProject, not a global sort.
-    (Secondary registry since the r8 rotation.)"""
-    plan = _formatted_plan(ep.secondary_queries()["corpus_top_ngrams"](spark, SF_SMOKE))
-    assert "partial_count" in plan
-    assert "TakeOrderedAndProject" in plan
-    assert "Sort [" not in plan  # no global sort stage
 
 
 # The ONLY registered queries allowed to run a Python worker stage: the

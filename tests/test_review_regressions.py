@@ -66,25 +66,6 @@ def test_naive_datetime_is_utc(spark):
     assert aware == naive == {"r": 5}
 
 
-def test_stratified_sample_threshold_rounds_like_oracle(spark):
-    """frac * BUCKETS can land just under an integer in doubles
-    (0.5609 * 10000 = 5608.999…); the old truncating cast kept bucket
-    5608 out while DECIMAL-arithmetic oracles kept it in. Thresholds now
-    resolve to integers via Python round() on the driver, so a doc whose
-    bucket is exactly 5608 must be KEPT at fraction 0.5609."""
-    from pyspark.sql import functions as F
-
-    from forgettable_spark.extensions.sampling import hash_bucket, stratified_sample
-
-    # doc_id 10048 hashes to bucket 5608 under the default 'sample' salt
-    docs = spark.createDataFrame(
-        [(10048, "en"), (1, "en")], ["doc_id", "lang"]
-    )
-    b = {r["doc_id"]: r["bkt"] for r in docs.select(
-        "doc_id", hash_bucket(F.col("doc_id"), "sample").alias("bkt")).collect()}
-    assert b[10048] == 5608  # fixture guard: the id still hashes there
-    kept = {r["doc_id"] for r in stratified_sample(docs, {"en": 0.5609}).collect()}
-    assert 10048 in kept
 
 
 def test_fuzzy_decontaminate_accepts_custom_id_col(spark):

@@ -55,6 +55,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from forgettable_spark.extensions.similarity import (
+    _cell_cosine_topk,
+    _dot_expr_sql,
     _sample_cells_to_cap,
     as_double,
     dot,
@@ -169,30 +171,10 @@ def _half_norms(centroids: list[list[float]]) -> list[float]:
     return [float(0.5 * np.dot(np.array(c, dtype=np.float64), np.array(c, dtype=np.float64))) for c in centroids]
 
 
-def _codebook_lit(centroids: list[list[float]]) -> Column:
-    """The codebook as ONE nested literal: array of (c: array<double>,
-    h: ‖c‖²/2, i: index) structs. Keeping the floats as a single
-    constant-folded array keeps the scoring expression a LOOP over data
-    instead of k unrolled 64-literal folds — the unrolled form compiled
-    ~2 s of per-plan generated code at k=8, dim=64 (measured r6), which
-    dwarfed the actual scan."""
-    halves = _half_norms(centroids)
-    return F.array(
-        *[
-            F.struct(
-                F.array(*[F.lit(x) for x in c]).alias("c"),
-                F.lit(h).alias("h"),
-                F.lit(i).cast("bigint").alias("i"),
-            )
-            for i, (c, h) in enumerate(zip(centroids, halves))
-        ]
-    )
-
-
 #: Rendered-SQL memo for the literal codebook (keyed on the codebook
 #: values): the string is ~20 KB for k=8·dim=64 and costs ~1 ms to
-#: build, vs ~0.8 s of py4j round-trips for the Column form — and every
-#: semantic-family query builds it several times per call.
+#: build — and every semantic-family query builds it several times per
+#: call.
 _LIT_SQL_MEMO: dict[tuple, str] = {}
 
 
@@ -205,8 +187,12 @@ def _py_double_sql(x: float) -> str:
 
 
 def _codebook_lit_sql(centroids: list[list[float]]) -> str:
-    """Spark-SQL rendering of :func:`_codebook_lit` — the same nested
-    (c, h, i) struct array, parsed into the same Catalyst literals."""
+    """The codebook as ONE nested literal: array of (c: array<double>,
+    h: ‖c‖²/2, i: index) structs. Keeping the floats as a single
+    constant-folded array keeps the scoring expression a LOOP over data
+    instead of k unrolled 64-literal folds — the unrolled form compiled
+    ~2 s of per-plan generated code at k=8, dim=64 (measured r6), which
+    dwarfed the actual scan."""
     key = tuple(tuple(c) for c in centroids)
     if key not in _LIT_SQL_MEMO:
         halves = _half_norms(centroids)
@@ -224,11 +210,9 @@ def _codebook_lit_sql(centroids: list[list[float]]) -> str:
 
 def _scored_struct_sql(vec_sql: str, centroids: list[list[float]], fields: str) -> str:
     """``transform(<codebook>, e -> named_struct(<fields>))`` with the
-    score ``s`` available as ``{s}`` in the fields template — the shared
-    body of the two rendered assigners below. ``vec_sql`` must already
-    be a double array (the Column path has the same contract)."""
-    from forgettable_spark.extensions.similarity import _dot_expr_sql
-
+    score ``s = dot(v, c) − ‖c‖²/2`` available as ``{s}`` in the fields
+    template — the shared body of the two assigners below. ``vec_sql``
+    must already be a double array."""
     s = f"({_dot_expr_sql(vec_sql, 'e.c')} - e.h)"
     return (
         f"transform({_codebook_lit_sql(centroids)}, "
@@ -237,8 +221,8 @@ def _scored_struct_sql(vec_sql: str, centroids: list[list[float]], fields: str) 
 
 
 def centroid_cell_sql(vec_sql: str, centroids: list[list[float]]) -> str:
-    """Spark-SQL rendering of :func:`centroid_cell` over a raw SQL
-    double-array expression — identical (score, −index) max semantics."""
+    """:func:`centroid_cell` as SQL text over a double-array SQL
+    expression."""
     scored = _scored_struct_sql(vec_sql, centroids, "'s', {s}, 'ni', -e.i")
     return f"CAST((-(array_max({scored}).ni)) AS BIGINT)"
 
@@ -246,57 +230,29 @@ def centroid_cell_sql(vec_sql: str, centroids: list[list[float]]) -> str:
 def top_p_centroid_cells_sql(
     vec_sql: str, centroids: list[list[float]], n_probes: int
 ) -> str:
-    """Spark-SQL rendering of :func:`top_p_centroid_cells`."""
+    """:func:`top_p_centroid_cells` as SQL text."""
     scored = _scored_struct_sql(vec_sql, centroids, "'negs', -({s}), 'idx', e.i")
     return (
         f"slice(transform(array_sort({scored}), s -> s.idx), 1, {n_probes})"
     )
 
 
-def _scored_structs(vec: Column, centroids: list[list[float]]) -> Column:
-    """(score, index) per centroid via one transform over the literal
-    codebook; score = ``dot(v, c) − ‖c‖²/2`` with the engines' shared
-    sequential-fold dot, bit-identical to the previous per-centroid
-    unrolled columns (same fold order, same subtraction)."""
-    return F.transform(
-        _codebook_lit(centroids),
-        lambda e: F.struct((dot(vec, e["c"]) - e["h"]).alias("s"), e["i"].alias("i")),
-    )
-
-
-def centroid_cell(vec: Column | str, centroids: list[list[float]]) -> Column:
-    """0-based index of the nearest centroid (ties → lowest index).
-    ``array_max`` over (score, −index) structs compares score first,
-    then −index — so equal scores pick the smallest index, mirroring the
-    oracle's ``ORDER BY s DESC, ci ASC`` window.
-
-    ``vec`` may be a Column or a raw SQL expression string over an
-    already-double array; the string form assembles the whole literal
-    fold as ONE ``F.expr`` (r12 — the Column form cost ~0.23 s of py4j
-    chatter per call and every semantic query built it 5×)."""
-    if isinstance(vec, str):
-        return F.expr(centroid_cell_sql(vec, centroids))
-    scored = F.transform(
-        _scored_structs(vec, centroids),
-        lambda e: F.struct(e["s"].alias("s"), (-e["i"]).alias("ni")),
-    )
-    return (-F.array_max(scored)["ni"]).cast("bigint")
+def centroid_cell(vec: str, centroids: list[list[float]]) -> Column:
+    """0-based index of the nearest centroid (ties → lowest index) for a
+    SQL expression over an already-double array. ``array_max`` over
+    (score, −index) structs compares score first, then −index — so
+    equal scores pick the smallest index, mirroring the oracle's
+    ``ORDER BY s DESC, ci ASC`` window."""
+    return F.expr(centroid_cell_sql(vec, centroids))
 
 
 def top_p_centroid_cells(
-    vec: Column | str, centroids: list[list[float]], n_probes: int
+    vec: str, centroids: list[list[float]], n_probes: int
 ) -> Column:
     """The query's ``n_probes`` nearest centroid indices, nearest first —
     multi-probe IVF over the trained codebook. Sorted (−score, index)
-    structs: ties break on the lower index. String
-    input takes the rendered-SQL fast path (see :func:`centroid_cell`)."""
-    if isinstance(vec, str):
-        return F.expr(top_p_centroid_cells_sql(vec, centroids, n_probes))
-    scored = F.transform(
-        _scored_structs(vec, centroids),
-        lambda e: F.struct((-e["s"]).alias("negs"), e["i"].alias("idx")),
-    )
-    return F.slice(F.transform(F.array_sort(scored), lambda s: s["idx"]), 1, n_probes)
+    structs: ties break on the lower index."""
+    return F.expr(top_p_centroid_cells_sql(vec, centroids, n_probes))
 
 
 def kmeans_ann_topk(
@@ -336,20 +292,8 @@ def kmeans_ann_topk(
         q = q.withColumn(
             "cell", F.explode(top_p_centroid_cells("_qv", centroids, n_probes))
         )
-    c = c.withColumn("_cn", norm("_cv"))
-    scored = (
-        q.join(c, "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine",
-            dot("_qv", "_cv") / (F.col("_qn") * F.col("_cn")),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
+    return _cell_cosine_topk(q, c, k).select(
+        "query_id", "neighbor_id", "cosine", "rank"
     )
 
 
@@ -727,13 +671,11 @@ def with_two_level_cell(
 def two_level_case_sql(
     vec_sql: str, fines: list[list[list[float]]], coarse_col: str = "_coarse"
 ) -> str:
-    """ONE rendered CASE expression for the two-level fine assignment
-    (r12): the Column form built k1+1 literal codebooks through py4j per
-    call (~1.3 s of driver-side socket chatter); the SQL string parses
-    to the same Catalyst tree (WHEN conditions on the materialized
-    ``coarse_col``, lazy fine folds, no ELSE → NULL, final BIGINT
-    cast). Shared by :func:`with_two_level_cell` and the single-select
-    assignment builders so the rendering cannot drift."""
+    """ONE rendered CASE expression for the two-level fine assignment:
+    WHEN conditions on the materialized ``coarse_col``, lazy fine folds,
+    no ELSE → NULL, final BIGINT cast. Shared by
+    :func:`with_two_level_cell` and the single-select assignment
+    builders so the rendering cannot drift."""
     offs = _fine_offsets(fines)
     branches = " ".join(
         "WHEN ({c} = {i}) THEN (CAST({off} AS BIGINT) + {cc})".format(
@@ -887,54 +829,25 @@ def knn_label(
 
     Scale posture: the label rides the corpus side THROUGH the cell
     join, so no second join touches the corpus; the vote is one
-    partial-aggregated groupBy on (query, label) followed by a per-query
-    argmax — both ride the rank window's existing query_id exchange.
-    Same 100 TB shape as :func:`kmeans_ann_topk`.
+    partial-aggregated groupBy on (query, source, label) followed by a
+    per-query argmax — both ride the rank window's query_id exchange.
+    Same 100 TB shape as :func:`kmeans_ann_topk`; it is
+    :func:`knn_label_multi` over the one source ``label_col``.
 
     Reference scope: brief-commissioned LLM-pipeline operator (the
     reference engine has no embedding surface).
     """
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        as_double(vec_col).alias("_cv"),
-        F.col(label_col).cast("int").alias("_lab"),
-    ).withColumn("cell", centroid_cell("_cv", centroids))
-    if max_bucket_size is not None:
-        c = _sample_cells_to_cap(c, max_bucket_size)
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        as_double(vec_col).alias("_qv"),
-    ).withColumn("_qn", norm("_qv"))
-    if n_probes <= 1:
-        q = q.withColumn("cell", centroid_cell("_qv", centroids))
-    else:
-        q = q.withColumn(
-            "cell", F.explode(top_p_centroid_cells("_qv", centroids, n_probes))
-        )
-    c = c.withColumn("_cn", norm("_cv"))
-    scored = (
-        q.join(c, "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine",
-            dot("_qv", "_cv") / (F.col("_qn") * F.col("_cn")),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    topk = scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-    votes = topk.groupBy("query_id", "_lab").agg(F.count("*").alias("votes"))
-    best = votes.groupBy("query_id").agg(
-        F.max(
-            F.struct(F.col("votes").alias("v"), (-F.col("_lab")).alias("nl"))
-        ).alias("_b"),
-        F.sum("votes").cast("bigint").alias("k_used"),
-    )
-    return best.select(
-        F.col("query_id").alias("vec_id"),
-        (-F.col("_b")["nl"]).cast("int").alias("pred_label"),
-        F.col("_b")["v"].alias("votes"),
-        "k_used",
-    )
+    return knn_label_multi(
+        corpus,
+        queries,
+        centroids,
+        k,
+        id_col,
+        vec_col,
+        {label_col: F.col(label_col)},
+        n_probes,
+        max_bucket_size,
+    ).drop("label_source")
 
 
 def knn_label_multi(
@@ -958,7 +871,7 @@ def knn_label_multi(
     cheap vote/argmax tail per source. ``label_cols`` maps source name →
     label Column over the corpus frame. Returns one row per (query,
     source): (vec_id, label_source, pred_label, votes, k_used) — each
-    source's slice is ROW-IDENTICAL to the standalone
+    source's slice is ROW-IDENTICAL to a one-source call, i.e.
     :func:`knn_label` with that label column (test-locked)."""
     if not label_cols:
         raise ValueError("knn_label_multi: label_cols must name ≥1 source")
@@ -983,20 +896,8 @@ def knn_label_multi(
         q = q.withColumn(
             "cell", F.explode(top_p_centroid_cells("_qv", centroids, n_probes))
         )
-    c = c.withColumn("_cn", norm("_cv"))
-    scored = (
-        q.join(c, "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine",
-            dot("_qv", "_cv") / (F.col("_qn") * F.col("_cn")),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    topk = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", *[f"_lab_{i}" for i in range(len(names))])
+    topk = _cell_cosine_topk(q, c, k).select(
+        "query_id", *[f"_lab_{i}" for i in range(len(names))]
     )
     # No materialization (late r12): the melted vote tail below is this
     # frame's ONLY consumer — the arm fold moved the sharing into the
@@ -1078,12 +979,8 @@ def prototype_prune(
     ).withColumn("cell", centroid_cell("_v", centroids))
     # cosine(v, centroid[cell]): one element_at into the literal
     # codebook picks the assigned centroid's vector; norms fold per row.
-    cb = _codebook_lit(centroids)
-    cvec = F.element_at(cb, (F.col("cell") + 1).cast("int"))["c"]
-    c = c.withColumn(
-        "proto_score",
-        dot(F.col("_v"), cvec) / (norm("_v") * norm(cvec)),
-    )
+    cvec = f"element_at({_codebook_lit_sql(centroids)}, CAST((cell + 1) AS INT)).c"
+    c = c.withColumn("proto_score", dot("_v", cvec) / (norm("_v") * norm(cvec)))
     w = Window.partitionBy("cell").orderBy(F.asc("proto_score"), F.asc("vec_id"))
     wn = Window.partitionBy("cell")
     return (
@@ -1239,8 +1136,6 @@ def with_partitioned_cell(
     clobbered (the rewritten implementation materializes the coarse
     argmax as ``_coarse``) and then returned under the caller's column
     name, so the collision raises instead (ADVICE r10/r12)."""
-    from forgettable_spark.extensions.similarity import signature_cell
-
     clash = {"_sig", "_tl", "_coarse"} & set(df.columns)
     if clash:
         raise ValueError(
@@ -1392,12 +1287,12 @@ def semantic_dedup_probed(
 
 
 def _probe_cells_sql(cell_sql: str, n_fine: int, n_flip: int) -> str:
-    """:func:`_probe_cells` rendered as ONE SQL array expression (r13,
-    the rendered-fold family — VERDICT r12 #5): the Column loop cost
-    ~36 py4j round-trips per build, repeated per streaming trigger in
-    the admission loop; the string parses to the identical Catalyst
-    tree (same decimal(38,0) division, same XOR/recompose per element,
-    value-identity test-locked beside the Column form)."""
+    """:func:`_probe_cells` as ONE SQL array expression."""
+    # Integer division through decimal(38,0): a double-division floor
+    # is exact only below 2^53, silently diverging from the oracle's
+    # integer `//` above it (ADVICE r11) — decimal covers the full
+    # bigint range and DuckDB's `//` restates the same closed form
+    # bit-for-bit. cell ≥ 0, so truncation == floor on both engines.
     sig = f"CAST(CAST(({cell_sql}) AS DECIMAL(38,0)) / {n_fine} AS BIGINT)"
     tl = f"(({cell_sql}) % {n_fine})"
     elems = ", ".join(
@@ -1407,14 +1302,12 @@ def _probe_cells_sql(cell_sql: str, n_fine: int, n_flip: int) -> str:
     return f"array({elems})"
 
 
-def _probe_cells(cell: Column | str, n_fine: int, n_flip: int) -> Column:
+def _probe_cells(cell: str, n_fine: int, n_flip: int) -> Column:
     """The ``n_flip`` composite cells at signature Hamming distance 1
-    from ``cell``: sig ÷/mod decomposition, bit i XOR, recompose —
-    closed-form integer arithmetic on the stored id (no signature
-    re-fold), restated identically by the oracle twin. A STRING ``cell``
-    (column name / SQL fragment) takes the rendered fast path
-    (:func:`_probe_cells_sql`) — one expr parse instead of ~36 py4j
-    round-trips; the Column path remains for composed callers.
+    from ``cell`` (a column name or SQL fragment): sig ÷/mod
+    decomposition, bit i XOR, recompose — closed-form integer arithmetic
+    on the stored id (no signature re-fold), restated identically by
+    the oracle twin.
 
     Partial ``n_flip < b`` probes the FIXED PREFIX of signature bits
     ``i < n_flip``, not e.g. the least-confident ones — a sound
@@ -1427,21 +1320,7 @@ def _probe_cells(cell: Column | str, n_fine: int, n_flip: int) -> Column:
     the prefix loses nothing over probing any other fixed subset
     (test-locked probe-set composition,
     tests/test_mixture_canonical_semantic.py)."""
-    # Integer division through decimal(38,0): a double-division floor
-    # is exact only below 2^53, silently diverging from the oracle's
-    # integer `//` above it (ADVICE r11) — decimal covers the full
-    # bigint range and DuckDB's `//` restates the same closed form
-    # bit-for-bit. cell ≥ 0, so truncation == floor on both engines.
-    if isinstance(cell, str):
-        return F.expr(_probe_cells_sql(cell, n_fine, n_flip))
-    sig = (cell.cast("decimal(38,0)") / F.lit(n_fine)).cast("bigint")
-    tl = cell % F.lit(n_fine)
-    return F.array(
-        *[
-            (sig.bitwiseXOR(F.lit(1 << i)) * F.lit(n_fine) + tl).cast("bigint")
-            for i in range(n_flip)
-        ]
-    )
+    return F.expr(_probe_cells_sql(cell, n_fine, n_flip))
 
 
 def _celled_pair_dedup_probed(

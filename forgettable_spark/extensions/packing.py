@@ -92,7 +92,7 @@ def _cum_cte_sql(n_shards: int, salt: str) -> str:
     s = _sql_str(salt)
     s_shard = _sql_str(salt + "-shard")
     return f"""base AS (
-  SELECT doc_id, string_split(text, ' ') AS w,
+  SELECT doc_id,
     CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
     CAST(('0x' || substr(md5({s_shard} || '|' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
          % {n_shards} AS INT) AS shard,

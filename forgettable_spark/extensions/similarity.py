@@ -18,7 +18,9 @@ Two paths:
 Determinism: dot products are sequential left-to-right double folds —
 bit-identical between Spark's ``aggregate`` and DuckDB's
 ``list_sum(list_transform(...))`` (verified in tests), so even float
-ranking hash-matches the oracle.
+ranking hash-matches the oracle. Each fold has ONE definition, its SQL
+text (``_*_expr_sql``); the public names wrap it in ``F.expr`` — one
+parse instead of a py4j round-trip per lambda node.
 """
 
 from __future__ import annotations
@@ -27,44 +29,21 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def as_double(vec: Column | str) -> Column:
-    """``transform(vec, x -> CAST(x AS DOUBLE))``. String input (a column
-    name or any SQL array expression) takes the rendered-SQL fast path —
-    ONE ``F.expr`` round-trip instead of ~10 of py4j lambda assembly;
-    parses to the same Catalyst tree (value-equality test-locked,
-    tests/test_extensions.py::test_rendered_sql_fast_paths)."""
-    if isinstance(vec, str):
-        return F.expr(_as_double_expr_sql(vec))
-    return F.transform(vec, lambda x: x.cast("double"))
+def as_double(vec: str) -> Column:
+    """``transform(vec, x -> CAST(x AS DOUBLE))`` over a column name or
+    any SQL array expression."""
+    return F.expr(_as_double_expr_sql(vec))
 
 
-def dot(a: Column | str, b: Column | str) -> Column:
-    """Sequential-fold dot product (DOUBLE) — order-stable, codegen-only.
-    Two string inputs take the rendered-SQL fast path (one ``F.expr``
-    instead of ~30 py4j round-trips; see :func:`as_double`)."""
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(_dot_expr_sql(a, b))
-    if isinstance(a, str):
-        a = F.col(a)
-    if isinstance(b, str):
-        b = F.col(b)
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+def dot(a: str, b: str) -> Column:
+    """Sequential-fold dot product (DOUBLE) of two SQL array expressions
+    — order-stable, codegen-only."""
+    return F.expr(_dot_expr_sql(a, b))
 
 
-def norm(a: Column | str) -> Column:
-    """``SQRT(dot(a, a))``; string input takes the rendered-SQL fast
-    path (see :func:`as_double`)."""
-    if isinstance(a, str):
-        return F.expr(_norm_expr_sql(a))
-    return F.sqrt(dot(a, a))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
+def norm(a: str) -> Column:
+    """``SQRT(dot(a, a))`` over a SQL array expression."""
+    return F.expr(_norm_expr_sql(a))
 
 
 def brute_force_topk(
@@ -112,9 +91,11 @@ def brute_force_topk(
 QUANT_MAX = 127
 
 
-def quantize_embedding(vec: Column) -> tuple[Column, Column]:
-    """Per-vector symmetric int8 quantization: ``(scale, q)`` with
-    ``scale = max|x| / 127`` and ``q_i = round(x_i / scale)``.
+def with_quantization(
+    df: DataFrame, vec_col: str, s_name: str, q_name: str
+) -> DataFrame:
+    """Per-vector symmetric int8 quantization: adds ``s_name`` (scale
+    ``max|x| / 127``) and ``q_name`` (codes ``round(x_i / scale)``).
 
     The 100 TB storage/shuffle story for the embedding column: int8
     vectors are 4× smaller than float32 (8× smaller than the double
@@ -122,45 +103,14 @@ def quantize_embedding(vec: Column) -> tuple[Column, Column]:
     — integer addition is associative, so quantized scores are immune to
     aggregation order, unlike float dots which the engine must fold
     sequentially to stay oracle-stable. An all-zero vector quantizes to
-    scale 0 with all-zero codes.
+    scale 0 with all-zero codes. Rounding is round-half-away-from-zero
+    on both engines (Spark ``ROUND`` = BigDecimal HALF_UP, DuckDB
+    ``round``), so codes are bit-identical cross-engine.
 
-    Rounding is round-half-away-from-zero on both engines (Spark
-    ``ROUND`` = BigDecimal HALF_UP, DuckDB ``round``), so codes are
-    bit-identical cross-engine.
-
-    PERFORMANCE HAZARD: the returned ``q`` expression INLINES ``scale``
-    inside its per-element lambda, and this engine evaluates
-    higher-order-function lambdas interpreted — so ``scale`` (itself an
-    ``array_max`` over a 64-element transform) is re-computed once PER
-    ELEMENT, O(dim²) per row. Fine for unit tests of the arithmetic;
-    production paths must use :func:`with_quantization`, which
-    materializes the scale as a COLUMN first (evaluated once per row)
-    and was measured 3× faster end-to-end on the bucketed ANN query.
-    """
-    v = as_double(vec)
-    scale = F.array_max(F.transform(v, lambda x: F.abs(x))) / F.lit(float(QUANT_MAX))
-    q = F.transform(
-        v,
-        lambda x: F.when(scale == 0.0, F.lit(0))
-        .otherwise(F.round(x / scale))
-        .cast("int"),
-    )
-    return scale, q
-
-
-def with_quantization(
-    df: DataFrame, vec_col: str, s_name: str, q_name: str
-) -> DataFrame:
-    """Add int8 quantization columns ``s_name`` (scale) and ``q_name``
-    (codes) — the two-step shape that keeps the scale a per-row COLUMN
-    reference inside the code lambda instead of an inlined O(dim)
-    subexpression per element (see :func:`quantize_embedding`). Same
-    values bit-for-bit; the oracle's ``sc → qc`` CTE chain mirrors this
-    structure exactly.
-
-    Rendered as two ``F.expr`` strings (r12 plan-construction cost —
-    same expressions, same when/round/cast chain, value-equality
-    test-locked)."""
+    Two steps: the scale is a per-row COLUMN referenced inside the code
+    lambda, not an O(dim) subexpression inlined per element (which this
+    engine's interpreted lambdas re-evaluate per element, O(dim²) per
+    row). The oracle's ``sc → qc`` CTE chain mirrors this structure."""
     v = _as_double_expr_sql(vec_col)
     df = df.withColumn(
         s_name,
@@ -178,21 +128,9 @@ def with_quantization(
     )
 
 
-def int_dot(a: Column | str, b: Column | str) -> Column:
-    """Exact BIGINT dot of two int-code arrays (order-independent).
-    Two string inputs take the rendered-SQL fast path (see
-    :func:`as_double`)."""
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(_int_dot_expr_sql(a, b))
-    if isinstance(a, str):
-        a = F.col(a)
-    if isinstance(b, str):
-        b = F.col(b)
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x * y).cast("bigint")),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
+def int_dot(a: str, b: str) -> Column:
+    """Exact BIGINT dot of two int-code arrays (order-independent)."""
+    return F.expr(_int_dot_expr_sql(a, b))
 
 
 #: Random-hyperplane (sign) LSH family size: 12 bits in 4 bands of 3.
@@ -248,26 +186,12 @@ def hyperplane_weights_py(i: int, dim: int) -> list[float]:
     ]
 
 
-def _hyperplane_weights(i: int, size: Column) -> Column:
-    """Hyperplane i as a formula, not literals (family note above) —
-    a fixed quasi-random pattern both engines restate as an expression,
-    so the oracle needs no dim-sized literal matrix per plane."""
-    c0, c1, c2 = _hyp_coeffs(i)
-    return F.transform(
-        F.sequence(F.lit(1), size),
-        lambda j: (
-            (F.lit(c2) + j * c1 + j * j * c0) % _HYP_MOD - _HYP_OFF
-        ).cast("double"),
-    )
-
-
 def _dot_expr_sql(a: str, b: str) -> str:
-    """Spark-SQL rendering of :func:`dot` over two SQL array expressions
-    — the identical sequential fold (same zero literal, same lambda
-    shape), parsed by the engine into the same Catalyst tree. Exists so
-    the literal-heavy builders below can be assembled as ONE ``F.expr``
-    string instead of thousands of py4j round-trips (measured: ~1.5 s of
-    driver-side socket chatter per semantic-family query build)."""
+    """The sequential dot fold over two SQL array expressions, as SQL
+    text — so the literal-heavy builders below assemble as ONE
+    ``F.expr`` string instead of thousands of py4j round-trips
+    (measured: ~1.5 s of driver-side socket chatter per semantic-family
+    query build)."""
     return (
         f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
         "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
@@ -275,20 +199,17 @@ def _dot_expr_sql(a: str, b: str) -> str:
 
 
 def _as_double_expr_sql(v: str) -> str:
-    """Spark-SQL rendering of :func:`as_double` over a SQL array
-    expression."""
+    """``v``'s elements cast to DOUBLE, as SQL text."""
     return f"transform({v}, x -> CAST(x AS DOUBLE))"
 
 
 def _norm_expr_sql(v: str) -> str:
-    """Spark-SQL rendering of :func:`norm` over a SQL array expression —
-    the same ``SQRT`` over the same sequential dot fold."""
+    """``SQRT`` of the sequential self-dot fold, as SQL text."""
     return f"SQRT({_dot_expr_sql(v, v)})"
 
 
 def _int_dot_expr_sql(a: str, b: str) -> str:
-    """Spark-SQL rendering of :func:`int_dot` over two SQL array
-    expressions — same BIGINT casts, same fold shape."""
+    """The BIGINT dot fold over two int-code SQL arrays, as SQL text."""
     return (
         f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x * y AS BIGINT)), "
         "CAST(0 AS BIGINT), (acc, x) -> acc + x)"
@@ -296,8 +217,9 @@ def _int_dot_expr_sql(a: str, b: str) -> str:
 
 
 def _hyperplane_weights_expr_sql(i: int, size_sql: str) -> str:
-    """Spark-SQL rendering of :func:`_hyperplane_weights` — the same
-    quadratic congruential formula, same arithmetic order and types."""
+    """Hyperplane i over components ``1..size`` as a formula, not
+    literals (family note above) — both engines restate the expression,
+    so the oracle needs no dim-sized literal matrix per plane."""
     c0, c1, c2 = _hyp_coeffs(i)
     return (
         f"transform(sequence(1, {size_sql}), j -> "
@@ -307,9 +229,9 @@ def _hyperplane_weights_expr_sql(i: int, size_sql: str) -> str:
 
 
 def signature_cell_expr_sql(vec_sql: str, n_bits: int, bit_offset: int = 0) -> str:
-    """Spark-SQL rendering of :func:`signature_cell` over a raw SQL
-    array expression (any element type — the as_double wrap is part of
-    the rendering, as in the Column path)."""
+    """:func:`signature_cell` as SQL text over a raw SQL array
+    expression (any element type — the as_double wrap is part of the
+    rendering)."""
     v = _as_double_expr_sql(vec_sql)
     size_sql = f"size({v})"
     terms = ["CAST(0 AS BIGINT)"]
@@ -337,33 +259,23 @@ def hyperplane_bit_sql(i: int, vec_expr: str = "e") -> str:
     )
 
 
-def hyperplane_signature(vec: Column | str) -> Column:
+def hyperplane_signature(vec: str) -> Column:
     """Sign-LSH signature: bit i = [dot(v, h_i) >= 0]. For unit-ish
     vectors, P[bit_a = bit_b] = 1 − θ(a,b)/π — the classic cosine
     sketch. Row-local fold per bit; deterministic sign at exactly 0
-    because the dot is the engines' bit-identical sequential fold.
-    String input takes the rendered-SQL fast path (one ``F.expr``; see
-    :func:`signature_cell`)."""
-    if isinstance(vec, str):
-        v = _as_double_expr_sql(vec)
-        size_sql = f"size({v})"
-        bits = ", ".join(
-            f"(CASE WHEN {_dot_expr_sql(v, _hyperplane_weights_expr_sql(i, size_sql))}"
-            " >= 0 THEN 1 ELSE 0 END)"
-            for i in range(HYPERPLANE_BITS)
-        )
-        return F.expr(f"array({bits})")
-    v = as_double(vec)
-    size = F.size(v)
-    bits = [
-        F.when(dot(v, _hyperplane_weights(i, size)) >= 0, F.lit(1)).otherwise(F.lit(0))
+    because the dot is the engines' bit-identical sequential fold."""
+    v = _as_double_expr_sql(vec)
+    size_sql = f"size({v})"
+    bits = ", ".join(
+        f"(CASE WHEN {_dot_expr_sql(v, _hyperplane_weights_expr_sql(i, size_sql))}"
+        " >= 0 THEN 1 ELSE 0 END)"
         for i in range(HYPERPLANE_BITS)
-    ]
-    return F.array(*bits)
+    )
+    return F.expr(f"array({bits})")
 
 
 def signature_cell(
-    vec: Column | str, n_bits: int = HYPERPLANE_BITS, bit_offset: int = 0
+    vec: str, n_bits: int = HYPERPLANE_BITS, bit_offset: int = 0
 ) -> Column:
     """Sign-LSH coarse cell id: the ``n_bits``-bit hyperplane signature
     packed into one BIGINT. ``bit_offset`` shifts into a DISJOINT slice
@@ -385,20 +297,7 @@ def signature_cell(
     sequential dot fold; like the md5 token hash, a deployment without
     cross-engine verification would swap in a native vectorized dot.
     """
-    if isinstance(vec, str):
-        # Raw-SQL fast path (r12): assemble the whole fold as ONE
-        # F.expr — one py4j round-trip instead of ~40 per bit; parses
-        # to the same Catalyst tree as the Column form below.
-        return F.expr(signature_cell_expr_sql(vec, n_bits, bit_offset))
-    v = as_double(vec)
-    size = F.size(v)
-    cell = F.lit(0).cast("bigint")
-    for i in range(n_bits):
-        cell = cell + F.when(
-            dot(v, _hyperplane_weights(bit_offset + i, size)) >= 0,
-            F.lit(1 << i).cast("bigint"),
-        ).otherwise(F.lit(0).cast("bigint"))
-    return cell
+    return F.expr(signature_cell_expr_sql(vec, n_bits, bit_offset))
 
 
 def _sample_cells_to_cap(
@@ -419,6 +318,27 @@ def _sample_cells_to_cap(
         .filter(F.col("_rn") <= cap)
         .drop("_rn")
     )
+
+
+def _cell_cosine_topk(q: DataFrame, c: DataFrame, k: int) -> DataFrame:
+    """The cell-join cosine top-k every IVF search shares: queries
+    ``(query_id, _qv, _qn, cell)`` join corpus rows ``(neighbor_id,
+    _cv, cell, …carried)`` on ``cell``, self-matches drop, and each
+    query keeps its ``k`` best by cosine (ties → lower neighbor_id).
+    Returns the joined rows plus ``cosine`` and ``rank``. The caller
+    assigns cells, explodes probes and caps; the corpus norm is added
+    here, once per corpus row before the join."""
+    c = c.withColumn("_cn", norm("_cv"))
+    scored = (
+        q.join(c, "cell")
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .withColumn(
+            "cosine",
+            dot("_qv", "_cv") / (F.col("_qn") * F.col("_cn")),
+        )
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 def signature_ann_topk(
@@ -491,23 +411,11 @@ def signature_ann_topk(
                 )
             ),
         )
-    c = c.withColumn("_cn", norm("_cv"))
-    scored = (
-        q.join(c, "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine",
-            dot("_qv", "_cv") / (F.col("_qn") * F.col("_cn")),
-        )
-    )
     # a query probing several cells can meet the same neighbor once per
     # cell only at n_flip>0 with duplicate cells — impossible here (the
     # flip set is distinct by construction), so no distinct needed
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
+    return _cell_cosine_topk(q, c, k).select(
+        "query_id", "neighbor_id", "cosine", "rank"
     )
 
 

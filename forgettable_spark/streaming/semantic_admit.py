@@ -558,9 +558,7 @@ def semantic_admit_batch(
                 tc = tc.unionByName(
                     batch.select(
                         F.explode(
-                            cb._probe_cells(
-                                F.col("cell"), probe_n_fine, probe_flips
-                            )
+                            cb._probe_cells("cell", probe_n_fine, probe_flips)
                         ).alias("cell")
                     )
                 )

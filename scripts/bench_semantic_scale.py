@@ -27,7 +27,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from forgettable_spark.extensions import codebook as cb
 from forgettable_spark.extensions.similarity import as_double
@@ -104,7 +103,7 @@ def main() -> None:
             t_steady = time.perf_counter() - t0
             # occupied cells via the assignment expression alone (cheap
             # relative to the dedup; excluded from the timings above)
-            a = emb.select(as_double(F.col("embedding")).alias("_v"))
+            a = emb.select(as_double("embedding").alias("_v"))
             if bands:
                 a = cb.with_banded_cells(a, coarse, fines, bands, bits)
             elif bits:

@@ -90,3 +90,21 @@ def test_deleted_queries_stay_unregistered():
     assert deleted, "ROTATIONS.json has an empty deleted ledger"
     back = deleted & (set(entrypoints.queries()) | set(entrypoints.secondary_queries()))
     assert back == set(), f"deleted queries registered again: {sorted(back)}"
+
+
+def test_parity_rows_name_no_deleted_query():
+    """PARITY.md maps operators to the queries that exercise them; a
+    table row naming a query from ROTATIONS.json's ``deleted`` ledger
+    claims coverage that no longer exists."""
+    with open(ROTATIONS_JSON) as fh:
+        deleted = json.load(fh)["deleted"]
+    parity_md = os.path.join(os.path.dirname(__file__), os.pardir, "PARITY.md")
+    with open(parity_md) as fh:
+        rows = [line for line in fh if line.startswith("|")]
+    stale = {
+        name: row.split("|")[1].strip()
+        for row in rows
+        for name in deleted
+        if re.search(rf"\b{name}\b", row)
+    }
+    assert stale == {}, f"PARITY.md rows name deleted queries: {stale}"

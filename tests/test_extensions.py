@@ -656,18 +656,17 @@ def test_quantized_ranking_tracks_exact(spark):
 
 
 def test_quantize_embedding_edge_cases(spark):
-    """All-zero vectors quantize to scale 0 / zero codes (no NULL/inf);
-    codes are bounded by the symmetric int8 range."""
-    from pyspark.sql import functions as F
-
-    from forgettable_spark.extensions.similarity import QUANT_MAX, quantize_embedding
+    """``with_quantization``: all-zero vectors quantize to scale 0 /
+    zero codes (no NULL/inf); codes are bounded by the symmetric int8
+    range."""
+    from forgettable_spark.extensions.similarity import QUANT_MAX, with_quantization
 
     emb = spark.createDataFrame(
         [(0, [0.0, 0.0, 0.0]), (1, [1.0, -2.0, 0.5])],
         "vec_id BIGINT, embedding ARRAY<DOUBLE>",
     )
-    s, q = quantize_embedding(F.col("embedding"))
-    rows = {r["vec_id"]: r for r in emb.select("vec_id", s.alias("s"), q.alias("q")).collect()}
+    quantized = with_quantization(emb, "embedding", "s", "q")
+    rows = {r["vec_id"]: r for r in quantized.select("vec_id", "s", "q").collect()}
     assert rows[0]["s"] == 0.0 and rows[0]["q"] == [0, 0, 0]
     assert rows[1]["q"][1] == -QUANT_MAX  # the max-|x| component saturates
     assert all(abs(c) <= QUANT_MAX for r in rows.values() for c in r["q"])
@@ -702,11 +701,11 @@ def test_sample_per_group_budget_bounds_and_floor(spark):
 
 
 def test_rendered_sql_fast_paths(emb):
-    """The r12 string fast paths of as_double/dot/norm/int_dot and the
-    rendered with_quantization are bit-identical to the Column forms
-    they replaced (same expressions, parsed from SQL instead of built
-    through py4j) — the plan-construction optimization must not move a
-    single bit anywhere in the ANN/semantic family."""
+    """The rendered SQL of as_double/norm/int_dot and with_quantization
+    is bit-identical to Column-built references written here (same
+    expressions, parsed from SQL instead of built through py4j) — the
+    plan-construction optimization must not move a single bit anywhere
+    in the ANN/semantic family."""
     col_ad = F.transform(F.col("embedding"), lambda x: x.cast("double"))
 
     def col_dot(a, b):
@@ -768,17 +767,27 @@ def test_rendered_sql_fast_paths(emb):
 
 
 def test_probe_cells_rendered_matches_column_form(spark):
-    """r13: _probe_cells' string fast path (one F.expr parse) is
-    bit-identical to the Column loop it replaced — including composite
-    ids past 2^53, where the decimal(38,0) division is the load-bearing
-    piece (ADVICE r11)."""
+    """_probe_cells' rendered SQL (one F.expr parse) is bit-identical to
+    a Column-built reference of the same closed form — including
+    composite ids past 2^53, where the decimal(38,0) division is the
+    load-bearing piece (ADVICE r11)."""
     from forgettable_spark.extensions.codebook import _probe_cells
+
+    def col_probe_cells(cell, n_fine, n_flip):
+        sig = (cell.cast("decimal(38,0)") / F.lit(n_fine)).cast("bigint")
+        tl = cell % F.lit(n_fine)
+        return F.array(
+            *[
+                (sig.bitwiseXOR(F.lit(1 << i)) * F.lit(n_fine) + tl).cast("bigint")
+                for i in range(n_flip)
+            ]
+        )
 
     cells = [0, 1, 7, 12, 97, (1 << 53) + 11, (1 << 61) + 5]
     df = spark.createDataFrame([(c,) for c in cells], "cell long")
     for n_fine, n_flip in ((8, 1), (8, 3), (3, 4), (13, 6)):
         out = df.select(
             _probe_cells("cell", n_fine, n_flip).alias("s"),
-            _probe_cells(F.col("cell"), n_fine, n_flip).alias("c"),
+            col_probe_cells(F.col("cell"), n_fine, n_flip).alias("c"),
         )
         assert out.filter(F.col("s") != F.col("c")).count() == 0

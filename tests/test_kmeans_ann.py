@@ -114,13 +114,13 @@ def test_trained_codebook_beats_fixed_quantizer_on_clustered_data(spark):
     # than a modest multiple of the mean occupancy, while the signature
     # concentrates the same corpus into a handful of hot cells.
     assigned = corpus.select(
-        cb.centroid_cell(similarity.as_double(F.col("embedding")), cents).alias("cell")
+        cb.centroid_cell(similarity._as_double_expr_sql("embedding"), cents).alias("cell")
     )
     sizes = [r["n"] for r in assigned.groupBy("cell").agg(F.count("*").alias("n")).collect()]
     n_rows = corpus.count()
     assert max(sizes) <= 3 * (n_rows / len(cents))
     sig_cells = corpus.select(
-        similarity.signature_cell(similarity.as_double(F.col("embedding")), 6).alias("cell")
+        similarity.signature_cell("embedding", 6).alias("cell")
     )
     sig_sizes = [
         r["n"] for r in sig_cells.groupBy("cell").agg(F.count("*").alias("n")).collect()
@@ -140,7 +140,7 @@ def test_balanced_cells_on_real_corpus(spark):
     emb = load_table(spark, SF_ORACLE, "embeddings")
     cents = ext._codebook_for(spark, SF_ORACLE, ext.KMEANS_CELLS)
     assigned = emb.select(
-        cb.centroid_cell(similarity.as_double(F.col("embedding")), cents).alias("cell")
+        cb.centroid_cell(similarity._as_double_expr_sql("embedding"), cents).alias("cell")
     )
     sizes = [r["n"] for r in assigned.groupBy("cell").agg(F.count("*").alias("n")).collect()]
     assert len(sizes) == ext.KMEANS_CELLS  # no empty cells
@@ -290,7 +290,7 @@ def test_knn_label_multi_slices_match_standalone_operator(spark):
         k=ext.KNN_K,
         label_cols={
             "column": F.col("label"),
-            "geo": ext._geo_label(F.col("embedding")),
+            "geo": ext._geo_label("embedding"),
         },
         n_probes=ext.KMEANS_PROBES,
         max_bucket_size=ext.KMEANS_CAP,
@@ -312,7 +312,7 @@ def test_knn_label_multi_slices_match_standalone_operator(spark):
             ).collect(),
         )
     )
-    geo = emb.withColumn("_geo", ext._geo_label(F.col("embedding")))
+    geo = emb.withColumn("_geo", ext._geo_label("embedding"))
     want_geo = sorted(
         map(
             tuple,

@@ -187,7 +187,7 @@ def test_two_level_global_cell_ids_are_offset_consistent(spark):
     total = offs[-1] + len(fines[-1])
     cells = (
         with_two_level_cell(
-            emb.select(as_double(F.col("embedding")).alias("_v")), coarse, fines
+            emb.select(as_double("embedding").alias("_v")), coarse, fines
         )
         .select("cell")
         .distinct()
@@ -550,7 +550,7 @@ def test_probe_cells_prefix_composition_and_bigint_exactness(spark):
     assert cell > 2**53  # past double's exact-integer range
     got = (
         spark.createDataFrame([(cell,)], "cell long")
-        .select(_probe_cells(F.col("cell"), n_fine, 3).alias("p"))
+        .select(_probe_cells("cell", n_fine, 3).alias("p"))
         .collect()[0]["p"]
     )
     # prefix bits 0..2 only, in order; exact recomposition past 2^53
@@ -559,7 +559,7 @@ def test_probe_cells_prefix_composition_and_bigint_exactness(spark):
     small = 3 * n_fine + 2
     got_small = (
         spark.createDataFrame([(small,)], "cell long")
-        .select(_probe_cells(F.col("cell"), n_fine, 2).alias("p"))
+        .select(_probe_cells("cell", n_fine, 2).alias("p"))
         .collect()[0]["p"]
     )
     assert got_small == [(3 ^ 1) * n_fine + 2, (3 ^ 2) * n_fine + 2]

@@ -202,3 +202,59 @@ def test_no_pickled_driver_frames():
     assert _pickled_frame_calls(
         "def f(spark):\n    rows = [(1,)]\n    return spark.createDataFrame(rows, 'a INT')"
     ) == [3]
+
+
+def _column_fold_twins(source: str) -> list[int]:
+    """Line numbers in ``source`` that build a vector fold as a Column
+    tree: a call of ``F.transform``, ``F.aggregate`` or ``F.zip_with``,
+    or a parameter annotated ``Column | str`` (either order)."""
+    import ast
+
+    tree = ast.parse(source)
+    found = set()
+    for n in ast.walk(tree):
+        if (
+            isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and isinstance(n.func.value, ast.Name)
+            and n.func.value.id == "F"
+            and n.func.attr in ("transform", "aggregate", "zip_with")
+        ):
+            found.add(n.lineno)
+        if isinstance(n, ast.arg) and n.annotation is not None:
+            ann = n.annotation
+            if isinstance(ann, ast.Constant) and isinstance(ann.value, str):
+                ann = ast.parse(ann.value, mode="eval").body
+            if (
+                isinstance(ann, ast.BinOp)
+                and isinstance(ann.op, ast.BitOr)
+                and {getattr(ann.left, "id", None), getattr(ann.right, "id", None)}
+                == {"Column", "str"}
+            ):
+                found.add(n.lineno)
+    return sorted(found)
+
+
+def test_vector_folds_have_one_sql_definition():
+    """Each vector fold (as_double, dot, norm, int_dot, the signature and
+    centroid cells, the probe cells) is defined once, as SQL text parsed
+    by ``F.expr``. A Column-loop twin beside it costs a py4j round trip
+    per lambda node to build and can drift from the text the tests
+    check."""
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1] / "forgettable_spark"
+    hits = {
+        name: lines
+        for name in ("extensions/similarity.py", "extensions/codebook.py")
+        if (lines := _column_fold_twins((root / name).read_text()))
+    }
+    assert not hits, hits
+    # The scan sees each spelling of a twin.
+    assert _column_fold_twins("F.transform(v, lambda x: x)") == [1]
+    assert _column_fold_twins(
+        "def f(a):\n    return F.aggregate(F.zip_with(a, a, g), z, h)"
+    ) == [2]
+    assert _column_fold_twins("def f(v: Column | str): pass") == [1]
+    assert _column_fold_twins("def f(v: 'str | Column'): pass") == [1]
+    assert _column_fold_twins("def f(v: str): return F.expr(v)") == []
